@@ -1,7 +1,11 @@
 package graft.operators
 
+import graft.functions.ArgMaxRow
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSet, Cast, CreateStruct, EqualTo, Expression, GetStructField, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.DatasetShim
 
 /** Latest-version-wins replica semantics: the Spark-native equivalent of
   * ClickHouse `ReplacingMergeTree(_ver)` + `_deleted` soft deletes — the
@@ -41,18 +45,8 @@ object ReplicaTable {
     * explicit API on the same data must pass the SAME list, or tied
     * (key, ver) rows can resolve differently between the two paths.
     */
-  def latest(df: DataFrame, keys: Seq[String], ver: String, tieBreak: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.graftshim.ColumnShim
-    val payload = struct(df.columns.map(col): _*)
-    val ordering = struct((ver +: tieBreak).map(col): _*)
-    val argMax = ColumnShim.column(
-      graft.functions.ArgMaxRow(
-        ColumnShim.expression(ordering),
-        ColumnShim.expression(payload)).toAggregateExpression())
-    df.groupBy(keys.map(col): _*)
-      .agg(argMax.as("_row"))
-      .select(df.columns.map(c => col(s"_row.$c")): _*)
-  }
+  def latest(df: DataFrame, keys: Seq[String], ver: String, tieBreak: Seq[String] = Nil): DataFrame =
+    read(df, keys, ver, tieBreak, deleted = None)
 
   /** Read view: latest version per key, tombstones dropped — what a
     * ClickHouse reader sees after `OPTIMIZE FINAL` + `WHERE _deleted = 0`.
@@ -63,12 +57,67 @@ object ReplicaTable {
       ver: String = "_ver",
       deleted: String = "_deleted",
       tieBreak: Seq[String] = Nil): DataFrame =
-    latest(df, keys, ver, tieBreak).filter(col(deleted) === 0)
+    read(df, keys, ver, tieBreak, Some(deleted))
+
+  /** [[latestPlan]] over `df`'s analyzed plan, columns named as in `df`. */
+  private def read(df: DataFrame, keys: Seq[String], ver: String,
+      tieBreak: Seq[String], deleted: Option[String]): DataFrame = {
+    val child = df.queryExecution.analyzed
+    val resolver = df.sparkSession.sessionState.conf.resolver
+    def attr(name: String): Attribute =
+      child.output.find(a => resolver(a.name, name)).getOrElse(
+        throw new IllegalArgumentException(
+          s"column '$name' is not among ${child.output.map(_.name).mkString(", ")}"))
+    DatasetShim.ofRows(df.sparkSession,
+      latestPlan(child, keys.map(attr), attr(ver), tieBreak.map(attr), deleted.map(attr)))
+  }
+
+  /** The latest-version plan over `child` — the one shape every replica
+    * read is planned with, explicit ([[latest]]/[[current]]) or
+    * transparent ([[graft.plans.ReplicaFinalRule]]):
+    *
+    *  - grouped by `keys`, which pass through the aggregate as THEMSELVES:
+    *    a key predicate above the read then references only grouping
+    *    attributes, so the optimizer pushes it through the aggregate into
+    *    the scan — `WHERE pk = x` prunes files instead of merging the
+    *    whole table;
+    *  - `ArgMaxRow(struct(ver, tieBreak...), struct(non-key columns))`:
+    *    the grouping key already travels with every buffer row, and
+    *    nested pruning can't reach inside a TypedImperativeAggregate's
+    *    payload, so duplicating wide keys there would be pure buffer and
+    *    spill overhead in the engine's hottest operator;
+    *  - the winner unwraps in `child`'s column order, each column under
+    *    its `child` attribute id, so references above a replaced scan
+    *    (self-joins included) stay valid;
+    *  - with `deleted`, rows whose flag is not 0 drop out ([[current]]).
+    *    A flag doubling as a key is degenerate but legal; it rides the
+    *    grouping output then.
+    */
+  def latestPlan(
+      child: LogicalPlan,
+      keys: Seq[Attribute],
+      ver: Attribute,
+      tieBreak: Seq[Attribute],
+      deleted: Option[Attribute]): LogicalPlan = {
+    val keySet = AttributeSet(keys)
+    val payload = child.output.filterNot(keySet.contains)
+    val row = Alias(ArgMaxRow(CreateStruct(ver +: tieBreak), CreateStruct(payload))
+      .toAggregateExpression(), "_row")()
+    def value(a: Attribute): Expression =
+      if (keySet.contains(a)) a
+      else GetStructField(row.toAttribute, payload.indexWhere(_.exprId == a.exprId), Some(a.name))
+    val agg = Aggregate(keys, keys :+ row, child)
+    val live = deleted.fold[LogicalPlan](agg)(d =>
+      Filter(EqualTo(value(d), Cast(Literal(0), d.dataType)), agg))
+    Project(child.output.map(a =>
+      if (keySet.contains(a)) a
+      else Alias(value(a), a.name)(exprId = a.exprId, qualifier = a.qualifier)), live)
+  }
 
   /** Merge a change batch into a base snapshot. Both sides append-union and
     * collapse; idempotent (replaying `changes` is a no-op) — the engine's
     * version of the reference's at-least-once + idempotent-sink contract
-    * (SURVEY §2.10). Used by the streaming foreachBatch sink.
+    * (SURVEY §2.10).
     */
   def applyChanges(
       base: DataFrame,
@@ -78,17 +127,6 @@ object ReplicaTable {
       tieBreak: Seq[String] = Nil): DataFrame =
     latest(base.unionByName(changes), keys, ver, tieBreak)
 
-  /** Materialize the replica's storage from its declarative config — the
-    * engine's DDL path (reference: the literal `table` DDL block in each
-    * tables/<name>.yaml, executed against ClickHouse). Spark-natively that
-    * means: target schema from the config's cast chain, plus the
-    * `_ver`/`_deleted` bookkeeping columns, as a managed parquet table
-    * BUCKETED on the primary key — so every [[latest]]/[[current]] read
-    * over it plans with zero exchanges (see BucketingSpec) and appends
-    * from any number of writers co-locate by key. Bucket count is a
-    * capacity decision (≈ table bytes / 128 MB at target scale), not the
-    * session's shuffle-partition setting.
-    */
   /** Drop `name` from the catalog AND clear its storage location.
     * In-memory catalogs forget tables across sessions while their
     * directories survive, so a bare `DROP TABLE IF EXISTS` in a fresh
@@ -113,6 +151,17 @@ object ReplicaTable {
     if (fs.exists(loc)) fs.delete(loc, true)
   }
 
+  /** Materialize the replica's storage from its declarative config — the
+    * engine's DDL path (reference: the literal `table` DDL block in each
+    * tables/<name>.yaml, executed against ClickHouse). Spark-natively that
+    * means: target schema from the config's cast chain, plus the
+    * `_ver`/`_deleted` bookkeeping columns, as a managed parquet table
+    * BUCKETED on the primary key — so every [[latest]]/[[current]] read
+    * over it plans with zero exchanges (see BucketingSpec) and appends
+    * from any number of writers co-locate by key. Bucket count is a
+    * capacity decision (≈ table bytes / 128 MB at target scale), not the
+    * session's shuffle-partition setting.
+    */
   def createTable(
       spark: org.apache.spark.sql.SparkSession,
       config: graft.config.TableConfig,

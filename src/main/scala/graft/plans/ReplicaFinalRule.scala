@@ -1,9 +1,9 @@
 package graft.plans
 
-import graft.functions.ArgMaxRow
+import graft.operators.ReplicaTable
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution.datasources.LogicalRelation
@@ -25,12 +25,12 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   * reader of the catalog, exactly like a table engine would.
   *
   * Scale/physical notes:
-  *  - The injected aggregate is [[graft.functions.ArgMaxRow]] — the same
-  *    ObjectHashAggregate-friendly argmax the explicit
-  *    [[graft.operators.ReplicaTable.latest]] API uses: one shuffle on
-  *    the key at worst, map-side partial aggregation, and ZERO exchanges
-  *    when the table is bucketed on its primary key (which
-  *    `createTable` guarantees) — see ReplicaFinalRuleSpec.
+  *  - The injected plan is [[graft.operators.ReplicaTable.latestPlan]],
+  *    the same one the explicit [[graft.operators.ReplicaTable.current]]
+  *    API builds: one shuffle on the key at worst, map-side partial
+  *    aggregation, and ZERO exchanges when the table is bucketed on its
+  *    primary key (which `createTable` guarantees) — see
+  *    ReplicaFinalRuleSpec.
   *  - The rewrite happens at analysis (post-hoc resolution), so the full
   *    optimizer — column pruning through the payload struct, filter
   *    pushdown into the scan, AQE — runs over the rewritten plan.
@@ -40,9 +40,9 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   *    versioned rows (storage stays append-only).
   *
   * Attribute identity: the replacement plan re-exposes the ORIGINAL
-  * relation output attribute ids (via the trailing alias projection), so
-  * references anywhere above the scan — including self-joins, which the
-  * analyzer de-duplicates before this rule runs — stay valid.
+  * relation output attribute ids, so references anywhere above the scan
+  * — including self-joins, which the analyzer de-duplicates before this
+  * rule runs — stay valid.
   */
 object ReplicaFinalRule {
   /** Comma-separated primary-key column list; presence marks the table. */
@@ -92,49 +92,10 @@ case class ReplicaFinalRule(spark: SparkSession) extends Rule[LogicalPlan] {
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).map(attr)
 
     // the scan copy that lives under the injected aggregate; tagged so a
-    // later pass over the same (sub)plan leaves it alone
+    // later pass over the same (sub)plan leaves it alone. It keeps the
+    // relation's attribute ids, which the built plan re-exposes
     val inner = rel.copy()
     inner.setTagValue(SkipTag, ())
-
-    // arg_max_row(struct(ver, tieBreaks...), struct(non-key cols))
-    // grouped by the primary key — ReplicaTable.latest's semantics,
-    // built with resolved expressions. Two deliberate shapes:
-    //  - The GROUPING KEYS pass through the aggregate as their ORIGINAL
-    //    attributes (not struct unwraps): a key predicate above the
-    //    rewrite then references only grouping attributes, so the
-    //    optimizer pushes it through the Aggregate into the scan — the
-    //    point lookup `WHERE pk = x` prunes files instead of
-    //    aggregating the table.
-    //  - The payload struct carries ONLY the non-key columns: the
-    //    grouping key already travels with every buffer row, and nested
-    //    pruning can't reach inside a TypedImperativeAggregate's
-    //    payload — duplicating wide/string keys there would be pure
-    //    buffer/spill overhead in the engine's hottest operator.
-    val keyIds = keys.map(_.exprId).toSet
-    val payloadCols = out.filterNot(a => keyIds.contains(a.exprId))
-    val payload = CreateStruct(payloadCols)
-    val ordering = CreateStruct(ver +: tieBreaks)
-    val rowAlias = Alias(
-      ArgMaxRow(ordering, payload).toAggregateExpression(), "_row")()
-    val agg = Aggregate(keys, keys :+ rowAlias, inner)
-
-    // unwrap the winner struct; field i is payloadCols(i) by
-    // CreateStruct order
-    val rowRef = rowAlias.toAttribute
-    def field(a: Attribute): Expression = {
-      val i = payloadCols.indexWhere(_.exprId == a.exprId)
-      GetStructField(rowRef, i, Some(a.name))
-    }
-    // a soft-delete flag doubling as a primary key is degenerate but
-    // legal to the property format — it rides the grouping output then
-    val keep = Filter(
-      EqualTo(if (keyIds.contains(deleted.exprId)) deleted else field(deleted),
-        Cast(Literal(0), deleted.dataType)), agg)
-    Project(out.map { a =>
-      // key columns ride through as themselves; payload columns unwrap
-      // from the winner struct under their original ids
-      if (keyIds.contains(a.exprId)) a
-      else Alias(field(a), a.name)(exprId = a.exprId, qualifier = a.qualifier)
-    }, keep)
+    ReplicaTable.latestPlan(inner, keys, ver, tieBreaks, Some(deleted))
   }
 }

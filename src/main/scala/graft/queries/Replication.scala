@@ -388,14 +388,16 @@ object Replication {
       .select(col("user_id").as("u"), col("value").as("v"))
 
     writeChunk(cutA, cutB - 1)
-    def wal = spark.readStream.format("graft.sources.WalSource").load(walDir.toString)
-    val r = graft.streaming.Sync.resync(spark, collection, wal, walDir.toString,
+    val colDir = base.resolve("collection").toString
+    collection.write.parquet(colDir)
+    val source = graft.sources.FileCollectionSource(colDir, walDir.toString)
+    val r = graft.streaming.Sync.resync(spark, source,
       cfg, payloadSchema, tableDir, ckpt, collectionIds = Seq("c1"), clock = clock)
     r.query.awaitTermination()
     require(r.initialTick == cutB - 1, s"captured tick ${r.initialTick} != ${cutB - 1}")
 
     writeChunk(cutB, n - 1)
-    val q2 = graft.streaming.CdcStream.startReplication(wal, cfg, payloadSchema,
+    val q2 = graft.streaming.CdcStream.startReplication(source.changes(spark), cfg, payloadSchema,
       tableDir, ckpt, collectionIds = Seq("c1"),
       initialTick = Some(r.initialTick), clock = clock)
     q2.awaitTermination()

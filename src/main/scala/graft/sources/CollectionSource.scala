@@ -20,7 +20,7 @@ trait CollectionSource {
 
   /** Streaming envelope frame of the collection's change log, in the
     * `{tick, type, db, cuid, tid, data, offset}` contract
-    * ([[graft.streaming.CdcStream.sourceSchema]]).
+    * ([[WalSource.schema]]).
     */
   def changes(spark: SparkSession): DataFrame
 

@@ -53,28 +53,11 @@ object CdcStream {
     if (ttl.isDefined) org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
     else org.apache.spark.sql.streaming.TimeMode.None()
 
-  /** File-based WAL source: a directory of JSON change-log files with the
-    * envelope shape `{offset, tick, type, cuid, db, tid, data}` (data is a
-    * JSON string). This is the test/fixture transport; [[kafkaSource]] is
-    * the production one. `maxFilesPerTrigger` bounds micro-batch size (the
-    * analogue of the reference's poll `max_records`, settings.yaml:42).
-    */
-  def walFileSource(spark: SparkSession, dir: String, maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val r = spark.readStream.schema(sourceSchema)
-    maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
-    r.json(dir)
-  }
-
-  /** Envelope + offset: what either transport must deliver downstream. */
-  val sourceSchema: StructType =
-    new StructType(Envelope.walSchema.fields)
-      .add("offset", org.apache.spark.sql.types.LongType)
-
   /** Kafka WAL source (production transport). One topic per collection,
     * value = orjson WAL entry, key = doc _key — the reference's topology
     * (replication/replicator/sync.py:62-67). Not exercised by tests (no
     * broker in the environment) but the column contract matches
-    * [[walFileSource]], so the pipeline is transport-agnostic.
+    * [[graft.sources.WalSource]]'s, so the pipeline is transport-agnostic.
     */
   def kafkaSource(spark: SparkSession, bootstrap: String, topic: String): DataFrame =
     spark.readStream

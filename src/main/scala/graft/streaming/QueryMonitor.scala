@@ -81,18 +81,21 @@ final class QueryMonitor(
           // check above completely). The pre-filter WAL offsets are dense
           // and unique by the server contract, so fewer observed offsets
           // than the span covers means the server skipped ticks inside
-          // this batch. Reported with RANGE semantics (batch min, batch
+          // this batch. Reported with RANGE semantics (span start, batch
           // max) and its own kind — without the kind a consumer cannot
           // tell it from a boundary gap whose arguments mean (prev, next),
           // and one batch can legitimately report both (ADVICE r13).
-          // (A redelivered duplicate inflates the count and could mask an
-          // equal-sized skip in the SAME batch — observe() forbids exact
-          // DISTINCT aggregates and approx_count_distinct's HLL error
+          // The span starts past the previous batch's max: an offset at or
+          // below it is a redelivery, and stretching the span back over
+          // already-delivered offsets would report a gap that is not there.
+          // (A redelivered duplicate still inflates the count and could
+          // mask an equal-sized skip in the SAME batch — observe() forbids
+          // exact DISTINCT aggregates and approx_count_distinct's HLL error
           // would false-fire on dense batches, so the boundary check
           // remains the witness for any skip that crosses batches.)
           cnt.map(row.getLong).filter(_ > 0).foreach { n =>
-            val span = maxOff - minOff + 1
-            if (n < span) onGap(name, minOff, maxOff, QueryMonitor.DensityGap)
+            val lo = if (prev == Long.MinValue) minOff else math.max(minOff, prev + 1)
+            if (n < maxOff - lo + 1) onGap(name, lo, maxOff, QueryMonitor.DensityGap)
           }
           lastMaxOffset.merge(name, maxOff, (a: Long, b: Long) => math.max(a, b))
         }
@@ -109,9 +112,11 @@ object QueryMonitor {
   /** Which witness reported a gap — the two carry different argument
     * semantics: a [[BoundaryGap]]'s (lo, hi) are (previous batch's max
     * offset, this batch's min) and the skip lies strictly between them;
-    * a [[DensityGap]]'s are (batch min, batch max) and the skip lies
+    * a [[DensityGap]]'s are (span start, batch max) and the skip lies
     * somewhere inside that span (the count of observed offsets fell
-    * short of covering it).
+    * short of covering it). The span starts at the batch min, or just
+    * past the previous batch's max when the batch redelivers offsets
+    * at or below it.
     */
   sealed trait GapKind
   case object BoundaryGap extends GapKind

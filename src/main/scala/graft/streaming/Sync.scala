@@ -102,16 +102,15 @@ object Sync {
   }
 
   /** Full resync of one collection: capture tick -> snapshot -> start CDC
-    * from that tick. `wal` is the streaming envelope frame (file or Kafka
-    * transport); `walDir` is the chunk directory the tick cursor is read
-    * from. `checkpointDir` must be fresh (a resync restarts the offset
-    * history exactly as the reference recreates its topic).
+    * from that tick, against a [[graft.sources.CollectionSource]] — the
+    * transport seam: a live connector implementation drops in without any
+    * change here (SURVEY §7.1). `checkpointDir` must be fresh (a resync
+    * restarts the offset history exactly as the reference recreates its
+    * topic).
     */
   def resync(
       spark: SparkSession,
-      collection: DataFrame,
-      wal: DataFrame,
-      walDir: String,
+      source: graft.sources.CollectionSource,
       config: TableConfig,
       payloadSchema: StructType,
       tableDir: String,
@@ -119,7 +118,7 @@ object Sync {
       collectionIds: Seq[String] = Nil,
       clock: Column = current_timestamp(),
       trigger: Trigger = Trigger.AvailableNow(),
-      queryName: Option[String] = None): Resync = {
+      queryName: Option[String] = None): Resync =
     // the live-writer guard must run BEFORE the snapshot swap: resyncing
     // a table whose old replication query is still appending would first
     // replace the live dir (the old query's replayed pre-snapshot
@@ -134,36 +133,6 @@ object Sync {
       // tick FIRST, then scan: anything committed after this point may be in
       // the snapshot AND in the replayed stream — that overlap is the safe
       // direction (idempotent); ticking after the scan would LOSE changes
-      val tick = currentTick(spark, walDir)
-      val (rows, rejects) = snapshot(spark, collection, config, tableDir)
-      val query = CdcStream.startReplication(
-        wal, config, payloadSchema, tableDir, checkpointDir,
-        collectionIds = collectionIds, initialTick = Some(tick),
-        clock = clock, trigger = trigger, queryName = queryName)
-      Resync(tick, rows, rejects, query)
-    }
-  }
-
-  /** Resync against a [[graft.sources.CollectionSource]] — the transport-
-    * agnostic form: a live connector implementation drops in without any
-    * change here (SURVEY §7.1 seam).
-    */
-  def resync(
-      spark: SparkSession,
-      source: graft.sources.CollectionSource,
-      config: TableConfig,
-      payloadSchema: StructType,
-      tableDir: String,
-      checkpointDir: String,
-      collectionIds: Seq[String],
-      clock: Column,
-      trigger: Trigger,
-      queryName: Option[String]): Resync =
-    // same guard-before-swap + dir-monitor discipline as the DataFrame
-    // overload above — a live writer must fail the resync BEFORE the
-    // snapshot replaces the table, whatever the transport
-    CdcStream.withTableDirLock(tableDir) {
-      CdcStream.requireNoActiveWriter(tableDir)
       val tick = source.currentTick(spark)
       val (rows, rejects) = snapshot(spark, source.snapshot(spark), config, tableDir)
       val query = CdcStream.startReplication(

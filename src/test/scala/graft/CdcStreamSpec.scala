@@ -41,9 +41,18 @@ class CdcStreamSpec extends SparkSpec {
   private def writeWal(dir: Path, name: String, lines: Seq[String]): Unit =
     Files.write(dir.resolve(name), String.join("\n", lines: _*).getBytes)
 
+  /** The WAL chunk directory as a stream (chunks named
+    * `wal-<firstTick>-<lastTick>.json`, the WalSource contract).
+    */
+  private def wal(walDir: Path, maxChunksPerTrigger: Option[Int] = None): DataFrame = {
+    val r = spark.readStream.format("graft.sources.WalSource")
+    maxChunksPerTrigger.foreach(n => r.option("maxChunksPerTrigger", n.toLong))
+    r.load(walDir.toString)
+  }
+
   private def runOnce(walDir: Path, tableDir: Path, ckpt: Path): Unit = {
     val q = CdcStream.startReplication(
-      CdcStream.walFileSource(spark, walDir.toString),
+      wal(walDir),
       config, payloadSchema,
       tableDir.toString, ckpt.toString,
       collectionIds = Seq("c1"), initialTick = Some(10L), clock = clock)
@@ -62,14 +71,14 @@ class CdcStreamSpec extends SparkSpec {
       .toDF("offset", "K", "V", "_ver", "_deleted")
     SnapshotStore.writeSnapshot(spark, snap, tableDir.toString)
 
-    writeWal(walDir, "b1.json", Seq(
+    writeWal(walDir, "wal-5-16.json", Seq(
       walLine(11, 11, 2300, "c1", """{"k": 1, "v": "1.5"}"""), // upsert key 1
       walLine(12, 12, 2300, "c1", """{"k": 3, "v": "3.0"}"""), // insert key 3
       walLine(13, 13, 2200, "c1", """{"k": 9, "v": "9.9"}"""), // txn marker: dropped (F1)
       walLine(14, 14, 2300, "c2", """{"k": 8, "v": "8.8"}"""), // foreign collection: dropped (F1)
       walLine(15, 5, 2300, "c1", """{"k": 7, "v": "7.7"}"""),  // below snapshot tick: dropped (F3)
       walLine(16, 16, 2300, "c1", null)))                       // tombstone: dropped (F2)
-    writeWal(walDir, "b2.json", Seq(
+    writeWal(walDir, "wal-21-22.json", Seq(
       walLine(21, 21, 2302, "c1", """{"k": 2, "v": "2.0"}"""), // delete key 2
       walLine(22, 22, 2300, "c1", """{"k": 1, "v": "1.9"}"""))) // second upsert key 1
 
@@ -84,7 +93,7 @@ class CdcStreamSpec extends SparkSpec {
   test("replay of the whole stream is idempotent (at-least-once + versioned sink)") {
     val walDir = tmp("wal"); val tableDir = tmp("tbl"); val ckpt1 = tmp("ck1")
 
-    writeWal(walDir, "b1.json", Seq(
+    writeWal(walDir, "wal-11-13.json", Seq(
       walLine(11, 11, 2300, "c1", """{"k": 1, "v": "1.5"}"""),
       walLine(12, 12, 2302, "c1", """{"k": 2, "v": "0"}"""),
       walLine(13, 13, 2300, "c1", """{"k": 2, "v": "2.5"}""")))
@@ -108,7 +117,7 @@ class CdcStreamSpec extends SparkSpec {
 
   test("sink commit ledger: a re-delivered batchId is not appended twice") {
     val walDir = tmp("wal"); val ckpt = tmp("ck")
-    writeWal(walDir, "b1.json", Seq(
+    writeWal(walDir, "wal-11-11.json", Seq(
       walLine(11, 11, 2300, "c1", """{"k": 1, "v": "1.5"}""")))
 
     // normal run: data lands and the batch marker is written
@@ -128,7 +137,7 @@ class CdcStreamSpec extends SparkSpec {
     Files.createDirectories(pre)
     Files.write(pre.resolve(f"batch-${0L}%020d"), Array.empty[Byte])
     val q = CdcStream.startReplication(
-      CdcStream.walFileSource(spark, walDir.toString),
+      wal(walDir),
       config, payloadSchema, t2.toString, ckpt2.toString,
       collectionIds = Seq("c1"), initialTick = Some(10L), clock = clock)
     q.awaitTermination()
@@ -137,7 +146,7 @@ class CdcStreamSpec extends SparkSpec {
 
   test("compact() collapses storage without changing the read view") {
     val walDir = tmp("wal"); val tableDir = tmp("tbl")
-    writeWal(walDir, "b1.json", Seq(
+    writeWal(walDir, "wal-11-13.json", Seq(
       walLine(11, 11, 2300, "c1", """{"k": 1, "v": "1.0"}"""),
       walLine(12, 12, 2300, "c1", """{"k": 1, "v": "1.1"}"""),
       walLine(13, 13, 2302, "c1", """{"k": 2, "v": "0"}""")))
@@ -158,17 +167,17 @@ class CdcStreamSpec extends SparkSpec {
         p.getFileName.toString.endsWith(".parquet")).count().toInt
       finally d.close()
     }
-    // 6 WAL files, one batch each (maxFilesPerTrigger=1), all upserting
+    // 6 WAL chunks, one batch each (maxChunksPerTrigger=1), all upserting
     // the SAME key — the worst case for an append-only versioned table
     def seed(walDir: Path): Unit = (1 to 6).foreach { i =>
-      writeWal(walDir, f"b$i%02d.json", Seq(
+      writeWal(walDir, s"wal-${10 + i}-${10 + i}.json", Seq(
         walLine(10L + i, 10L + i, 2300, "c1", s"""{"k": 1, "v": "$i.0"}""")))
     }
     def run(tableDir: Path, cadence: Option[Int]): Unit = {
       val walDir = tmp("wal")
       seed(walDir)
       val q = CdcStream.startReplication(
-        CdcStream.walFileSource(spark, walDir.toString, maxFilesPerTrigger = Some(1)),
+        wal(walDir, maxChunksPerTrigger = Some(1)),
         config, payloadSchema, tableDir.toString, tmp("ck").toString,
         collectionIds = Seq("c1"), initialTick = Some(10L), clock = clock,
         compactEvery = cadence)
@@ -193,10 +202,10 @@ class CdcStreamSpec extends SparkSpec {
 
   test("compact() refuses to run while the table's replication query is active") {
     val walDir = tmp("wal"); val tableDir = tmp("tbl")
-    writeWal(walDir, "b1.json", Seq(
+    writeWal(walDir, "wal-11-11.json", Seq(
       walLine(11, 11, 2300, "c1", """{"k": 1, "v": "1.0"}""")))
     val q = CdcStream.startReplication(
-      CdcStream.walFileSource(spark, walDir.toString), config, payloadSchema,
+      wal(walDir), config, payloadSchema,
       tableDir.toString, tmp("ck").toString, collectionIds = Seq("c1"),
       initialTick = Some(10L), clock = clock,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"))
@@ -215,7 +224,7 @@ class CdcStreamSpec extends SparkSpec {
 
   test("transform rejects land in the dead-letter table") {
     val walDir = tmp("wal"); val tableDir = tmp("tbl")
-    writeWal(walDir, "b1.json", Seq(
+    writeWal(walDir, "wal-11-12.json", Seq(
       walLine(11, 11, 2300, "c1", """{"k": 1, "v": "1.0"}"""),
       walLine(12, 12, 2300, "c1", """{"v": "no key"}"""))) // missing pk
     runOnce(walDir, tableDir, tmp("ck"))
@@ -252,9 +261,8 @@ class CdcStreamSpec extends SparkSpec {
       walLine(14, 14, 2302, "c1", """{"k": 2, "v": "0"}"""),
       walLine(15, 15, 2300, "c1", """{"k": 1, "v": "1.5"}""")))
 
-    val wal = spark.readStream.format("graft.sources.WalSource").load(walDir.toString)
     val q = CdcStream.startReplication(
-      wal, config, payloadSchema,
+      wal(walDir), config, payloadSchema,
       tableDir.toString, tmp("ck").toString,
       collectionIds = Seq("c1"), clock = clock)
     q.awaitTermination()

@@ -225,12 +225,12 @@ class ChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"""{"offset":$offset,"tick":"$offset","type":$opType,"db":"d","cuid":"c1","tid":"t","data":${
         if (data == null) "null" else "\"" + data.replace("\"", "\\\"") + "\""}}"""
     val walDir = Files.createTempDirectory("chaoswal")
-    // two files + maxFilesPerTrigger=1 -> two micro-batches, so the
+    // two chunks + maxChunksPerTrigger=1 -> two micro-batches, so the
     // ledger has real multi-batch structure to keep clean under chaos
-    Files.write(walDir.resolve("b1.json"), String.join("\n",
+    Files.write(walDir.resolve("wal-11-12.json"), String.join("\n",
       walLine(11, 2300, """{"k": 1, "v": "1.5"}"""),
       walLine(12, 2300, """{"k": 3, "v": "3.0"}""")).getBytes)
-    Files.write(walDir.resolve("b2.json"), String.join("\n",
+    Files.write(walDir.resolve("wal-21-22.json"), String.join("\n",
       walLine(21, 2302, """{"k": 3, "v": "3.0"}"""),
       walLine(22, 2300, """{"k": 1, "v": "1.9"}""")).getBytes)
 
@@ -239,8 +239,8 @@ class ChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
       val root = Files.createTempDirectory(s"chaoscdc_$tag")
       val tableDir = root.resolve("t").toString
       val ckpt = root.resolve("ck").toString
-      val wal0 = CdcStream.walFileSource(spark, walDir.toString,
-        maxFilesPerTrigger = Some(1))
+      val wal0 = spark.readStream.format("graft.sources.WalSource")
+        .option("maxChunksPerTrigger", "1").load(walDir.toString)
       val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
         .encoderFor(wal0.schema)
       val wal = if (withFuse)

@@ -42,125 +42,105 @@ class ProducerSpec extends SparkSpec {
       Seq("orders", "users"))
   }
 
-  test("QueryMonitor counts processed rows and flags offset gaps") {
+  private def entry(offset: Long, opType: Int = 2300, data: String = "{}"): String =
+    s"""{"offset":$offset,"tick":"$offset","type":$opType,"db":"d","cuid":"c1","tid":"t","data":${
+      "\"" + data.replace("\"", "\\\"") + "\""}}"""
+
+  /** Replicate WAL `chunks` (file name -> lines), one chunk per
+    * micro-batch, under a [[QueryMonitor]]; returns the processed count
+    * once it reaches `rows` (listener events arrive asynchronously) and
+    * every reported gap as (lo, hi, kind).
+    */
+  private def monitored(query: String, rows: Long, chunks: (String, Seq[String])*)
+      : (Long, List[(Long, Long, QueryMonitor.GapKind)]) = {
     import java.nio.file.Files
     import graft.config.{ColumnSpec, TableConfig}
     import graft.streaming.CdcStream
     import org.apache.spark.sql.types._
 
     var gaps = List.empty[(Long, Long, QueryMonitor.GapKind)]
-    val mon = new QueryMonitor(onGap = (_, prev, next, kind) => gaps ::= (prev, next, kind))
+    val mon = new QueryMonitor(onGap = (_, lo, hi, kind) => gaps ::= (lo, hi, kind))
     spark.streams.addListener(mon)
     try {
       val walDir = Files.createTempDirectory("walmon")
       val tableDir = Files.createTempDirectory("tblmon").resolve("t")
-      // two files -> two micro-batches (maxFilesPerTrigger=1) with an
-      // offset gap between them (13 -> 21)
-      Files.write(walDir.resolve("a.json"), java.util.Arrays.asList(
-        """{"offset":12,"tick":"12","type":2300,"db":"d","cuid":"c1","tid":"t","data":"{\"k\":1,\"v\":\"1\"}"}""",
-        """{"offset":13,"tick":"13","type":2300,"db":"d","cuid":"c1","tid":"t","data":"{\"k\":2,\"v\":\"2\"}"}"""))
-      Files.write(walDir.resolve("b.json"), java.util.Arrays.asList(
-        """{"offset":21,"tick":"21","type":2300,"db":"d","cuid":"c1","tid":"t","data":"{\"k\":3,\"v\":\"3\"}"}"""))
-
+      for ((name, lines) <- chunks)
+        Files.write(walDir.resolve(name), java.util.Arrays.asList(lines: _*))
       val config = TableConfig("Doc", Seq(
         ColumnSpec("K", Seq("int"), ref = Some("k"), primaryKey = true),
         ColumnSpec("V", Seq("float"), ref = Some("v"))))
       val q = CdcStream.startReplication(
-        CdcStream.walFileSource(spark, walDir.toString, maxFilesPerTrigger = Some(1)),
+        spark.readStream.format("graft.sources.WalSource")
+          .option("maxChunksPerTrigger", "1").load(walDir.toString),
         config,
         StructType(Seq(StructField("k", LongType), StructField("v", StringType))),
         tableDir.toString, Files.createTempDirectory("ckmon").toString,
-        queryName = Some("mon_test"))
+        queryName = Some(query))
       q.awaitTermination()
-      // listener events are delivered asynchronously
       val deadline = System.currentTimeMillis() + 10000
-      while (mon.processedCount("mon_test") < 3 && System.currentTimeMillis() < deadline)
+      while (mon.processedCount(query) < rows && System.currentTimeMillis() < deadline)
         Thread.sleep(100)
-
-      assert(mon.processedCount("mon_test") === 3)
-      assert(gaps === List((13L, 21L, QueryMonitor.BoundaryGap)))
+      (mon.processedCount(query), gaps)
     } finally spark.streams.removeListener(mon)
+  }
+
+  test("QueryMonitor counts processed rows and flags offset gaps") {
+    // two chunks -> two micro-batches with an offset gap between them
+    // (13 -> 21)
+    val (processed, gaps) = monitored("mon_test", 3,
+      "wal-12-13.json" -> Seq(
+        entry(12, data = """{"k":1,"v":"1"}"""), entry(13, data = """{"k":2,"v":"2"}""")),
+      "wal-21-21.json" -> Seq(entry(21, data = """{"k":3,"v":"3"}""")))
+    assert(processed === 3)
+    assert(gaps === List((13L, 21L, QueryMonitor.BoundaryGap)))
   }
 
   test("an offset skip entirely inside one micro-batch is flagged (density)") {
-    import java.nio.file.Files
-    import graft.config.{ColumnSpec, TableConfig}
-    import graft.streaming.CdcStream
-    import org.apache.spark.sql.types._
-
-    var gaps = List.empty[(Long, Long, QueryMonitor.GapKind)]
-    val mon = new QueryMonitor(onGap = (_, a, b, kind) => gaps ::= (a, b, kind))
-    spark.streams.addListener(mon)
-    try {
-      val walDir = Files.createTempDirectory("waldense")
-      val tableDir = Files.createTempDirectory("tbldense").resolve("t")
-      // ONE file -> ONE micro-batch covering offsets 12..21 with ticks
-      // 14-20 skipped by the server: the boundary check has no previous
-      // batch to compare against, so only the density check (3 observed
-      // offsets over a span of 10) can witness the loss
-      Files.write(walDir.resolve("a.json"), java.util.Arrays.asList(
-        """{"offset":12,"tick":"12","type":2300,"db":"d","cuid":"c1","tid":"t","data":"{\"k\":1,\"v\":\"1\"}"}""",
-        """{"offset":13,"tick":"13","type":2300,"db":"d","cuid":"c1","tid":"t","data":"{\"k\":2,\"v\":\"2\"}"}""",
-        """{"offset":21,"tick":"21","type":2300,"db":"d","cuid":"c1","tid":"t","data":"{\"k\":3,\"v\":\"3\"}"}"""))
-      val config = TableConfig("Doc", Seq(
-        ColumnSpec("K", Seq("int"), ref = Some("k"), primaryKey = true),
-        ColumnSpec("V", Seq("float"), ref = Some("v"))))
-      val q = CdcStream.startReplication(
-        CdcStream.walFileSource(spark, walDir.toString),
-        config,
-        StructType(Seq(StructField("k", LongType), StructField("v", StringType))),
-        tableDir.toString, Files.createTempDirectory("ckdense").toString,
-        queryName = Some("mon_dense"))
-      q.awaitTermination()
-      val deadline = System.currentTimeMillis() + 10000
-      while (mon.processedCount("mon_dense") < 3 && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
-      assert(mon.processedCount("mon_dense") === 3)
-      assert(gaps === List((12L, 21L, QueryMonitor.DensityGap)),
-        "the intra-batch skip was not flagged by the density check " +
-          "with range semantics and its own kind")
-    } finally spark.streams.removeListener(mon)
+    // ONE chunk -> ONE micro-batch covering offsets 12..21 with ticks
+    // 14-20 skipped by the server: the boundary check has no previous
+    // batch to compare against, so only the density check (3 observed
+    // offsets over a span of 10) can witness the loss
+    val (processed, gaps) = monitored("mon_dense", 3,
+      "wal-12-21.json" -> Seq(
+        entry(12, data = """{"k":1,"v":"1"}"""), entry(13, data = """{"k":2,"v":"2"}"""),
+        entry(21, data = """{"k":3,"v":"3"}""")))
+    assert(processed === 3)
+    assert(gaps === List((12L, 21L, QueryMonitor.DensityGap)),
+      "the intra-batch skip was not flagged by the density check " +
+        "with range semantics and its own kind")
   }
 
   test("filtered WAL entries at a batch boundary do not fake a gap (E2 is pre-filter)") {
-    import java.nio.file.Files
-    import graft.config.{ColumnSpec, TableConfig}
-    import graft.streaming.CdcStream
-    import org.apache.spark.sql.types._
+    // batch 1 ends in two txn markers (types 2200/2201 — op-filtered,
+    // but they still occupy WAL offsets 13-14); batch 2 resumes at the
+    // NEXT offset 15. Post-filter observation would read max=12 then
+    // min=15 and alarm "13-14 lost"; the server skipped nothing.
+    val (processed, gaps) = monitored("gapf_test", 2,
+      "wal-12-14.json" -> Seq(
+        entry(12, data = """{"k":1,"v":"1"}"""), entry(13, 2200), entry(14, 2201)),
+      "wal-15-15.json" -> Seq(entry(15, data = """{"k":2,"v":"2"}""")))
+    assert(processed === 2,
+      "V3 must still count only rows that became table rows")
+    assert(gaps === Nil,
+      s"op-filtered markers at the batch boundary faked a WAL gap: $gaps")
+  }
 
-    var gaps = List.empty[(Long, Long, QueryMonitor.GapKind)]
-    val mon = new QueryMonitor(onGap = (_, prev, next, kind) => gaps ::= (prev, next, kind))
-    spark.streams.addListener(mon)
-    try {
-      val walDir = Files.createTempDirectory("walgapf")
-      val tableDir = Files.createTempDirectory("tblgapf").resolve("t")
-      // batch 1 ends in two txn markers (types 2200/2201 — op-filtered,
-      // but they still occupy WAL offsets 13-14); batch 2 resumes at the
-      // NEXT offset 15. Post-filter observation would read max=12 then
-      // min=15 and alarm "13-14 lost"; the server skipped nothing.
-      Files.write(walDir.resolve("a.json"), java.util.Arrays.asList(
-        """{"offset":12,"tick":"12","type":2300,"db":"d","cuid":"c1","tid":"t","data":"{\"k\":1,\"v\":\"1\"}"}""",
-        """{"offset":13,"tick":"13","type":2200,"db":"d","cuid":"c1","tid":"t","data":"{}"}""",
-        """{"offset":14,"tick":"14","type":2201,"db":"d","cuid":"c1","tid":"t","data":"{}"}"""))
-      Files.write(walDir.resolve("b.json"), java.util.Arrays.asList(
-        """{"offset":15,"tick":"15","type":2300,"db":"d","cuid":"c1","tid":"t","data":"{\"k\":2,\"v\":\"2\"}"}"""))
-      val config = TableConfig("Doc", Seq(
-        ColumnSpec("K", Seq("int"), ref = Some("k"), primaryKey = true),
-        ColumnSpec("V", Seq("float"), ref = Some("v"))))
-      val q = CdcStream.startReplication(
-        CdcStream.walFileSource(spark, walDir.toString, maxFilesPerTrigger = Some(1)),
-        config,
-        StructType(Seq(StructField("k", LongType), StructField("v", StringType))),
-        tableDir.toString, Files.createTempDirectory("ckgapf").toString,
-        queryName = Some("gapf_test"))
-      q.awaitTermination()
-      val deadline = System.currentTimeMillis() + 10000
-      while (mon.processedCount("gapf_test") < 2 && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
-      assert(mon.processedCount("gapf_test") === 2,
-        "V3 must still count only rows that became table rows")
-      assert(gaps === Nil,
-        s"op-filtered markers at the batch boundary faked a WAL gap: $gaps")
-    } finally spark.streams.removeListener(mon)
+  test("a redelivered early offset does not stretch the density span back over delivered offsets") {
+    val first = "wal-10-13.json" -> (10L to 13L).map(o => entry(o, data = s"""{"k":$o,"v":"1"}"""))
+    // chunk 2 re-serves offset 11 from chunk 1 beside the dense 14-16:
+    // the span to check is 14..16, not 11..16
+    val (processed, gaps) = monitored("mon_redeliver", 8, first,
+      "wal-14-16.json" -> (Seq(11L) ++ (14L to 16L)).map(o =>
+        entry(o, data = s"""{"k":$o,"v":"2"}""")))
+    assert(processed === 8)
+    assert(gaps === Nil, s"a redelivery of an early offset faked a WAL gap: $gaps")
+    // the same redelivery beside a real skip (15-16 lost): the count of
+    // 3 falls short of the 4-offset span 14..17. (One redelivered entry
+    // masks a one-offset skip — the count cannot tell them apart.)
+    val (_, skipped) = monitored("mon_redeliver_skip", 7, first,
+      "wal-14-17.json" -> Seq(11L, 14L, 17L).map(o =>
+        entry(o, data = s"""{"k":$o,"v":"2"}""")))
+    assert(skipped === List((14L, 17L, QueryMonitor.DensityGap)),
+      s"a skip beside a redelivery was not flagged over the undelivered span: $skipped")
   }
 }

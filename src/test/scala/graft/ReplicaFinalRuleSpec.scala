@@ -80,14 +80,25 @@ class ReplicaFinalRuleSpec extends SparkSpec {
       // original attributes, so `WHERE pk = x` must land in the parquet
       // scan's PushedFilters (file/row-group pruning) instead of
       // filtering AFTER a whole-table aggregate — the difference between
-      // a point lookup and a full merge at 100 TB
-      val df = spark.sql(s"SELECT Id, Name FROM ${cfg.name} WHERE Id = 1")
-      val physical = df.queryExecution.executedPlan.toString
-      assert(physical.contains("PushedFilters: [IsNotNull(Id), EqualTo(Id,1)]") ||
-        physical.contains("PushedFilters: [EqualTo(Id,1)"),
-        s"key predicate did not reach the scan:\n$physical")
-      assert(df.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-        === Seq((1L, "a-v2")))
+      // a point lookup and a full merge at 100 TB. The explicit
+      // DataFrame read over the same raw storage shares the plan builder
+      // and must push the key just the same
+      val location = spark.sql(s"DESCRIBE TABLE EXTENDED ${cfg.name}")
+        .collect().find(_.getString(0) == "Location").get.getString(1)
+      val inputs = Seq(
+        "transparent SQL" -> spark.sql(s"SELECT Id, Name FROM ${cfg.name} WHERE Id = 1"),
+        "currentView" -> graft.streaming.CdcStream
+          .currentView(spark, location.stripPrefix("file:"), Seq("Id"))
+          .filter(org.apache.spark.sql.functions.col("Id") === 1)
+          .select("Id", "Name"))
+      for ((path, df) <- inputs) {
+        val physical = df.queryExecution.executedPlan.toString
+        assert(physical.contains("PushedFilters: [IsNotNull(Id), EqualTo(Id,1)]") ||
+          physical.contains("PushedFilters: [EqualTo(Id,1)"),
+          s"$path: key predicate did not reach the scan:\n$physical")
+        assert(df.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+          === Seq((1L, "a-v2")), path)
+      }
     }
   }
 

@@ -3,7 +3,8 @@ package graft
 import java.nio.file.{Files, Path}
 import graft.config.{ColumnSpec, TableConfig}
 import graft.streaming.{CdcStream, Sync}
-import org.apache.spark.sql.DataFrame
+import graft.sources.CollectionSource
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -35,6 +36,18 @@ class SyncSpec extends SparkSpec {
     s"""{"offset":$offset,"tick":"$tick","type":$opType,"db":"d","cuid":"c1","tid":"t","data":${
       if (data == null) "null" else "\"" + data.replace("\"", "\\\"") + "\""}}"""
 
+  private def wal(walDir: Path): DataFrame =
+    spark.readStream.format("graft.sources.WalSource").load(walDir.toString)
+
+  /** An in-memory collection beside a WAL chunk directory. */
+  private def memorySource(collection: DataFrame, walDir: Path): CollectionSource =
+    new CollectionSource {
+      override def snapshot(spark: SparkSession): DataFrame = collection
+      override def changes(spark: SparkSession): DataFrame = wal(walDir)
+      override def currentTick(spark: SparkSession): Long =
+        Sync.currentTick(spark, walDir.toString)
+    }
+
   private def current(tableDir: Path): Map[Long, Double] =
     CdcStream.currentView(spark, tableDir.toString, keys = Seq("K"))
       .select("K", "V").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -65,8 +78,7 @@ class SyncSpec extends SparkSpec {
     // collection state after tick 20 was applied
     val collection = Seq((1L, "1.5"), (2L, "2.0"), (4L, "4.0")).toDF("k", "v")
 
-    val wal = spark.readStream.format("graft.sources.WalSource").load(walDir.toString)
-    val r = Sync.resync(spark, collection, wal, walDir.toString,
+    val r = Sync.resync(spark, memorySource(collection, walDir),
       config, payloadSchema, tableDir.toString, ckpt.toString,
       collectionIds = Seq("c1"), clock = clock)
     r.query.awaitTermination()
@@ -89,7 +101,7 @@ class SyncSpec extends SparkSpec {
       walLine(22, 22, 2302, """{"k": 2, "v": "0"}"""),
       walLine(23, 23, 2300, """{"k": 3, "v": "3.0"}""")))
     val q2 = CdcStream.startReplication(
-      spark.readStream.format("graft.sources.WalSource").load(walDir.toString),
+      wal(walDir),
       config, payloadSchema, tableDir.toString, ckpt.toString,
       collectionIds = Seq("c1"), initialTick = Some(r.initialTick), clock = clock)
     q2.awaitTermination()
@@ -145,8 +157,7 @@ class SyncSpec extends SparkSpec {
     val walDir = tmp("wal"); val tableDir = tmp("tbl-guard")
     Files.write(walDir.resolve("wal-1-10.json"), java.util.Arrays.asList(
       walLine(10, 10, 2300, """{"k": 1, "v": "1.0"}""")))
-    val r1 = Sync.resync(spark, Seq((1L, "1.0")).toDF("k", "v"),
-      CdcStream.walFileSource(spark, walDir.toString), walDir.toString,
+    val r1 = Sync.resync(spark, memorySource(Seq((1L, "1.0")).toDF("k", "v"), walDir),
       config, payloadSchema, tableDir.toString, tmp("ck1").toString,
       Seq("c1"), clock,
       org.apache.spark.sql.streaming.Trigger.AvailableNow(), None)
@@ -155,14 +166,13 @@ class SyncSpec extends SparkSpec {
     assert(before.nonEmpty)
     // a LIVE writer on the same dir (ProcessingTime keeps it active)
     val live = CdcStream.startReplication(
-      CdcStream.walFileSource(spark, walDir.toString), config, payloadSchema,
+      wal(walDir), config, payloadSchema,
       tableDir.toString, tmp("ck2").toString, Seq("c1"), clock = clock,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("10 seconds"),
       queryName = Some("live_writer_guard"))
     try {
       val e = intercept[IllegalArgumentException] {
-        Sync.resync(spark, Seq((9L, "9.0")).toDF("k", "v"),
-          CdcStream.walFileSource(spark, walDir.toString), walDir.toString,
+        Sync.resync(spark, memorySource(Seq((9L, "9.0")).toDF("k", "v"), walDir),
           config, payloadSchema, tableDir.toString, tmp("ck3").toString,
           Seq("c1"), clock,
           org.apache.spark.sql.streaming.Trigger.AvailableNow(), None)
@@ -190,7 +200,7 @@ class SyncSpec extends SparkSpec {
     r1.query.awaitTermination()
     val before = current(tableDir)
     val live = CdcStream.startReplication(
-      CdcStream.walFileSource(spark, walDir.toString), config, payloadSchema,
+      wal(walDir), config, payloadSchema,
       tableDir.toString, tmp("ck2").toString, Seq("c1"), clock = clock,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("10 seconds"),
       queryName = Some("live_writer_guard2"))
