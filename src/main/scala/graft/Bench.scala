@@ -81,8 +81,9 @@ object Bench {
     // bounded TAIL of stdout, and at 194 queries the full line barely
     // fits — when it doesn't, a short parseable summary printed AFTER
     // it (so the tail keeps it) still carries the round's total. The
-    // full line stays first and unchanged.
-    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","failed":$fs,"sf":${Verify.q(sfDir)}}""")
+    // full line stays first and unchanged; `"summary":true` tells the
+    // two apart.
+    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","failed":$fs,"sf":${Verify.q(sfDir)},"summary":true}""")
     // The driver records only a bounded TAIL of stdout; at 111 queries
     // the JSON line outgrows it and the driver's parse comes back null
     // (ADVICE r5). Persist the full line ourselves so per-query bench

@@ -1,5 +1,11 @@
 package graft.config
 
+import scala.jdk.CollectionConverters._
+
+import org.snakeyaml.engine.v2.api.{Load, LoadSettings}
+import org.snakeyaml.engine.v2.exceptions.YamlEngineException
+import org.snakeyaml.engine.v2.schema.CoreSchema
+
 /** YAML table-config loader: parses the reference's `tables/<name>.yaml`
   * shape (reference: tables/test.yaml, readme.md:115-142, loaded by
   * replication/schema/helper.py:13-38) into a [[TableConfig]], so a user
@@ -10,7 +16,8 @@ package graft.config
   *  - `table_name` -> [[TableConfig.name]]
   *  - `schema.properties.<Col>.{type, ref, default, required, ch_type}`
   *    -> one [[ColumnSpec]] each (in declaration order); `type` may be a
-  *    scalar or an inline list (the ordered cast-fallback chain)
+  *    scalar or a list, flow or block style (the ordered cast-fallback
+  *    chain)
   *  - `schema.primary_key` (scalar or list) -> `primaryKey` flags
   *  - `table` (DDL text), `buffer`, `topic_config`: parsed and retained in
   *    the raw tree but not used — DDL/buffering/topics are ClickHouse/Kafka
@@ -20,10 +27,15 @@ package graft.config
   *    synthesizes them in the envelope step ([[graft.operators.Envelope]]);
   *    declaring them as transform columns would double-emit
   *
-  * The parser is a deliberately minimal YAML subset (block maps, scalars,
-  * inline `[..]` lists, `|` literal blocks, comments) — exactly the shape
-  * the reference's configs use — hand-rolled because the environment pins
-  * the dependency set (no snakeyaml).
+  * Parsing goes through snakeyaml-engine (`org.snakeyaml.engine.v2`,
+  * shipped in Spark's jars) with the YAML 1.2 core schema and duplicate
+  * keys rejected. The core schema types plain scalars as the configs
+  * mean them: `true`/`false`, `null`/`~`, integers and floats; every
+  * other scalar stays a string. YAML 1.1 (SnakeYAML's and PyYAML's
+  * default) would also turn `yes`/`no`/`on`/`off` and dates into new
+  * types, changing what an existing config says. Rejecting duplicates
+  * keeps a key declared twice (a property, or `primary_key`) from
+  * silently becoming two columns or resolving to one of its values.
   */
 object ConfigYaml {
 
@@ -38,12 +50,39 @@ object ConfigYaml {
     }
   }
 
+  private val loadSettings = LoadSettings.builder()
+    .setSchema(new CoreSchema())
+    .setAllowDuplicateKeys(false)
+    .setLabel("table yaml")
+    .build()
+
+  /** Load one YAML document whose root is a mapping (an empty document
+    * is an empty mapping). Syntax errors, duplicate keys and a non-mapping
+    * root throw IllegalArgumentException; the loader's messages carry the
+    * line and column.
+    */
   def parse(text: String): Node = {
-    val lines = text.split("\n", -1).toVector.map(stripComment)
-    val (node, next) = parseBlock(lines, skipBlank(lines, 0), indentAt(lines, 0))
-    val rest = skipBlank(lines, next)
-    require(rest >= lines.length, s"trailing content at line ${rest + 1}: ${lines(rest).trim}")
-    node
+    val root =
+      try new Load(loadSettings).loadFromString(text)
+      catch { case e: YamlEngineException => throw new IllegalArgumentException(e.getMessage, e) }
+    fromYaml(root) match {
+      case null    => Node(Vector.empty)
+      case n: Node => n
+      case other   => throw new IllegalArgumentException(s"expected a mapping at the top level, got $other")
+    }
+  }
+
+  /** The loader's Java tree -> [[Node]] / Vector / Long; an integer past
+    * Long's range becomes a Double, other scalars (String, Double,
+    * Boolean, null) pass through.
+    */
+  private def fromYaml(v: Any): Any = v match {
+    case m: java.util.Map[_, _] =>
+      Node(m.asScala.iterator.map { case (k, x) => String.valueOf(k) -> fromYaml(x) }.toVector)
+    case xs: java.util.List[_]   => xs.asScala.iterator.map(fromYaml).toVector
+    case i: java.lang.Integer    => i.longValue
+    case b: java.math.BigInteger => b.doubleValue
+    case other                   => other
   }
 
   /** Parse one `tables/<name>.yaml` document into a TableConfig. */
@@ -103,153 +142,5 @@ object ConfigYaml {
   private def defaultValue(v: Any): Any = v match {
     case xs: Vector[_] => xs.map(_.toString).toArray
     case other         => other
-  }
-
-  // ---- minimal YAML subset machinery ----
-
-  /** Cut `# comment` (only when preceded by start-of-line or whitespace,
-    * outside quotes — `ref: _key # arango column name` keeps `_key`).
-    */
-  private def stripComment(l: String): String = {
-    var inS = false; var inD = false; var i = 0
-    while (i < l.length) {
-      val c = l.charAt(i)
-      if (c == '\'' && !inD) {
-        // YAML: a single-quoted string only STARTS where a token starts
-        // (after whitespace/:/,/[/{) — an apostrophe INSIDE an unquoted
-        // scalar (`default: user's_team # owner`, `team: ops-'til # x`)
-        // is literal; toggling on it would swallow the trailing comment
-        // into the value. '{' covers flow-mapping keys (`{'a #b': 1}`).
-        // A '-' immediately before the quote counts ONLY in flow-sequence
-        // context (previous non-space char '[' or ','): a block list dash
-        // is followed by a space in standard YAML, and the broader
-        // "dash at any token start" rule opened quote state for plain
-        // scalars like `note: rock -'n roll # genre`, swallowing the
-        // trailing comment into the value.
-        def tokenStart(j: Int): Boolean = j == 0 || {
-          val p = l.charAt(j - 1)
-          p.isWhitespace || p == ':' || p == '[' || p == ',' || p == '{'
-        }
-        def flowDash(j: Int): Boolean = j > 0 && l.charAt(j - 1) == '-' && {
-          var k = j - 2
-          while (k >= 0 && l.charAt(k) == ' ') k -= 1
-          k >= 0 && (l.charAt(k) == '[' || l.charAt(k) == ',')
-        }
-        if (inS) inS = false
-        else if (tokenStart(i) || flowDash(i)) inS = true
-      }
-      else if (c == '"' && !inS) inD = !inD
-      else if (c == '#' && !inS && !inD && (i == 0 || l.charAt(i - 1).isWhitespace))
-        return l.substring(0, i)
-      i += 1
-    }
-    l
-  }
-
-  private def isBlank(l: String): Boolean = {
-    val t = l.trim
-    t.isEmpty || t == "---"
-  }
-
-  private def skipBlank(lines: Vector[String], i: Int): Int = {
-    var j = i
-    while (j < lines.length && isBlank(lines(j))) j += 1
-    j
-  }
-
-  private def indentOf(l: String): Int = l.takeWhile(_ == ' ').length
-
-  private def indentAt(lines: Vector[String], i: Int): Int = {
-    val j = skipBlank(lines, i)
-    if (j < lines.length) indentOf(lines(j)) else 0
-  }
-
-  /** Parse consecutive `key: ...` entries at exactly `indent`; returns the
-    * mapping and the index of the first line past it.
-    */
-  private def parseBlock(lines: Vector[String], start: Int, indent: Int): (Node, Int) = {
-    val out = Vector.newBuilder[(String, Any)]
-    var i = start
-    var done = false
-    while (!done) {
-      i = skipBlank(lines, i)
-      if (i >= lines.length || indentOf(lines(i)) < indent) done = true
-      else {
-        val line = lines(i)
-        require(indentOf(line) == indent, s"inconsistent indent at: '$line'")
-        val t = line.trim
-        val ci = t.indexOf(':')
-        require(ci > 0, s"expected 'key: value', got: '$t'")
-        val key = scalar(t.substring(0, ci)).toString
-        val rest = t.substring(ci + 1).trim
-        if (rest == "|" || rest == "|-") {
-          // literal block: every following line indented past the key
-          var j = i + 1
-          val buf = Vector.newBuilder[String]
-          while (j < lines.length &&
-            (lines(j).trim.isEmpty || indentOf(lines(j)) > indent)) {
-            buf += lines(j); j += 1
-          }
-          val body = buf.result()
-          val base = body.filter(_.trim.nonEmpty).map(indentOf).minOption.getOrElse(0)
-          val textVal = body
-            .map(l => if (l.length >= base) l.substring(base) else l.trim)
-            .mkString("\n")
-          out += key -> (if (rest == "|-") textVal.reverse.dropWhile(_ == '\n').reverse
-                         else textVal.reverse.dropWhile(_ == '\n').reverse + "\n")
-          i = j
-        } else if (rest.isEmpty) {
-          val j = skipBlank(lines, i + 1)
-          if (j < lines.length && indentOf(lines(j)) > indent) {
-            val (child, next) = parseBlock(lines, j, indentOf(lines(j)))
-            out += key -> child
-            i = next
-          } else {
-            out += key -> null
-            i += 1
-          }
-        } else {
-          out += key -> scalar(rest)
-          i += 1
-        }
-      }
-    }
-    (Node(out.result()), i)
-  }
-
-  private def scalar(s: String): Any = {
-    val t = s.trim
-    if (t.startsWith("[")) {
-      require(t.endsWith("]"), s"unterminated inline list: $t")
-      val inner = t.substring(1, t.length - 1).trim
-      if (inner.isEmpty) Vector.empty[Any]
-      else splitInline(inner, t).map(x => scalar(x))
-    } else if (t == "true") true
-    else if (t == "false") false
-    else if (t == "null" || t == "~") null
-    else if (t.length >= 2 && t.head == '\'' && t.last == '\'') t.substring(1, t.length - 1)
-    else if (t.length >= 2 && t.head == '"' && t.last == '"') t.substring(1, t.length - 1)
-    else t.toLongOption.getOrElse(t.toDoubleOption.getOrElse(t))
-  }
-
-  /** Split an inline list body on TOP-LEVEL commas only: a comma inside a
-    * quoted scalar (`['a, b', c]`) is content, not a separator — splitting
-    * on every comma would silently corrupt the value, the one malformed-
-    * input shape worse than failing loudly. Unterminated quotes do fail
-    * loudly like every other parse error here.
-    */
-  private def splitInline(inner: String, whole: String): Vector[String] = {
-    val out = Vector.newBuilder[String]
-    val cur = new StringBuilder
-    var quote: Char = 0
-    inner.foreach { ch =>
-      if (quote != 0) { cur.append(ch); if (ch == quote) quote = 0 }
-      else if (ch == '\'' || ch == '"') { cur.append(ch); quote = ch }
-      else if (ch == ',') { out += cur.toString; cur.clear() }
-      else cur.append(ch)
-    }
-    require(quote == 0, s"unterminated quote in inline list: $whole")
-    out += cur.toString
-    out.result()
   }
 }

@@ -72,6 +72,19 @@ object WalSource {
     case ChunkName(lo, hi) => Some((lo.toLong, hi.toLong))
     case _                 => None
   }
+
+  /** The chunks in WAL directory `dir` as (firstTick, lastTick, path),
+    * sorted by lastTick; empty when the directory is absent.
+    */
+  def chunks(dir: String, conf: org.apache.hadoop.conf.Configuration): Seq[(Long, Long, String)] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(conf)
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq
+      .flatMap(st => tickRange(st.getPath.getName)
+        .map { case (lo, hi) => (lo, hi, st.getPath.toString) })
+      .sortBy(_._2)
+  }
 }
 
 private class WalTable(path: String) extends Table with SupportsRead {
@@ -138,20 +151,11 @@ private class WalScan(path: String, minTick: Long,
   private val hadoopConf = new SerializableHadoopConf(
     org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration)
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(hadoopConf.value)
-    if (!fs.exists(p)) return Array.empty
-    fs.listStatus(p).toSeq
-      .flatMap { st =>
-        WalSource.tickRange(st.getPath.getName).collect {
-          // the pushed cursor prunes whole chunks by filename range
-          case (_, hi) if hi >= minTick => WalChunkPartition(st.getPath.toString)
-        }
-      }
-      .sortBy(_.file)
-      .toArray
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    WalSource.chunks(path, hadoopConf.value).collect {
+      // the pushed cursor prunes whole chunks by filename range
+      case (_, hi, file) if hi >= minTick => WalChunkPartition(file)
+    }.toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     new WalReaderFactory(hadoopConf)
@@ -176,15 +180,7 @@ private class WalMicroBatchStream(path: String, minTick: Long,
     conf: SerializableHadoopConf, maxChunksPerTrigger: Option[Int])
   extends MicroBatchStream with SupportsTriggerAvailableNow {
 
-  private def chunks(): Seq[(Long, Long, String)] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf.value)
-    if (!fs.exists(p)) return Seq.empty
-    fs.listStatus(p).toSeq
-      .flatMap(st => WalSource.tickRange(st.getPath.getName)
-        .map { case (lo, hi) => (lo, hi, st.getPath.toString) })
-      .sortBy(_._2)
-  }
+  private def chunks(): Seq[(Long, Long, String)] = WalSource.chunks(path, conf.value)
 
   private var availableNowCap: Option[Long] = None
 

@@ -185,15 +185,9 @@ object CdcStream {
             // the deadletter log has no keys/_ver for a read view to
             // collapse, so a bare append would DOUBLE its rows on every
             // crash inside this marker window; one partition per batch
-            // with dynamic overwrite makes redelivery rewrite its own
-            // partition instead (exactly-once reject storage). The
-            // snapshot path (Sync.snapshot) writes batch_id = -1 under
-            // the same layout.
-            if (!errs.isEmpty) errs.withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id")
-              .parquet(tableDir + ".deadletter")
+            // makes redelivery rewrite its own partition instead
+            // (exactly-once reject storage)
+            if (!errs.isEmpty) writeRejects(errs, tableDir, batchId)
           } finally batch.unpersist()
           fs.mkdirs(marker.getParent)
           fs.create(marker, true).close()
@@ -225,6 +219,19 @@ object CdcStream {
     query
     }
   }
+
+  /** Write `rejects` as partition `batch_id = batchId` of
+    * `<tableDir>.deadletter` (E1's DOCUMENT log as a queryable table),
+    * replacing that partition only (dynamic overwrite). The sink writes
+    * one partition per micro-batch; [[Sync.snapshot]] writes
+    * `batch_id = -1`.
+    */
+  private[streaming] def writeRejects(rejects: DataFrame, tableDir: String, batchId: Long): Unit =
+    rejects.withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id")
+      .parquet(tableDir + ".deadletter")
 
   /** Per-tableDir monitors serializing writer starts and external
     * compactions (reentrant, so [[graft.streaming.Sync.resync]] can hold

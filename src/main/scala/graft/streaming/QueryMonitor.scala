@@ -59,17 +59,11 @@ final class QueryMonitor(
         processed.merge(name, rows, (a: Long, b: Long) => a + b)
       }
       // offset ranges come from the PRE-FILTER "cdc_wal" observation
-      // (filtered txn markers/foreign collections carry offsets too —
-      // post-filter ranges fake gaps at batch boundaries); the legacy
-      // 3-column "cdc" shape is honored for externally-attached observes
-      val offsets =
-        if (obs.containsKey("cdc_wal")) Some((obs.get("cdc_wal"), 0, 1, Some(2)))
-        else if (obs.containsKey("cdc") && obs.get("cdc").length >= 3)
-          Some((obs.get("cdc"), 1, 2, None))
-        else None
-      offsets.foreach { case (row, lo, hi, cnt) =>
-        if (!row.isNullAt(lo) && !row.isNullAt(hi)) {
-          val minOff = row.getLong(lo); val maxOff = row.getLong(hi)
+      // (min, max, count): filtered txn markers/foreign collections carry
+      // offsets too — post-filter ranges fake gaps at batch boundaries
+      Option(obs.get("cdc_wal")).foreach { row =>
+        if (!row.isNullAt(0) && !row.isNullAt(1)) {
+          val minOff = row.getLong(0); val maxOff = row.getLong(1)
           val prev = lastMaxOffset.getOrDefault(name, Long.MinValue)
           // Boundary semantics: (previous batch's max, this batch's min) —
           // "asked for X but got Y"; log and continue
@@ -93,10 +87,8 @@ final class QueryMonitor(
           // exact DISTINCT aggregates and approx_count_distinct's HLL error
           // would false-fire on dense batches, so the boundary check
           // remains the witness for any skip that crosses batches.)
-          cnt.map(row.getLong).filter(_ > 0).foreach { n =>
-            val lo = if (prev == Long.MinValue) minOff else math.max(minOff, prev + 1)
-            if (n < maxOff - lo + 1) onGap(name, lo, maxOff, QueryMonitor.DensityGap)
-          }
+          val lo = if (prev == Long.MinValue) minOff else math.max(minOff, prev + 1)
+          if (row.getLong(2) < maxOff - lo + 1) onGap(name, lo, maxOff, QueryMonitor.DensityGap)
           lastMaxOffset.merge(name, maxOff, (a: Long, b: Long) => math.max(a, b))
         }
       }

@@ -43,16 +43,9 @@ object Sync {
     * `wal.get_last_tick()` (store.py:53-58). 0 for an empty/absent WAL
     * (CDC then replays from the beginning, which is also convergent).
     */
-  def currentTick(spark: SparkSession, walDir: String): Long = {
-    val p = new Path(walDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0L
-    else fs.listStatus(p).toSeq
-      .flatMap(st => graft.sources.WalSource.tickRange(st.getPath.getName))
-      .map(_._2)
-      .maxOption
-      .getOrElse(0L)
-  }
+  def currentTick(spark: SparkSession, walDir: String): Long =
+    graft.sources.WalSource.chunks(walDir, spark.sparkContext.hadoopConfiguration)
+      .lastOption.map(_._2).getOrElse(0L)
 
   /** Snapshot the source collection through the schema transform into the
     * replica table (atomic swap), dead-lettering rejects. Snapshot rows
@@ -71,23 +64,20 @@ object Sync {
     val cached = collection.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val t = SchemaTransform(cached, config)
-      val rows = t.valid
-        .withColumn("offset", lit(null).cast("long"))
-        .withColumn(config.versionColumn, lit(0L))
-        .withColumn(config.deletedColumn, lit(0))
+      // the sink's column order (its SchemaTransform `keep` columns
+      // first): Spark takes a parquet dir's schema from one part file, so
+      // snapshot and stream files must agree or the read order depends
+      // on file names
+      val meta = Seq(lit(null).cast("long").as("offset"),
+        lit(0L).as(config.versionColumn), lit(0).as(config.deletedColumn))
+      val rows = t.valid.select(meta ++ t.valid.columns.map(col): _*)
       val n = SnapshotStore.writeSnapshot(spark, rows, tableDir)
       val rejects = t.errors
       val nRejects = rejects.count()
-      // same partitioned layout as the CDC sink's per-batch deadletter
-      // (batch_id = -1 marks the snapshot partition): a re-run snapshot
+      // batch_id = -1 marks the snapshot partition: a re-run snapshot
       // OVERWRITES its own rejects instead of appending a duplicate set
       // — consistent with the snapshot itself replacing the table
-      if (nRejects > 0)
-        rejects.withColumn("batch_id", lit(-1L))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(tableDir + ".deadletter")
+      if (nRejects > 0) CdcStream.writeRejects(rejects, tableDir, -1L)
       else {
         // a clean re-run must also CLEAR a previous snapshot's rejects:
         // dynamic overwrite with zero rows writes nothing, so without

@@ -164,7 +164,7 @@ class ConfigYamlSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       ConfigYaml.parse("bad: ['a, b]\n")
     }
-    assert(e.getMessage.contains("unterminated quote"))
+    assert(e.getMessage.contains("quoted scalar"))
   }
 
   test("an apostrophe inside an unquoted scalar does not swallow the comment") {
@@ -183,14 +183,15 @@ class ConfigYamlSpec extends SparkSpec {
     // ADVICE r9: the token-start set omitted '{', so a flow-mapping
     // value like {'a #b': 1} had its quote read as a literal apostrophe
     // and the ` #b': 1}` tail stripped as a comment — silent corruption.
-    // Flow mappings are kept as raw scalars by this parser; the
-    // observable contract is the value surviving comment-stripping
-    // intact.
+    // The quoted key keeps its hash and the flow mapping loads as one.
     val m = ConfigYaml.parse("v: {'a #b': 1} # trailing comment\n")
-    assert(m.get("v") === Some("{'a #b': 1}"))
-    // compact list items: '-' directly before the quote
-    val l = ConfigYaml.parse("vals: [-'x #y', c] # comment\n")
-    assert(l.get("vals") === Some(Vector("-'x #y'", "c")))
+    assert(m.get("v") === Some(ConfigYaml.Node(Vector("a #b" -> 1L))))
+    // `-'x` is a plain scalar, not a quote opener, so ` #y', c] ...` is
+    // a comment and the flow sequence never closes: rejected, as a YAML
+    // loader (PyYAML included) rejects it
+    intercept[IllegalArgumentException] {
+      ConfigYaml.parse("vals: [-'x #y', c] # comment\n")
+    }
     // ...but a '-' MID-SCALAR is not a token start: the apostrophe in
     // `ops-'til` is literal, and the trailing comment must still strip
     // (the review-caught regression of the first '-' rule)
@@ -202,8 +203,29 @@ class ConfigYamlSpec extends SparkSpec {
     // here and swallowed the comment into the value
     val g = ConfigYaml.parse("note: rock -'n roll # genre\n")
     assert(g.get("note") === Some("rock -'n roll"))
-    // spaced flow items keep the protection ([ -'x #y'])
-    val sp = ConfigYaml.parse("vals: [ -'x #y', c] # comment\n")
-    assert(sp.get("vals") === Some(Vector("-'x #y'", "c")))
+    // the spaced form ([ -'x #y']) is the same plain scalar
+    intercept[IllegalArgumentException] {
+      ConfigYaml.parse("vals: [ -'x #y', c] # comment\n")
+    }
+  }
+
+  test("a block-style type list is the same fallback chain as a flow list") {
+    val block = yaml.replace("      type: [ int, str ]\n", "      type:\n        - int\n        - str\n")
+    assert(block !== yaml)
+    assert(ConfigYaml.tableConfig(block).columns(4) === ConfigYaml.tableConfig(yaml).columns(4))
+  }
+
+  test("a key declared twice is rejected, naming the key") {
+    // a duplicated property would otherwise become two columns named the
+    // same, and a duplicated top-level key would resolve to one value
+    val dupProperty = yaml.replace("    Name:\n", "    Id:\n      type: str\n    Name:\n")
+    val e = intercept[IllegalArgumentException] {
+      ConfigYaml.tableConfig(dupProperty)
+    }
+    assert(e.getMessage.contains("duplicate key Id"))
+    val dupTop = intercept[IllegalArgumentException] {
+      ConfigYaml.tableConfig(yaml + "table_name: Other\n")
+    }
+    assert(dupTop.getMessage.contains("duplicate key table_name"))
   }
 }
