@@ -4,9 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** CDC envelope handling: the WAL/Kafka record shape and the stream-side
-  * filters and system columns the reference's consumer applies before the
-  * schema transform.
+/** CDC envelope handling: the stream-side filters and system columns the
+  * reference's consumer applies to WAL entries before the schema
+  * transform (the entry schema itself is [[graft.sources.WalSource]]'s).
   *
   * Reference:
   *  - WAL entry shape `{tick, type, cuid, db, tid, data}`
@@ -25,17 +25,6 @@ object Envelope {
   val OpUpsert = 2300
   val OpRemove = 2302
   val TxnMarkers: Seq[Int] = Seq(2200, 2201, 2202)
-
-  /** Envelope schema for JSON-encoded WAL entries; `data` stays a JSON
-    * string because payload schemas are config-driven at runtime.
-    */
-  val walSchema: StructType = StructType(Seq(
-    StructField("tick", StringType),
-    StructField("type", IntegerType),
-    StructField("db", StringType),
-    StructField("cuid", StringType),
-    StructField("tid", StringType),
-    StructField("data", StringType)))
 
   /** F1: keep only upsert/remove ops on the synced collections; txn markers
     * and foreign collections drop out. Runs source-side (pre-shuffle), the

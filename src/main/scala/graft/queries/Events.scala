@@ -9,9 +9,8 @@ import org.apache.spark.sql.types.DecimalType
 /** Windowed event analytics: tumbling, sliding, and session windows over
   * the `events` stream table, plus JSON payload extraction — the added
   * streaming-analytics surface (SURVEY §2.10 "Windows"). Batch forms here
-  * (oracle-checkable); the same expressions run under Structured Streaming
-  * with `withWatermark` (see graft.streaming.CdcStream.windowedCounts and
-  * the watermark test in CdcStreamSpec).
+  * (oracle-checkable); the per-user rules with a streaming twin (w17,
+  * w19, w23, w25) have it in [[EventStreams]].
   */
 object Events {
 
@@ -742,6 +741,12 @@ object Events {
       |  CAST(ca * 1000000 // cs AS BIGINT) AS mean_active_days_ppm
       |FROM r ORDER BY cohort_day, day_offset""".stripMargin
 
+  /** Trailing-window length and squared z threshold of w15's anomaly
+    * rule (`w15Sql` spells the same 10 and 9 as literals).
+    */
+  private val AnomalyWindow = 10
+  private val AnomalyZSq = 9L // |z| > 3
+
   /** w15: trailing z-score anomaly detection over the per-minute event
     * rate, flagged in EXACT integer arithmetic. For each (event_type,
     * active-minute) the trailing window is the previous 10 ACTIVE
@@ -758,14 +763,6 @@ object Events {
     * wider deployments partition the series by (type, day) with a
     * 10-minute carry-in instead of one partition per type.
     */
-  /** Trailing-window length and squared z threshold for the anomaly
-    * rule — shared with the streaming twin
-    * ([[graft.streaming.CdcStream.anomalyStream]]) so the two cannot
-    * drift apart.
-    */
-  val AnomalyWindow = 10
-  val AnomalyZSq = 9L // |z| > 3
-
   def w15Anomaly(spark: SparkSession, dir: String): DataFrame = {
     val w = Window
       .partitionBy(col("event_type")).orderBy(col("minute"))
@@ -807,8 +804,8 @@ object Events {
       |ORDER BY event_type, minute""".stripMargin
 
   /** w16: event-time DISORDER profile — the report that tells an
-    * operator what watermark the streaming jobs (w1–w3's streaming
-    * twins, `CdcStream.windowedCounts`) can afford. An event's LATENESS
+    * operator what watermark a `withWatermark` streaming job over
+    * these events can afford. An event's LATENESS
     * is how far its event time lags the latest event time already seen
     * on its stream at arrival (`running_max(ts) − ts`) — exactly the
     * quantity a `withWatermark` bound must exceed for the event to be
@@ -1172,15 +1169,12 @@ object Events {
     * join appears anywhere; at scale you'd persist the daily grid and
     * skip the exact side entirely.
     */
-  /** The w22 register derivation, shared verbatim by the batch sketch
-    * and [[graft.streaming.CdcStream.sketchStream]]'s input projection
-    * (the twin claim only means something if both sides hash/rank
-    * identically): (day_idx, reg, rho) per event, rho saturated at
-    * P=20. Trailing-zero rank on a NON-NEGATIVE domain: (x & -x) - 1 is
-    * the trailing-zero mask, bit_count counts it; x = 0 exhausts the 32
-    * hash bits -> rank 33 (saturates to 20).
+  /** The w22 register derivation: (day_idx, reg, rho) per event, rho
+    * saturated at P=20. Trailing-zero rank on a NON-NEGATIVE domain:
+    * (x & -x) - 1 is the trailing-zero mask, bit_count counts it; x = 0
+    * exhausts the 32 hash bits -> rank 33 (saturates to 20).
     */
-  private[graft] def sketchRegisterRows(events: DataFrame): DataFrame = {
+  private def sketchRegisterRows(events: DataFrame): DataFrame = {
     val h = graft.functions.HashFunctions.md5NumberBigEndian(
       concat(lit("u:"), col("user_id").cast("string")))
     events
@@ -1192,16 +1186,6 @@ object Events {
         .otherwise(expr("CAST(bit_count((x & -x) - 1) AS BIGINT) + 1")),
         lit(20L)))
       .select(col("d"), col("reg"), col("rho"))
-  }
-
-  /** Raw-HLL integer estimate from a register map (the w22 formula as
-    * plain Scala, for the streaming processor and specs): alpha ppm *
-    * m^2 * 2^P over the saturated register sum, one integer division.
-    */
-  private[graft] def sketchEstimate(regs: scala.collection.Map[Long, Long]): Long = {
-    val s = regs.valuesIterator.map(r => 1L << (20 - r)).sum +
-      (256L - regs.size) * 1048576L
-    718270L * (68719476736L / s) / 1000000L
   }
 
   def w22SketchMerge(spark: SparkSession, dir: String): DataFrame = {
@@ -1674,7 +1658,7 @@ object Events {
       |FROM g ORDER BY recovery_band""".stripMargin
 
   /** w29: STREAMING-STATE PROFILE — runs the four per-user
-    * transformWithState twins ([[graft.streaming.CdcStream.funnelStream]] /
+    * transformWithState twins ([[EventStreams.funnelStream]] /
     * `attributionStream` / `decayAttributionStream` / `transitionStream`)
     * over the events fixture as REAL streaming queries (RocksDB state
     * store, one `Trigger.AvailableNow` batch), then reads the state that
@@ -1684,7 +1668,7 @@ object Events {
     * state-key count next to the emitted-row count and the EVICTED-row
     * count read from the query's own `StreamingQueryProgress`
     * state-operator metrics (TTL expiries + expired timers, via
-    * [[graft.streaming.QueryMonitor.stateEvictions]]). This is the
+    * [[EventStreams.stateEvictions]]). This is the
     * observability readout the TTL work needs: the same numbers an
     * operator would watch to size `ttl` on a real deployment (state keys
     * ≈ users the store must hold; with a TTL the resident curve flattens
@@ -1781,13 +1765,13 @@ object Events {
         spark.readStream.schema(srcSchema).parquet(spool.toString)
       val gapUs = 4L * 3600 * 1000000 // w17/w19's shared session bound
       val twins: Seq[(String, String, DataFrame => DataFrame)] = Seq(
-        ("funnel", "funnel", s => graft.streaming.CdcStream
+        ("funnel", "funnel", s => EventStreams
           .funnelStream(s, "user_id", "ts", "event_id", "event_type").toDF()),
-        ("last_touch", "lastKey", s => graft.streaming.CdcStream
+        ("last_touch", "lastKey", s => EventStreams
           .attributionStream(s, "user_id", "ts", "event_id", "event_type", gapUs).toDF()),
-        ("decay_attribution", "open", s => graft.streaming.CdcStream
+        ("decay_attribution", "open", s => EventStreams
           .decayAttributionStream(s, "user_id", "ts", "event_id", "event_type", "value").toDF()),
-        ("transition", "last", s => graft.streaming.CdcStream
+        ("transition", "last", s => EventStreams
           .transitionStream(s, "user_id", "ts", "event_id", "event_type", gapUs).toDF()))
       // profile-local conf on the private session — no restore dance
       // needed, and no other query can ever observe it
@@ -1819,7 +1803,7 @@ object Events {
             // is the point: StreamingOpsSpec drives the identical helper
             // past a real TTL expiry and asserts it counts
             val evicted =
-              graft.streaming.QueryMonitor.stateEvictions(q.recentProgress.toSeq)
+              EventStreams.stateEvictions(q.recentProgress.toSeq)
             // exact resident state: one row per live state KEY (the list
             // twin's elements flatten to rows; distinct keys is the
             // store-sizing number either way)

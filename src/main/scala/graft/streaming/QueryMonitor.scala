@@ -113,23 +113,4 @@ object QueryMonitor {
   sealed trait GapKind
   case object BoundaryGap extends GapKind
   case object DensityGap extends GapKind
-
-  /** State rows EVICTED across a query's recorded progress: TTL expiry
-    * removals plus expired event-time timers, summed over every state
-    * operator of every micro-batch. This is the number an operator
-    * watches to confirm a configured `ttl` is actually reclaiming state
-    * (w29's `evicted_rows` column reads it after the profile run;
-    * StreamingOpsSpec asserts it goes positive when a TTL'd key expires
-    * for real). Metric names are Spark's own transformWithState
-    * operator metrics (`numValuesRemovedDueToTTLExpiry`,
-    * `numExpiredTimers`); operators without them (non-TWS stateful ops)
-    * contribute zero rather than failing the readout.
-    */
-  def stateEvictions(
-      progress: Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]): Long =
-    progress.flatMap(_.stateOperators.toSeq).map { so =>
-      def metric(n: String): Long =
-        Option(so.customMetrics.get(n)).map(_.longValue).getOrElse(0L)
-      metric("numValuesRemovedDueToTTLExpiry") + metric("numExpiredTimers")
-    }.sum
 }

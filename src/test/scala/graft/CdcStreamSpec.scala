@@ -271,102 +271,4 @@ class CdcStreamSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got === Seq((1L, 1.5))) // k=2 deleted, k=1 latest wins
   }
-
-  test("statefulLatest emits a changelog of per-key current rows") {
-    import spark.implicits._
-    val srcDir = tmp("st"); val ckpt = tmp("ck")
-    // one file per micro-batch (maxFilesPerTrigger=1) so state carries
-    // across batches: k=1 advances twice, the stale k=2 update must not emit
-    Files.write(srcDir.resolve("a.json"), java.util.Arrays.asList(
-      """{"k":1,"v":10,"val":"first"}""",
-      """{"k":2,"v":20,"val":"only"}"""))
-    Files.write(srcDir.resolve("b.json"), java.util.Arrays.asList(
-      """{"k":1,"v":30,"val":"newer"}""",
-      """{"k":2,"v":5,"val":"stale"}"""))
-
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("k", LongType), StructField("v", LongType),
-        StructField("val", StringType))))
-      .option("maxFilesPerTrigger", 1)
-      .json(srcDir.toString)
-      .as[(Long, Long, String)]
-
-    val changelog = CdcStream.statefulLatest(src)(_._1, _._2)
-    val q = changelog.writeStream
-      .format("memory").queryName("st_changelog").outputMode("update")
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    val got = spark.table("st_changelog")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
-    // stale k=2 v=5 must be absent; both k=1 advances present
-    assert(got === Set((1L, 10L, "first"), (2L, 20L, "only"), (1L, 30L, "newer")))
-  }
-
-  test("statefulLatest version ties resolve by the tie order, independent of arrival") {
-    import spark.implicits._
-    // two payloads with the SAME (key, version): the tie order (payload
-    // length here — the typed twin of ReplicaTable.latest's tieBreak
-    // columns) must pick the same winner whichever arrives first
-    def run(first: String, second: String, tag: String): Set[(Long, Long, String)] = {
-      val srcDir = tmp(s"tie-$tag"); val ckpt = tmp(s"tieck-$tag")
-      Files.write(srcDir.resolve("a.json"), java.util.Arrays.asList(first))
-      Files.write(srcDir.resolve("b.json"), java.util.Arrays.asList(second))
-      val src = spark.readStream
-        .schema(StructType(Seq(StructField("k", LongType),
-          StructField("v", LongType), StructField("val", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .json(srcDir.toString)
-        .as[(Long, Long, String)]
-      val changelog = CdcStream.statefulLatest(src)(
-        _._1, _._2, t => t._3.length.toLong)
-      val q = changelog.writeStream
-        .format("memory").queryName(s"tie_$tag").outputMode("update")
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(s"tie_$tag")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
-    }
-    val lo = """{"k":1,"v":10,"val":"bb"}"""  // tie 2
-    val hi = """{"k":1,"v":10,"val":"ccc"}""" // tie 3
-    val fwd = run(lo, hi, "fwd") // hi arrives second: advances over lo
-    val rev = run(hi, lo, "rev") // lo arrives second: must NOT advance
-    assert(fwd === Set((1L, 10L, "bb"), (1L, 10L, "ccc")),
-      "the higher tie did not advance the state")
-    assert(rev === Set((1L, 10L, "ccc")),
-      "a lower tie re-delivered after the winner regressed the state")
-  }
-
-  test("watermarked tumbling window emits closed windows in append mode") {
-    val srcDir = tmp("ev"); val ckpt = tmp("ck")
-    val lines = Seq(
-      """{"ts":"2024-01-01T00:00:10.000Z","user_id":1}""",
-      """{"ts":"2024-01-01T00:00:40.000Z","user_id":1}""",
-      """{"ts":"2024-01-01T00:01:10.000Z","user_id":2}""",
-      """{"ts":"2024-01-01T00:00:20.000Z","user_id":1}""", // late but within watermark
-      """{"ts":"2024-01-01T00:10:00.000Z","user_id":3}""") // advances watermark, closes earlier windows
-    Files.write(srcDir.resolve("e1.json"), String.join("\n", lines: _*).getBytes)
-
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("ts", TimestampType), StructField("user_id", LongType))))
-      .json(srcDir.toString)
-    val counts = CdcStream.windowedCounts(src, "ts", "2 minutes", "1 minute", Seq("user_id"))
-    val q = counts.writeStream
-      .format("memory").queryName("win_counts").outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    val got = spark.table("win_counts")
-      .select(col("window_start").cast("string"), col("user_id"), col("n_events"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    // watermark = 00:10:00 - 2m = 00:08:00 -> the 00:00 and 00:01 windows are closed
-    assert(got.contains(("2024-01-01 00:00:00", 1L, 3L)))
-    assert(got.contains(("2024-01-01 00:01:00", 2L, 1L)))
-  }
 }

@@ -1,13 +1,17 @@
 package graft
 
 import java.nio.file.Files
-import graft.streaming.CdcStream
+import graft.queries.EventStreams
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
-/** Streaming dedup and stream-stream interval join (SURVEY §2.10): state
-  * stays bounded by the watermark, results match the batch semantics.
+/** Streaming twins of batch catalog rules (SURVEY §2.10): the four
+  * per-user event twins in [[graft.queries.EventStreams]] (with and
+  * without state TTL, and the w29 profile that runs them), the
+  * stream-static near-dup flow, and the retrieval and cluster twins.
+  * Each must reproduce its batch twin's rows across micro-batch
+  * boundaries and checkpoint restarts.
   */
 @graft.tags.Soak
 class StreamingOpsSpec extends SparkSpec
@@ -37,151 +41,6 @@ class StreamingOpsSpec extends SparkSpec
     super.afterAll()
   }
 
-  private val eventSchema = StructType(Seq(
-    StructField("id", LongType), StructField("ts", TimestampType),
-    StructField("payload", StringType)))
-
-  test("dedupStream drops re-deliveries of the same key across batches") {
-    val src = tmp("dd-src"); val ckpt = tmp("dd-ck")
-    // one file per micro-batch: the duplicate id=1 arrives again in batch 2
-    Files.write(src.resolve("b1.json"), java.util.Arrays.asList(
-      """{"id":1,"ts":"2024-01-01T00:00:10.000Z","payload":"first"}""",
-      """{"id":2,"ts":"2024-01-01T00:00:20.000Z","payload":"two"}"""))
-    Files.write(src.resolve("b2.json"), java.util.Arrays.asList(
-      """{"id":1,"ts":"2024-01-01T00:05:00.000Z","payload":"dup"}""",
-      """{"id":3,"ts":"2024-01-01T00:06:00.000Z","payload":"three"}"""))
-
-    val stream = spark.readStream.schema(eventSchema)
-      .option("maxFilesPerTrigger", 1).json(src.toString)
-    val q = CdcStream.dedupStream(stream, Seq("id"), "ts", "10 minutes")
-      .writeStream.format("memory").queryName("dd_out")
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    val got = spark.table("dd_out")
-      .collect().map(r => (r.getLong(0), r.getString(2))).toSet
-    assert(got === Set((1L, "first"), (2L, "two"), (3L, "three")))
-  }
-
-  test("sessionizeStream closes gap-separated sessions per key") {
-    val src = tmp("ss-src"); val ckpt = tmp("ss-ck")
-    // user 1: two bursts 30 min apart (gap 10 min => two sessions);
-    // user 2: one event. The sentinel advances the watermark past every
-    // other session's end; its OWN session stays open in state and must
-    // NOT be emitted — append mode only releases closed sessions.
-    Files.write(src.resolve("e.json"), java.util.Arrays.asList(
-      """{"id":1,"ts":"2024-01-01T00:00:00.000Z","payload":"a"}""",
-      """{"id":1,"ts":"2024-01-01T00:05:00.000Z","payload":"b"}""",
-      """{"id":1,"ts":"2024-01-01T00:35:00.000Z","payload":"c"}""",
-      """{"id":2,"ts":"2024-01-01T00:01:00.000Z","payload":"d"}""",
-      """{"id":99,"ts":"2024-01-01T06:00:00.000Z","payload":"sentinel"}"""))
-
-    val stream = spark.readStream.schema(eventSchema).json(src.toString)
-    val q = CdcStream.sessionizeStream(stream, "id", "ts",
-        gap = "10 minutes", watermark = "1 minute")
-      .writeStream.format("memory").queryName("ss_out")
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    val got = spark.table("ss_out")
-      .collect().map(r => (r.getLong(0), r.getLong(3))).toSet
-    assert(got === Set((1L, 2L), (1L, 1L), (2L, 1L)))
-  }
-
-  test("sessionizeTws: timer-emitted sessions, late bridge event merges two open sessions") {
-    val src = tmp("st-src"); val ckpt = tmp("st-ck")
-    // batch 1: user 1 forms TWO open sessions ([00:00,00:05] and [00:20]
-    // — 00:20 > 00:05 + 10min gap), user 2 one singleton
-    Files.write(src.resolve("a.json"), java.util.Arrays.asList(
-      """{"id":1,"ts":"2024-01-01T00:00:00.000Z","payload":"a"}""",
-      """{"id":1,"ts":"2024-01-01T00:05:00.000Z","payload":"b"}""",
-      """{"id":1,"ts":"2024-01-01T00:20:00.000Z","payload":"c"}""",
-      """{"id":2,"ts":"2024-01-01T00:01:00.000Z","payload":"d"}"""))
-    // batch 2: the LATE bridge at 00:12 touches both (within gap of 00:05
-    // and of 00:20) -> the two sessions must merge into one
-    Files.write(src.resolve("b.json"), java.util.Arrays.asList(
-      """{"id":1,"ts":"2024-01-01T00:12:00.000Z","payload":"bridge"}"""))
-    // batch 3: sentinel advances the watermark (2h delay) past every
-    // session end + gap; its own session stays open and is never emitted
-    Files.write(src.resolve("c.json"), java.util.Arrays.asList(
-      """{"id":99,"ts":"2024-01-01T06:00:00.000Z","payload":"sentinel"}"""))
-
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val stream = spark.readStream.schema(eventSchema)
-        .option("maxFilesPerTrigger", 1).json(src.toString)
-      val q = CdcStream.sessionizeTws(stream, "id", "ts",
-          gapMs = 10 * 60 * 1000L, watermark = "2 hours")
-        .writeStream.format("memory").queryName("st_out")
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-
-      val base = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli
-      def m(min: Long) = base + min * 60000L
-      val got = spark.table("st_out")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-      assert(got === Set(
-        (1L, m(0), m(20), 4L), // merged: a, b, bridge, c
-        (2L, m(1), m(1), 1L)))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("gap-boundary events merge identically in the builtin and the timer twin") {
-    // MEASURED builtin semantics: session_window merges two events
-    // exactly gapMs apart into ONE session (boundary-INCLUSIVE — the
-    // long-standing doc comment claiming "strictly less" was wrong, and
-    // w3's oracle only agreed because micro-timestamp fixtures never
-    // produce exact-boundary gaps). sessionizeTws claims the builtin's
-    // semantics on raw timer state, so both must merge here; this test
-    // is the pin that keeps the two operators and the w3 oracle's break
-    // condition aligned at the boundary.
-    val gapMs = 10 * 60 * 1000L
-    def boundarySrc(tag: String): java.nio.file.Path = {
-      val src = tmp(s"$tag-src")
-      Files.write(src.resolve("e.json"), java.util.Arrays.asList(
-        """{"id":1,"ts":"2024-01-01T00:00:00.000Z","payload":"a"}""",
-        """{"id":1,"ts":"2024-01-01T00:10:00.000Z","payload":"b"}""", // == gap
-        """{"id":99,"ts":"2024-01-01T06:00:00.000Z","payload":"sentinel"}"""))
-      src
-    }
-    val b = spark.readStream.schema(eventSchema).json(boundarySrc("sb").toString)
-    val qb = CdcStream.sessionizeStream(b, "id", "ts",
-        gap = "10 minutes", watermark = "1 minute")
-      .writeStream.format("memory").queryName("sb_out")
-      .option("checkpointLocation", tmp("sb-ck").toString)
-      .trigger(Trigger.AvailableNow()).start()
-    qb.awaitTermination()
-    val builtin = spark.table("sb_out").collect()
-      .filter(_.getLong(0) == 1L).map(_.getLong(3)).toSeq.sorted
-    assert(builtin === Seq(2L),
-      s"builtin session_window split gap-boundary events: $builtin")
-    withRocksDb {
-      val t = spark.readStream.schema(eventSchema).json(boundarySrc("tb").toString)
-      val qt = CdcStream.sessionizeTws(t, "id", "ts", gapMs, watermark = "1 minute")
-        .writeStream.format("memory").queryName("tb_out")
-        .option("checkpointLocation", tmp("tb-ck").toString)
-        .trigger(Trigger.AvailableNow()).start()
-      qt.awaitTermination()
-    }
-    val twin = spark.table("tb_out").collect()
-      .filter(_.getLong(0) == 1L).map(_.getLong(3)).toSeq.sorted
-    assert(twin === Seq(2L),
-      s"sessionizeTws split gap-boundary events the builtin merges: $twin")
-  }
-
   test("decayAttributionStream: a value-less purchase consumes its segment, credits nothing") {
     import scala.jdk.CollectionConverters._
     // the batch w23 rule (`pval_e6 IS NOT NULL`) emits NO rows for a
@@ -196,7 +55,7 @@ class StreamingOpsSpec extends SparkSpec
       twinEv(1, "2024-01-01T09:30:00.000Z", 4, "purchase", 3.0)).asJava)
     withRocksDb {
       val stream = spark.readStream.schema(twinSchema).json(src.toString)
-      val q = CdcStream.decayAttributionStream(
+      val q = EventStreams.decayAttributionStream(
           stream, "uid", "ts", "eid", "etype", "value")
         .writeStream.format("memory").queryName("dcnull_out")
         .option("checkpointLocation", ck.toString)
@@ -211,191 +70,6 @@ class StreamingOpsSpec extends SparkSpec
     // with its segment and must never resurface
     assert(got === Seq((1L, 4L, "view", 1000000L, 3000000L)),
       s"null-value purchase leaked credit rows or failed to consume its segment: $got")
-  }
-
-  test("anomalyStream flags the same minutes as the batch w15 rule") {
-    val src = tmp("an-src"); val ckpt = tmp("an-ck")
-    // 13 active minutes for one key: 10 flat (cnt=2) to fill the ring,
-    // a spike (cnt=9) caught by the ZERO-VARIANCE branch, a flat minute
-    // (cnt=2, not flagged), then a second spike (cnt=10) whose window
-    // now CONTAINS the first spike — (10*10-27)^2 = 5329 > 9*(10*117-
-    // 27^2) = 3969, so the VARIANCE branch flags it (9 would tie at
-    // 3969 and stay silent under strict >). Split across three files so
-    // the ring survives micro-batch boundaries; a late sentinel key
-    // advances the watermark past every window.
-    def ev(min: Int, n: Int): Seq[String] =
-      (0 until n).map(i => s"""{"id":$min,"ts":"2024-01-01T00:${f"$min%02d"}:${f"${i % 60}%02d"}.000Z","payload":"k"}""")
-    import scala.jdk.CollectionConverters._
-    Files.write(src.resolve("a.json"),
-      ((0 until 5).flatMap(m => ev(m, 2))).asJava)
-    Files.write(src.resolve("b.json"),
-      ((5 until 10).flatMap(m => ev(m, 2)) ++ ev(10, 9)).asJava)
-    Files.write(src.resolve("c.json"),
-      (ev(11, 2) ++ ev(12, 10) ++ Seq(
-        """{"id":999,"ts":"2024-01-01T06:00:00.000Z","payload":"sentinel"}""")).asJava)
-
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val stream = spark.readStream.schema(eventSchema)
-        .option("maxFilesPerTrigger", 1).json(src.toString)
-        .withColumn("event_type", lit("click"))
-      val minutes = CdcStream.windowedCounts(stream, "ts",
-          watermark = "0 seconds", window = "1 minute", keyCols = Seq("event_type"))
-        .select(col("event_type"), col("window_start").as("minute"),
-          col("n_events").as("cnt"))
-      val q = CdcStream.anomalyStream(minutes)
-        .writeStream.format("memory").queryName("an_out")
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-
-      val base = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli
-      val got = spark.table("an_out")
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-      // batch replay of the same rule over the same minute series
-      val series = (0 until 13).map(m => (base + m * 60000L,
-        if (m == 10) 9L else if (m == 12) 10L else 2L))
-      val expected = series.indices.collect {
-        case i if i >= 10 =>
-          val win = series.slice(i - 10, i).map(_._2)
-          val (x, s, q0) = (series(i)._2, win.sum, win.map(c => c * c).sum)
-          val flagged =
-            if (10 * q0 - s * s == 0) 10 * x != s
-            else (10 * x - s) * (10 * x - s) > 9 * (10 * q0 - s * s)
-          (series(i)._1, x, s, flagged)
-      }.filter(_._4).map(t => ("click", t._1, t._2, t._3)).toSet
-      assert(expected.size === 2,
-        "fixture must flag one zero-variance and one with-variance spike")
-      assert(got === expected, "streaming flags diverge from the batch rule")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("anomalyStream ring state survives a checkpoint restart") {
-    val src = tmp("ar-src"); val ckpt = tmp("ar-ck")
-    def ev(min: Int, n: Int): Seq[String] =
-      (0 until n).map(i => s"""{"id":$min,"ts":"2024-01-01T00:${f"$min%02d"}:${f"${i % 60}%02d"}.000Z","payload":"k"}""")
-    import scala.jdk.CollectionConverters._
-    // run 1 fills the ring with 10 flat minutes (watermark closes 0..9
-    // once minute 10 arrives) — NO anomaly is emitted yet
-    Files.write(src.resolve("a.json"),
-      ((0 until 10).flatMap(m => ev(m, 2)) ++ ev(10, 2)).asJava)
-
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // the memory sink refuses checkpoint recovery — collect through
-      // foreachBatch (recoverable) into a driver-side buffer instead
-      val got = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Long, Long)]()
-      def runOnce(): Unit = {
-        val stream = spark.readStream.schema(eventSchema)
-          .option("maxFilesPerTrigger", 1).json(src.toString)
-          .withColumn("event_type", lit("click"))
-        val minutes = CdcStream.windowedCounts(stream, "ts",
-            watermark = "0 seconds", window = "1 minute", keyCols = Seq("event_type"))
-          .select(col("event_type"), col("window_start").as("minute"),
-            col("n_events").as("cnt"))
-        val q = CdcStream.anomalyStream(minutes)
-          .writeStream.foreachBatch {
-            (df: org.apache.spark.sql.Dataset[CdcStream.MinuteAnomaly], _: Long) =>
-              df.collect().foreach(a => got.add((a.key, a.minute, a.cnt, a.win_sum)))
-          }
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      runOnce()
-      assert(got.isEmpty, "flat warmup minutes must not flag")
-      // run 2, SAME checkpoint: a spike minute + a sentinel closing it.
-      // The ring built in run 1 must be recovered from state — a fresh
-      // ring would hold < 10 entries and stay silent.
-      Files.write(src.resolve("b.json"),
-        (ev(11, 9) ++ Seq(
-          """{"id":999,"ts":"2024-01-01T06:00:00.000Z","payload":"s"}""")).asJava)
-      runOnce()
-      val base = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli
-      import scala.jdk.CollectionConverters._
-      assert(got.asScala.toSet === Set(("click", base + 11 * 60000L, 9L, 20L)),
-        "restarted stream lost or corrupted the trailing ring")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("statefulLatestTws matches the changelog contract on the new state API") {
-    import spark.implicits._
-    val src = tmp("tws-src"); val ckpt = tmp("tws-ck")
-    Files.write(src.resolve("a.json"), java.util.Arrays.asList(
-      """{"k":1,"v":10,"val":"first"}""",
-      """{"k":2,"v":20,"val":"only"}"""))
-    Files.write(src.resolve("b.json"), java.util.Arrays.asList(
-      """{"k":1,"v":30,"val":"newer"}""",
-      """{"k":2,"v":5,"val":"stale"}"""))
-
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val stream = spark.readStream
-        .schema(StructType(Seq(StructField("k", LongType),
-          StructField("v", LongType), StructField("val", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .json(src.toString)
-        .as[(Long, Long, String)]
-
-      val changelog = CdcStream.statefulLatestTws(stream)(_._1, _._2)
-      val q = changelog.writeStream
-        .format("memory").queryName("tws_changelog").outputMode("update")
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-
-      val got = spark.table("tws_changelog")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
-      // same golden as the flatMapGroupsWithState form: stale k=2 absent
-      assert(got === Set((1L, 10L, "first"), (2L, 20L, "only"), (1L, 30L, "newer")))
-
-      // the TTL path flips the operator into processing-time mode; with a
-      // horizon far beyond the test, semantics must be unchanged. NOTE:
-      // processing-time state TTL keeps the query scheduling maintenance
-      // batches indefinitely (AvailableNow never self-terminates and
-      // processAllAvailable never finds a quiet moment — documented on
-      // statefulLatestTws), so the test polls the sink for the expected
-      // changelog and then stops the query explicitly.
-      val ckpt2 = tmp("tws-ck2")
-      val withTtl = CdcStream.statefulLatestTws(stream,
-        ttl = Some(java.time.Duration.ofHours(1)))(_._1, _._2)
-      val q2 = withTtl.writeStream
-        .format("memory").queryName("tws_ttl").outputMode("update")
-        .option("checkpointLocation", ckpt2.toString)
-        .start()
-      try {
-        val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-        while (spark.table("tws_ttl").count() < 3 && System.nanoTime() < deadline)
-          Thread.sleep(250)
-      } finally q2.stop()
-      val got2 = spark.table("tws_ttl")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
-      assert(got2 === got)
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
   }
 
   test("transitionStream emits the batch w17 edges across micro-batch boundaries") {
@@ -425,7 +99,7 @@ class StreamingOpsSpec extends SparkSpec
     try {
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).json(src.toString)
-      val q = CdcStream.transitionStream(stream, "uid", "ts", "eid", "etype",
+      val q = EventStreams.transitionStream(stream, "uid", "ts", "eid", "etype",
           gapUs = 4L * 3600 * 1000000)
         .writeStream.format("memory").queryName("tr_out")
         .option("checkpointLocation", ckpt.toString)
@@ -481,7 +155,7 @@ class StreamingOpsSpec extends SparkSpec
     try {
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).json(src.toString)
-      val q = CdcStream.funnelStream(stream, "uid", "ts", "eid", "etype")
+      val q = EventStreams.funnelStream(stream, "uid", "ts", "eid", "etype")
         .writeStream.format("memory").queryName("fn_out")
         .option("checkpointLocation", ckpt.toString)
         .trigger(Trigger.AvailableNow())
@@ -527,9 +201,9 @@ class StreamingOpsSpec extends SparkSpec
       def runOnce(): Unit = {
         val stream = spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).json(src.toString)
-        val q = CdcStream.funnelStream(stream, "uid", "ts", "eid", "etype")
+        val q = EventStreams.funnelStream(stream, "uid", "ts", "eid", "etype")
           .writeStream.foreachBatch {
-            (df: org.apache.spark.sql.Dataset[CdcStream.StageLatency], _: Long) =>
+            (df: org.apache.spark.sql.Dataset[EventStreams.StageLatency], _: Long) =>
               df.collect().foreach(s => got.add((s.key, s.stage, s.dur_us)))
           }
           .option("checkpointLocation", ckpt.toString)
@@ -552,60 +226,6 @@ class StreamingOpsSpec extends SparkSpec
         (1L, "2_click_to_purchase", 30 * m),
         (1L, "3_view_to_purchase", 60 * m)),
         "restarted stream lost the partial funnel state")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("sketchStream's final per-day registers equal the batch daily sketch") {
-    val src = tmp("sk-src"); val ckpt = tmp("sk-ck")
-    // the REAL fixture events, re-fed as a 3-chunk stream: the twin claim
-    // is that batch boundaries and arrival order cannot change the final
-    // sketch (register max is order-free), so the last streamed emission
-    // per day must equal the batch-side daily state w22 merges
-    val ev = Tables.load(spark, "/root/testdata/sf0.001", "events")
-      .select(col("ts"), col("user_id")).collect()
-      .map(r => (r.getTimestamp(0).toInstant.toString, r.getLong(1)))
-    import scala.jdk.CollectionConverters._
-    ev.grouped((ev.length + 2) / 3).zipWithIndex.foreach { case (chunk, i) =>
-      Files.write(src.resolve(s"c$i.json"),
-        chunk.map { case (t, u) => s"""{"ts":"$t","user_id":$u}""" }.toSeq.asJava)
-    }
-    val schema = StructType(Seq(
-      StructField("ts", TimestampType), StructField("user_id", LongType)))
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).json(src.toString)
-      val q = CdcStream.sketchStream(stream)
-        .writeStream.format("memory").queryName("sk_out")
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // registers only grow -> both emitted columns are monotone per day,
-      // so max-per-day IS the final state
-      val got = spark.table("sk_out").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .groupBy(_._1).map { case (d, g) =>
-          (d, g.map(_._2).max, g.map(_._3).max)
-        }.toSeq.sorted
-      val expected = graft.queries.Events.sketchRegisterRows(
-          Tables.load(spark, "/root/testdata/sf0.001", "events"))
-        .groupBy(col("d"), col("reg")).agg(max(col("rho")).as("mrho"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .groupBy(_._1).map { case (d, g) =>
-          val regs = g.map(x => x._2 -> x._3).toMap
-          (d, regs.size.toLong,
-            graft.queries.Events.sketchEstimate(
-              scala.collection.mutable.Map(regs.toSeq: _*)))
-        }.toSeq.sorted
-      assert(got === expected, "streamed sketch state diverges from batch")
     } finally {
       prev match {
         case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
@@ -640,7 +260,7 @@ class StreamingOpsSpec extends SparkSpec
     try {
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).json(src.toString)
-      val q = CdcStream.attributionStream(stream, "uid", "ts", "eid", "etype",
+      val q = EventStreams.attributionStream(stream, "uid", "ts", "eid", "etype",
           gapUs = 4L * 3600 * 1000000)
         .writeStream.format("memory").queryName("at_out")
         .option("checkpointLocation", ckpt.toString)
@@ -701,7 +321,7 @@ class StreamingOpsSpec extends SparkSpec
     try {
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).json(src.toString)
-      val q = CdcStream.decayAttributionStream(stream, "uid", "ts", "eid", "etype", "value")
+      val q = EventStreams.decayAttributionStream(stream, "uid", "ts", "eid", "etype", "value")
         .writeStream.format("memory").queryName("da_out")
         .option("checkpointLocation", ckpt.toString)
         .trigger(Trigger.AvailableNow())
@@ -733,28 +353,6 @@ class StreamingOpsSpec extends SparkSpec
         case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
     }
-  }
-
-  test("streamStaticDedup flags incoming docs against the static corpus index") {
-    import spark.implicits._
-    val src = tmp("ssd-src"); val ckpt = tmp("ssd-ck")
-    Files.write(src.resolve("in.json"), java.util.Arrays.asList(
-      """{"id":100,"ts":"2024-01-01T00:00:00.000Z","payload":"known-text"}""",
-      """{"id":101,"ts":"2024-01-01T00:00:01.000Z","payload":"fresh-text"}"""))
-
-    val index = Seq(("known-text", 7L)).toDF("payload", "keeper_id")
-    val stream = spark.readStream.schema(eventSchema).json(src.toString)
-    val q = CdcStream.streamStaticDedup(stream, index, "payload", "keeper_id")
-      .select(col("id"), col("dup_of"))
-      .writeStream.format("memory").queryName("ssd_out")
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    val got = spark.table("ssd_out")
-      .collect().map(r => (r.getLong(0), Option(r.get(1)))).toSet
-    assert(got === Set((100L, Some(7L)), (101L, None)))
   }
 
   test("streaming near-dup: projection signatures equal the batch pipeline; arriving clone flags") {
@@ -795,46 +393,14 @@ class StreamingOpsSpec extends SparkSpec
     assert(got.forall(_._3 >= 0.5))
   }
 
-  test("streamIntervalJoin pairs events within the bound, evicts beyond it") {
-    val clicks = tmp("cl"); val buys = tmp("by"); val ckpt = tmp("jj-ck")
-    Files.write(clicks.resolve("c.json"), java.util.Arrays.asList(
-      """{"id":7,"ts":"2024-01-01T00:10:00.000Z","payload":"click-in-window"}""",
-      """{"id":7,"ts":"2024-01-01T00:40:00.000Z","payload":"click-after"}""",
-      """{"id":7,"ts":"2023-12-31T22:00:00.000Z","payload":"click-too-old"}""",
-      """{"id":8,"ts":"2024-01-01T00:15:00.000Z","payload":"other-user"}"""))
-    Files.write(buys.resolve("b.json"), java.util.Arrays.asList(
-      """{"id":7,"ts":"2024-01-01T00:30:00.000Z","payload":"purchase"}"""))
-
-    val clickStream = spark.readStream.schema(eventSchema).json(clicks.toString)
-      .select(col("id"), col("ts").as("click_ts"), col("payload").as("click"))
-    val buyStream = spark.readStream.schema(eventSchema).json(buys.toString)
-      .select(col("id"), col("ts").as("buy_ts"), col("payload").as("buy"))
-
-    val q = CdcStream.streamIntervalJoin(
-        buyStream, clickStream,
-        key = "id", leftTs = "buy_ts", rightTs = "click_ts",
-        bound = "1 hour", watermark = "2 hours")
-      .select(col("l.id"), col("click"))
-      .writeStream.format("memory").queryName("jj_out")
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    val got = spark.table("jj_out")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    // only the click within [buy-1h, buy] for the same user joins
-    assert(got === Set((7L, "click-in-window")))
-  }
-
   // ---- per-user state TTL (the round-8 verdict's top scale item): the
   // four per-user twins thread `ttl` through to the state store, so
   // years of one-shot users cannot accumulate in RocksDB forever. Two
   // proofs: (a) an IDLE key's state expires — later events for it find
   // nothing; (b) WITHIN the horizon results are unchanged vs the no-TTL
   // (= batch-rule-equivalent) run. A TTL'd query runs in processing-time
-  // mode and never self-terminates (documented on statefulLatestTws), so
-  // these poll the sink and stop explicitly.
+  // mode and never self-terminates (documented on
+  // EventStreams.ttlTimeMode), so these poll the sink and stop explicitly.
 
   private val twinSchema = StructType(Seq(
     StructField("uid", LongType), StructField("ts", TimestampType),
@@ -899,16 +465,16 @@ class StreamingOpsSpec extends SparkSpec
     withRocksDb {
       val hugeGap = 100L * 3600 * 1000000 // so only the TTL can suppress
       val qs = Seq(
-        CdcStream.funnelStream(stream(fnSrc), "uid", "ts", "eid", "etype", ttl)
+        EventStreams.funnelStream(stream(fnSrc), "uid", "ts", "eid", "etype", ttl)
           .writeStream.format("memory").queryName("fnttl_out")
           .option("checkpointLocation", fnCk.toString).start(),
-        CdcStream.attributionStream(stream(atSrc), "uid", "ts", "eid", "etype", hugeGap, ttl)
+        EventStreams.attributionStream(stream(atSrc), "uid", "ts", "eid", "etype", hugeGap, ttl)
           .writeStream.format("memory").queryName("atttl_out")
           .option("checkpointLocation", atCk.toString).start(),
-        CdcStream.transitionStream(stream(trSrc), "uid", "ts", "eid", "etype", hugeGap, ttl)
+        EventStreams.transitionStream(stream(trSrc), "uid", "ts", "eid", "etype", hugeGap, ttl)
           .writeStream.format("memory").queryName("trttl_out")
           .option("checkpointLocation", trCk.toString).start(),
-        CdcStream.decayAttributionStream(stream(dcSrc), "uid", "ts", "eid", "etype", "value", ttl)
+        EventStreams.decayAttributionStream(stream(dcSrc), "uid", "ts", "eid", "etype", "value", ttl)
           .writeStream.format("memory").queryName("dcttl_out")
           .option("checkpointLocation", dcCk.toString).start())
       try {
@@ -951,8 +517,7 @@ class StreamingOpsSpec extends SparkSpec
             // memory-sink rows land during addBatch but the batch's
             // progress entry is appended in finishTrigger — poll past
             // that gap instead of racing it
-            def evictions() = graft.streaming.QueryMonitor
-              .stateEvictions(q.recentProgress.toSeq)
+            def evictions() = EventStreams.stateEvictions(q.recentProgress.toSeq)
             val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
             while (evictions() < 1L && System.nanoTime() < deadline)
               Thread.sleep(200)
@@ -1009,16 +574,16 @@ class StreamingOpsSpec extends SparkSpec
     withRocksDb {
       val hugeGap = 100L * 3600 * 1000000
       val qs = Seq(
-        CdcStream.funnelStream(stream(fnSrc), "uid", "ts", "eid", "etype", ttl)
+        EventStreams.funnelStream(stream(fnSrc), "uid", "ts", "eid", "etype", ttl)
           .writeStream.format("memory").queryName("fnh_out")
           .option("checkpointLocation", fnCk.toString).start(),
-        CdcStream.attributionStream(stream(atSrc), "uid", "ts", "eid", "etype", hugeGap, ttl)
+        EventStreams.attributionStream(stream(atSrc), "uid", "ts", "eid", "etype", hugeGap, ttl)
           .writeStream.format("memory").queryName("ath_out")
           .option("checkpointLocation", atCk.toString).start(),
-        CdcStream.transitionStream(stream(trSrc), "uid", "ts", "eid", "etype", hugeGap, ttl)
+        EventStreams.transitionStream(stream(trSrc), "uid", "ts", "eid", "etype", hugeGap, ttl)
           .writeStream.format("memory").queryName("trh_out")
           .option("checkpointLocation", trCk.toString).start(),
-        CdcStream.decayAttributionStream(stream(dcSrc), "uid", "ts", "eid", "etype", "value", ttl)
+        EventStreams.decayAttributionStream(stream(dcSrc), "uid", "ts", "eid", "etype", "value", ttl)
           .writeStream.format("memory").queryName("dch_out")
           .option("checkpointLocation", dcCk.toString).start())
       try {
