@@ -25,27 +25,15 @@ object Bucketing {
     * exchanges but its parallelism IS the bucket count — the former
     * fixed 8 capped every expansion join at 8 of 32 local cores
     * (measured on d7, OPTIMIZATION_r14.md), and at cluster scale a
-    * constant is wronger still. Overridable per session via
-    * `graft.index.buckets` for deployments whose table lifetime spans
-    * differently-sized clusters (bucket count is a WRITE-time property;
-    * pick it for the readers).
+    * constant is wronger still.
     */
   def indexBuckets(spark: org.apache.spark.sql.SparkSession): Int =
-    spark.conf.getOption("graft.index.buckets").map { v =>
-      val n = try v.toInt catch {
-        case e: NumberFormatException => throw new IllegalArgumentException(
-          s"graft.index.buckets must be a positive integer, got '$v'", e)
-      }
-      require(n > 0, s"graft.index.buckets must be > 0, got $n")
-      n
-    }.getOrElse(spark.sparkContext.defaultParallelism)
+    spark.sparkContext.defaultParallelism
 
   /** Bucket-aligned write chain for the index/signature tables: the
     * repartition and the bucket spec are built from ONE [[indexBuckets]]
-    * evaluation, so a mid-chain `graft.index.buckets` change (the conf
-    * is runtime-mutable; ABProbe exists precisely to flip confs between
-    * runs) cannot desync the task partitioning from the bucket count
-    * and silently reintroduce the partitions x buckets small-file
+    * evaluation, so the task partitioning cannot desync from the bucket
+    * count and silently reintroduce the partitions x buckets small-file
     * explosion the alignment removes (ADVICE r14). HashPartitioning and
     * the bucket spec share the Murmur3-pmod placement over the same key
     * list, so each task holds exactly one bucket: numBuckets files per

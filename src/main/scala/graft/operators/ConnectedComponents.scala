@@ -38,12 +38,15 @@ import org.apache.spark.sql.functions._
   *    count (the classic iterative-Spark failure mode); the round's row
   *    count and set signature ride the SAME write action as observed
   *    metrics, so no round pays a separate full-scan stat job;
-  *  - [[TableRounds]] is the production store: rounds persist to
+  *  - [[TableRounds]] is the production store: EVERY round persists to
   *    alternating plain-parquet catalog tables, so a lost executor recomputes
   *    from durable parquet instead of killing the job (the failure mode
   *    of `localCheckpoint`, whose blocks are executor-local and
-  *    non-resilient). [[CheckpointRounds]] remains for small/ephemeral
-  *    graphs where table churn isn't worth it;
+  *    non-resilient). A cadence that wrote every k-th round and cached
+  *    the rounds between was A/B'd 1.2-1.8x slower on d12/d26/d28
+  *    (OPTIMIZATION_r14.md): at these edge-set sizes a parquet write
+  *    costs less than building a cached relation. [[CheckpointRounds]]
+  *    remains for small/ephemeral graphs where table churn isn't worth it;
   *  - convergence is a deterministic set-equality check (count match +
   *    empty EXCEPT); the observed xor signature only SKIPS the EXCEPT
   *    when it proves the sets differ — it is never trusted to declare
@@ -87,13 +90,6 @@ object ConnectedComponents {
       * see an ACTIVE run, however long a round takes). Default: no-op.
       */
     def withLiveness[T](f: => T): T = f
-    /** Called once on the CONVERGED edge set before [[run]] builds the
-      * returned labels from it: a store whose last round was ephemeral
-      * must promote it to durable here (the labels frame outlives the
-      * fixpoint loop). Default: the round is already as durable as this
-      * store gets.
-      */
-    def seal(df: DataFrame, round: Int): DataFrame = df
     /** Drop any state left by a previous run under the same prefix.
       * Default: stateless store, nothing to drop. */
     def reset(): Unit = ()
@@ -103,46 +99,6 @@ object ConnectedComponents {
     * their executor — use for tests and small ephemeral graphs only. */
   case object CheckpointRounds extends RoundStore {
     override def put(df: DataFrame, round: Int): DataFrame = df.localCheckpoint()
-  }
-
-  /** Captures `graft_cc_rows_*` observed metrics from round writes, one
-    * QueryExecutionListener per session (weakly held): the public
-    * [[org.apache.spark.sql.Observation]] `get` blocks with NO timeout,
-    * and a metric that never arrives must degrade to a count job, not
-    * hang the fixpoint — so the capture is a map + deadline poll.
-    * Entries are removed when read; a timed-out round leaks one boxed
-    * Long per run at most.
-    */
-  private object ObservedCounts {
-    private val counts =
-      new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
-    private val sessions = java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-    def ensureListener(spark: SparkSession): Unit = sessions.synchronized {
-      if (sessions.add(spark)) {
-        spark.listenerManager.register(
-          new org.apache.spark.sql.util.QueryExecutionListener {
-            override def onSuccess(funcName: String,
-                qe: org.apache.spark.sql.execution.QueryExecution,
-                durationNs: Long): Unit =
-              qe.observedMetrics.foreach { case (name, row) =>
-                if (name.startsWith("graft_cc_rows_"))
-                  counts.put(name, (row.getLong(0),
-                    if (row.isNullAt(1)) 0L else row.getLong(1)))
-              }
-            override def onFailure(funcName: String,
-                qe: org.apache.spark.sql.execution.QueryExecution,
-                exception: Exception): Unit = ()
-          })
-      }
-    }
-    def take(name: String, deadlineNanos: Long): Option[(Long, Long)] = {
-      var v = counts.remove(name)
-      while (v == null && System.nanoTime() < deadlineNanos) {
-        Thread.sleep(2); v = counts.remove(name)
-      }
-      Option(v)
-    }
   }
 
   /** Durable rounds: each edge set is written to one of two alternating
@@ -168,28 +124,24 @@ object ConnectedComponents {
     override def reset(): Unit =
       Seq(0, 1).foreach(g => ReplicaTable.dropTableAndLocation(spark, s"${prefix}_$g"))
     /** The round count AND set signature folded into the round WRITE via
-      * observed metrics (`Dataset.observe` read back through
-      * [[ObservedCounts]]' QueryExecutionListener): the saveAsTable
-      * action that materializes the round also computes both, so the
-      * fixpoint's per-round stat job (a full re-scan of the just-written
-      * table) disappears — at bench scale that was one of ~3 jobs per
-      * round; at 100 TB it is a TB-scale table scan per round. Falls
-      * back to the plain stat job if the metrics do not arrive inside
-      * the deadline (listener-bus delivery is asynchronous), so the
+      * observed metrics (a fresh [[org.apache.spark.sql.Observation]] per
+      * round): the saveAsTable action that materializes the round also
+      * computes both, so the fixpoint's per-round stat job (a full
+      * re-scan of the just-written table) disappears — at bench scale
+      * that was one of ~3 jobs per round; at 100 TB it is a TB-scale
+      * table scan per round. The observation completes from an
+      * asynchronous listener, so the wait is bounded: metrics that do
+      * not arrive inside it fall back to the plain stat job, and the
       * convergence compare never sees wrong or missing stats.
       */
     override def putCounted(df: DataFrame, round: Int): (DataFrame, Long, Long) = {
-      ObservedCounts.ensureListener(spark)
-      val metric = s"graft_cc_rows_${prefix}_$round"
-      val out = put(df.observe(metric,
+      val obs = org.apache.spark.sql.Observation(s"graft_cc_rows_${prefix}_$round")
+      val out = put(df.observe(obs,
         count(lit(1)).as("rows"), bit_xor(roundSig).as("sig")), round)
-      ObservedCounts.take(metric,
-          System.nanoTime() + 10L * 1000 * 1000 * 1000) match {
-        case Some((n, sig)) => (out, n, sig)
-        case None =>
-          val r = out.agg(count(lit(1)), bit_xor(roundSig)).head()
-          (out, r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-      }
+      val r = scala.util.Try(scala.concurrent.Await.result(
+          obs.future, scala.concurrent.duration.Duration(10, "s")))
+        .getOrElse(out.agg(count(lit(1)), bit_xor(roundSig)).head())
+      (out, r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
     override def put(df: DataFrame, round: Int): DataFrame = {
       // phase-boundary heartbeat (the ticker in withLiveness covers a
@@ -212,99 +164,6 @@ object ConnectedComponents {
       LivenessMarker.whileAlive(fs, warehousePrefix)(f)
   }
 
-  /** Durable-cadence rounds: every `durableEvery`-th round (and always
-    * round 0 and the converged final round) persists through the
-    * underlying [[TableRounds]]; rounds in between are cached with
-    * `persist(MEMORY_AND_DISK)` and — crucially — KEEP their lineage,
-    * which is rooted at the last durable table's parquet scan. So:
-    *
-    *  - executor loss between durable rounds recomputes only the lost
-    *    PARTITIONS, ≤ `durableEvery-1` star rounds deep, from durable
-    *    parquet (lineage recompute — not a job restart; contrast
-    *    `localCheckpoint`, whose truncated lineage makes a lost block
-    *    fatal);
-    *  - plan depth stays bounded at `durableEvery` rounds, resetting to a
-    *    table scan at each durable round — the unbounded-lineage failure
-    *    mode of iterative Spark cannot re-enter;
-    *  - round I/O drops `durableEvery`-fold: at 100 TB the edge set is
-    *    TB-sized and the per-round parquet write dominates the fixpoint,
-    *    so writing every k-th round is the checkpoint-interval tradeoff
-    *    every iterative framework ends up at (cf. GraphX Pregel's
-    *    periodic checkpointing).
-    *
-    * Durable writes go to the underlying tables by a PRIVATE alternating
-    * generation counter, NOT the raw round number: consecutive durable
-    * rounds are `durableEvery` apart, so with an even cadence raw round
-    * parities would all hit the SAME table — and `TableRounds.put` drops
-    * the target before writing, i.e. it would drop the very table the
-    * in-flight lineage roots at (observed as FILE_NOT_EXIST mid-write).
-    * The generation counter alternates per durable WRITE, so each write
-    * targets the table the current lineage does NOT read. [[seal]]
-    * promotes an ephemeral final round through the same counter.
-    */
-  final case class CadencedRounds(underlying: TableRounds, durableEvery: Int = 3)
-      extends RoundStore {
-    require(durableEvery >= 1, s"durableEvery must be >= 1, got $durableEvery")
-    private var durableGen = 0
-    private val ephemerals = scala.collection.mutable.Queue.empty[DataFrame]
-    private var lastWasDurable = false
-    private def putDurable(df: DataFrame): DataFrame = {
-      val out = underlying.put(df, durableGen)
-      durableGen += 1
-      out
-    }
-    override def put(df: DataFrame, round: Int): DataFrame = {
-      // rounds older than the previous one are outside the convergence
-      // compare window — release their blocks before caching more
-      while (ephemerals.size > 1) ephemerals.dequeue().unpersist(blocking = false)
-      lastWasDurable = round % durableEvery == 0
-      if (lastWasDurable) putDurable(df)
-      else {
-        val out = df.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        ephemerals.enqueue(out)
-        out
-      }
-    }
-    /** Durable rounds inherit [[TableRounds]]' observed-stat write (by
-      * the private generation counter, like [[put]]); ephemeral rounds
-      * pay the one-job stat agg, which doubles as the action that
-      * materializes the persist — no extra work either way. */
-    override def putCounted(df: DataFrame, round: Int): (DataFrame, Long, Long) = {
-      while (ephemerals.size > 1) ephemerals.dequeue().unpersist(blocking = false)
-      lastWasDurable = round % durableEvery == 0
-      if (lastWasDurable) {
-        val out = underlying.putCounted(df, durableGen)
-        durableGen += 1
-        out
-      } else {
-        val out = df.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        ephemerals.enqueue(out)
-        val r = out.agg(count(lit(1)), bit_xor(roundSig)).head()
-        (out, r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-      }
-    }
-    private def releaseEphemerals(): Unit = {
-      ephemerals.foreach(_.unpersist(blocking = false))
-      ephemerals.clear()
-    }
-    override def seal(df: DataFrame, round: Int): DataFrame = {
-      val out = if (lastWasDurable) df else putDurable(df)
-      releaseEphemerals()
-      out
-    }
-    // release mid-burst caches even when the fixpoint FAILS before
-    // seal() (non-convergence require, job failure): withLiveness wraps
-    // the whole run, so its finally is the one hook that always fires —
-    // without it, up to two rounds of MEMORY_AND_DISK edge-set blocks
-    // (TB-sized in exactly the regime this store exists for) stay
-    // registered until the application exits. Idempotent after seal.
-    override def withLiveness[T](f: => T): T =
-      try underlying.withLiveness(f) finally releaseEphemerals()
-    override def reset(): Unit = underlying.reset()
-  }
-
   /** A fresh durable [[TableRounds]] for a query family (e.g.
     * `cc_d12`): mints a per-run unique prefix — two concurrent runs (or
     * two sessions sharing a warehouse) never drop each other's round
@@ -320,34 +179,6 @@ object ConnectedComponents {
     val prefix = s"${family}_${java.lang.Long.toHexString(System.nanoTime())}"
     sweepOrphanRoundDirs(spark, family)
     TableRounds(spark, prefix)
-  }
-
-  /** [[freshTableRounds]] wrapped in the durable-cadence store: same
-    * per-run unique prefix and orphan sweep, `durableEvery`-fold less
-    * round I/O, same durable final table for the returned labels.
-    */
-  def freshCadencedRounds(
-      spark: SparkSession, family: String, durableEvery: Int = 3): CadencedRounds =
-    CadencedRounds(freshTableRounds(spark, family), durableEvery)
-
-  /** The round store the dedup-cluster queries use, selected by
-    * `graft.cc.durableEvery` (default 1): 1 = every round goes to a
-    * durable table — MEASURED fastest at bench scale, where the edge
-    * sets are MB-sized and a parquet write costs less than building an
-    * in-memory cached relation (persist at sf0.1 cost d12 ~+2 s; see
-    * SURVEY round 9); k > 1 = [[CadencedRounds]], writing every k-th
-    * round and holding the rounds between in lineage-rooted cache — the
-    * right trade once a round's edge set is large enough that its
-    * parquet write dominates the fixpoint (TB-scale corpora), which is
-    * exactly when the cache build is amortized. One conf flips the
-    * fleet; correctness is identical (ConnectedComponentsSpec proves
-    * label equality across cadences).
-    */
-  def freshRounds(spark: SparkSession, family: String): RoundStore = {
-    val k = spark.conf.getOption("graft.cc.durableEvery").map(_.toInt).getOrElse(1)
-    require(k >= 1, s"graft.cc.durableEvery must be >= 1, got $k")
-    if (k == 1) freshTableRounds(spark, family)
-    else freshCadencedRounds(spark, family, k)
   }
 
   /** Remove round-table DIRECTORIES orphaned by earlier JVMs: the
@@ -523,15 +354,11 @@ object ConnectedComponents {
       s"connected components did not converge within $maxIters rounds " +
         "(two-phase star rounds are O(log² n) — this indicates a bug or " +
         "an absurd maxIters; raise it only with evidence)")
-    // the returned labels outlive the loop: promote an ephemeral final
-    // round to the store's durable form (no-op for already-durable stores)
-    e = store.seal(e, iter)
     // the labeling below assumes a STAR fixpoint (each non-root node has
     // exactly one parent edge); a non-star fixpoint would silently emit
     // duplicate label rows — make that contract violation fail loudly.
-    // Usually already computed, overlapped with the convergence EXCEPT
-    // (same data pre/post seal); the fallback covers the empty-graph
-    // path where the loop never ran.
+    // Usually already computed, overlapped with the convergence EXCEPT;
+    // the fallback covers the empty-graph path where the loop never ran.
     require(starOk.getOrElse(starViolationFree(e)),
       "converged edge set is not a star (a node has multiple parents) — " +
         "labeling would duplicate rows; this indicates a star-round bug")

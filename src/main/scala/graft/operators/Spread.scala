@@ -128,7 +128,12 @@ object Spread {
     */
   def reuse(spark: SparkSession, df: DataFrame, path: String): DataFrame = {
     val maxBytes = spark.conf.getOption("graft.reuse.maxSourceBytes")
-      .map(_.toLong).getOrElse(1L << 30)
+      .map { v =>
+        val n = v.toLongOption.getOrElse(throw new IllegalArgumentException(
+          s"graft.reuse.maxSourceBytes must be a non-negative byte count, got '$v'"))
+        require(n >= 0, s"graft.reuse.maxSourceBytes must be >= 0, got $n")
+        n
+      }.getOrElse(1L << 30)
     if (bytesOf(spark, path) < maxBytes) df.localCheckpoint(false) else df
   }
 }

@@ -82,10 +82,6 @@ object Documents {
       .select(col("doc_id"), T.tokens(coalesce(col("text"), lit(""))).as("toks"))
       .select(col("doc_id"), T.shingles(col("toks"), 3).as("shs"))
 
-  /** Exact dedup over a deterministically duplicated corpus (the fixture
-    * has no exact dups, so union a shifted copy — dedup then provably
-    * collapses 2 copies to the min-id keeper).
-    */
   /** Loud guard for the corpus-augmenting queries' +1M/+2M doc_id
     * offsets: an id collision corrupts results IDENTICALLY in both
     * engines — the oracle replays the same arithmetic, so the gate can
@@ -113,6 +109,10 @@ object Documents {
     }
   }
 
+  /** Exact dedup over a deterministically duplicated corpus (the fixture
+    * has no exact dups, so union a shifted copy — dedup then provably
+    * collapses 2 copies to the min-id keeper).
+    */
   def d1ExactDedup(spark: SparkSession, dir: String): DataFrame = {
     val d = docs(spark, dir).select(col("doc_id"), col("text"))
     requireIdHeadroom(spark, dir, d, 1000000L)
@@ -314,12 +314,6 @@ object Documents {
       |WHERE inter * 1.0 / (sa.n + sb.n - inter) >= 0.8
       |ORDER BY da, db""".stripMargin
 
-  /** Wide MinHash signatures: one column per seeded hash, computed as
-    * `array_min(transform(shingles, s -> h_i(s)))` — a pure projection
-    * over the shingle array. ZERO shuffles to build all 16 signature
-    * lanes (the naive layout explodes rows 16x and shuffles a groupBy);
-    * per-doc cost is 16 x |shingles| md5s inside whole-stage codegen.
-    */
   /** Multiply-shift lane constants: lane_i(u) = u * A_i + B_i on the
     * 64-bit ring (A odd => bijection). One md5 per shingle total; the
     * lanes are two long ops each — vs hashing every shingle once per
@@ -458,15 +452,6 @@ object Documents {
       .dropDuplicates("doc_id", "dup_of")
   }
 
-  /** The scoring tail shared by d6 and d21: per candidate pair, the
-    * matching-lane fraction estimates Jaccard; threshold, dedup the
-    * multi-band repeats (identical estimate from every band), order.
-    */
-  /** [[scoreMinhashPairs]] without the output ordering — for consumers
-    * that union or re-aggregate the scored pairs (EliminateSorts does
-    * NOT remove a sort under a Union, so ordering a side that gets
-    * re-ordered after the union is a wasted exchange).
-    */
   /** Count of agreeing MinHash lanes between two signature columns —
     * the ONE definition of the estimator's numerator (previously
     * restated by the d6 scorer, the streaming gate, p8, d32 and d35;
@@ -479,6 +464,11 @@ object Documents {
         .otherwise(0))
       .reduce(_ + _)
 
+  /** [[scoreMinhashPairs]] without the output ordering — for consumers
+    * that union or re-aggregate the scored pairs (EliminateSorts does
+    * NOT remove a sort under a Union, so ordering a side that gets
+    * re-ordered after the union is a wasted exchange).
+    */
   private[graft] def scoreMinhashPairsUnordered(pairs: DataFrame): DataFrame = {
     val matches = laneMatches(col("a.m"), col("b.m"))
     pairs
@@ -488,6 +478,10 @@ object Documents {
       .distinct() // same pair from multiple bands has identical est
   }
 
+  /** The scoring tail shared by d6 and d21: per candidate pair, the
+    * matching-lane fraction estimates Jaccard; threshold, dedup the
+    * multi-band repeats (identical estimate from every band), order.
+    */
   private[graft] def scoreMinhashPairs(pairs: DataFrame): DataFrame =
     scoreMinhashPairsUnordered(pairs).orderBy(col("da"), col("db"))
 
@@ -500,10 +494,6 @@ object Documents {
     s"($i, ${aU % (BigInt(1) << 32)}, ${aU >> 32}, ${java.lang.Long.toUnsignedString(b)})"
   }.mkString(", ")
 
-  /** d6's CTE chain through `est` (candidate pairs + lane-match
-    * estimate), shared by the d6/d21 oracles and d23's cluster oracle
-    * (which extends it with a recursive component walk).
-    */
   /** The hash -> 16-lane fold -> band-signature chain over an upstream
     * CTE named `sh` providing (doc_id, s) item rows — ONE copy of the
     * oracle's MinHash arithmetic for every consumer (the d6 shingle
@@ -556,6 +546,10 @@ object Documents {
       |       LATERAL (SELECT unnest(generate_series(1, len(w) - 2)) AS i)
       |  WHERE len(w) >= 3)""".stripMargin
 
+  /** d6's CTE chain through `est` (candidate pairs + lane-match
+    * estimate), shared by the d6/d21 oracles and d23's cluster oracle
+    * (which extends it with a recursive component walk).
+    */
   private[graft] lazy val minhashCtesSql: String =
     s"""${shinglesShSql("documents")},
       |$minhashSigChainSql,
@@ -686,15 +680,6 @@ object Documents {
       |  COUNT(*) AS n_docs
       |FROM documents GROUP BY 1, 2 ORDER BY lang, lang_pred""".stripMargin
 
-  /** Char-n-gram language ID, the real profile-based variant: top-20
-    * trigrams per language are learned from the corpus (frequency-ranked,
-    * deterministic ties), every document is scored against every profile
-    * through a broadcast join on the trigram, and the argmax profile wins.
-    * Deterministic end-to-end (integer counts, total tie orders), so the
-    * oracle replays it exactly. One gram explode feeds both the profile
-    * build and the scoring — at scale the profile side is tiny and
-    * broadcast, the scoring side is a scan-shaped aggregation.
-    */
   /** The d9 per-document prediction (doc_id, plang) — shared by d9's
     * confusion matrix and d38's per-source label-noise audit so both
     * readouts are guaranteed to describe the SAME classifier.
@@ -736,6 +721,15 @@ object Documents {
       .select(col("doc_id"), col("plang"))
   }
 
+  /** Char-n-gram language ID, the real profile-based variant: top-20
+    * trigrams per language are learned from the corpus (frequency-ranked,
+    * deterministic ties), every document is scored against every profile
+    * through a broadcast join on the trigram, and the argmax profile wins.
+    * Deterministic end-to-end (integer counts, total tie orders), so the
+    * oracle replays it exactly. One gram explode feeds both the profile
+    * build and the scoring — at scale the profile side is tiny and
+    * broadcast, the scoring side is a scan-shaped aggregation.
+    */
   def d9LangIdNgram(spark: SparkSession, dir: String): DataFrame =
     docs(spark, dir).select(col("doc_id"), col("lang"))
       .join(d9Pred(spark, dir), Seq("doc_id"), "left")
@@ -917,13 +911,11 @@ object Documents {
       .filter(col("src") =!= col("dst"))
     // durable rounds: each star iteration persists to a plain-parquet
     // catalog table, so executor loss recomputes from parquet (VERDICT
-    // r2 #2); graft.cc.durableEvery > 1 switches to the cadenced store
-    // (write every k-th round) for TB-scale edge sets; freshRounds
-    // handles the per-run unique prefix, previous-run reclamation, and
-    // orphan-dir sweep
+    // r2 #2); freshTableRounds handles the per-run unique prefix and
+    // the orphan-dir sweep
     val labels = graft.operators.ConnectedComponents.run(
       corpus.select(col("doc_id").as("id")), edges,
-      store = graft.operators.ConnectedComponents.freshRounds(spark, "cc_d12"))
+      store = graft.operators.ConnectedComponents.freshTableRounds(spark, "cc_d12"))
     val sizes = labels.groupBy(col("comp")).agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, "comp")
       .filter(col("cluster_size") >= 2)
@@ -1201,17 +1193,6 @@ object Documents {
         (col("span_end") - col("span_start") + 1).as("dup_tokens"))
   }
 
-  /** The second Gopher repetition rule next to d15's top-bigram share:
-    * the fraction of a document's word 3-grams that belong to a 3-gram
-    * occurring more than once IN THAT DOCUMENT ("fraction of tokens in
-    * duplicated n-grams"). Template/boilerplate text scores high.
-    *
-    * Same scale stance as d15: the statistic is entirely within one row,
-    * so no (doc, gram) explode+shuffle — sort the positional 3-gram
-    * array and fold run lengths once, a pure projection at any corpus
-    * size. Counts are exact ints, so the final ratio is one IEEE
-    * division and bit-matches the oracle.
-    */
   /** Instances inside duplicated runs (length >= 2) of a SORTED `g3`
     * gram array, via one linear fold: state (prev, run length, closed
     * dup count). The ONE definition of "duplicated-3-gram instances" —
@@ -1232,6 +1213,17 @@ object Documents {
       acc => acc.getField("d") +
         when(acc.getField("r") >= 2, acc.getField("r")).otherwise(lit(0L)))
 
+  /** The second Gopher repetition rule next to d15's top-bigram share:
+    * the fraction of a document's word 3-grams that belong to a 3-gram
+    * occurring more than once IN THAT DOCUMENT ("fraction of tokens in
+    * duplicated n-grams"). Template/boilerplate text scores high.
+    *
+    * Same scale stance as d15: the statistic is entirely within one row,
+    * so no (doc, gram) explode+shuffle — sort the positional 3-gram
+    * array and fold run lengths once, a pure projection at any corpus
+    * size. Counts are exact ints, so the final ratio is one IEEE
+    * division and bit-matches the oracle.
+    */
   def d19DupNgramFraction(spark: SparkSession, dir: String): DataFrame =
     docs(spark, dir)
       .filter(size(T.tokens(col("text"))) >= 3)
@@ -1478,10 +1470,9 @@ object Documents {
   /** Rows above which a shard-delta frame is NOT broadcast and the
     * affected-doc joins degrade to a shuffle. 4M doc_ids ≈ 32 MB on the
     * driver — comfortably inside default driver memory, far above any
-    * sane shard. Overridable per session (`graft.incremental
-    * .broadcastDeltaMax`) for clusters with tighter driver budgets.
+    * sane shard.
     */
-  private val DeltaBroadcastMaxKey = "graft.incremental.broadcastDeltaMax"
+  private val DeltaBroadcastMax = 4000000L
 
   /** Memoized shard slice counts: the guard count below re-scans the
     * persisted index on every query CONSTRUCTION otherwise (each bench
@@ -1507,10 +1498,9 @@ object Documents {
   private def maybeBroadcastShardDelta(
       spark: SparkSession, dir: String, shardMod: Long, idx: DataFrame,
       isShard: Column, affected: DataFrame): DataFrame = {
-    val ceiling = spark.conf.get(DeltaBroadcastMaxKey, "4000000").toLong
     val shardKgrams = shardKgramCounts.computeIfAbsent((dir, shardMod),
       _ => idx.filter(isShard).count()).longValue
-    if (2 * shardKgrams <= ceiling) broadcast(affected) else affected
+    if (2 * shardKgrams <= DeltaBroadcastMax) broadcast(affected) else affected
   }
 
   /** The shared base+shard k-gram index (one-time build per corpus:
@@ -2016,6 +2006,32 @@ object Documents {
       |  CAST(CASE WHEN fail_mask = 0 THEN 1 ELSE 0 END AS BIGINT) AS keep
       |FROM m ORDER BY doc_id""".stripMargin
 
+  /** d6-pair cluster labels, persisted once per (corpus, d6 params) —
+    * the first construction pays the pair expansion + CC fixpoint
+    * (durable round tables), every later pass (the second bench pass,
+    * a purge re-run) reads bucketed parquet; the round store is
+    * reclaimed once the labels are written. Shared by d23 (keeper
+    * election) and d43 (yield accounting) — one build serves both, the
+    * d31/p19 shared-chain discipline.
+    */
+  private def d6ClusterLabels(spark: SparkSession, dir: String): DataFrame =
+    graft.operators.PersistedIndex.ensure(
+      spark, "graft_cc_d23", dir,
+      sources = Seq(s"$dir/documents.parquet"),
+      params = "d6pairs cos=minhash0.5") { table =>
+      val pairs = d6MinhashLsh(spark, dir).select(col("da"), col("db"))
+      val nodes = pairs.select(col("da").as("id"))
+        .unionByName(pairs.select(col("db").as("id"))).distinct()
+      val store = graft.operators.ConnectedComponents.freshTableRounds(spark, "cc_d23")
+      graft.operators.Bucketing.alignedBucketed(
+          graft.operators.ConnectedComponents.run(
+            nodes, pairs.select(col("da").as("src"), col("db").as("dst")),
+            store = store),
+          Seq("id"), Seq("id"))
+        .saveAsTable(table)
+      store.reset()
+    }
+
   /** d23: the purge manifest — the production END of fuzzy dedup.
     * d6's near-dup pairs become an undirected graph, connected
     * components (the same large-star/small-star operator as d12) give
@@ -2034,32 +2050,6 @@ object Documents {
     * it when it fits); keeper election is one window over the cluster
     * partitioning — the count and first_value share a single exchange.
     */
-  /** d6-pair cluster labels, persisted once per (corpus, d6 params) —
-    * the first construction pays the pair expansion + CC fixpoint
-    * (durable round tables), every later pass (the second bench pass,
-    * a purge re-run) reads bucketed parquet; the round store is
-    * reclaimed once the labels are written. Shared by d23 (keeper
-    * election) and d43 (yield accounting) — one build serves both, the
-    * d31/p19 shared-chain discipline.
-    */
-  private def d6ClusterLabels(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.PersistedIndex.ensure(
-      spark, "graft_cc_d23", dir,
-      sources = Seq(s"$dir/documents.parquet"),
-      params = "d6pairs cos=minhash0.5") { table =>
-      val pairs = d6MinhashLsh(spark, dir).select(col("da"), col("db"))
-      val nodes = pairs.select(col("da").as("id"))
-        .unionByName(pairs.select(col("db").as("id"))).distinct()
-      val store = graft.operators.ConnectedComponents.freshRounds(spark, "cc_d23")
-      graft.operators.Bucketing.alignedBucketed(
-          graft.operators.ConnectedComponents.run(
-            nodes, pairs.select(col("da").as("src"), col("db").as("dst")),
-            store = store),
-          Seq("id"), Seq("id"))
-        .saveAsTable(table)
-      store.reset()
-    }
-
   def d23CanonicalKeep(spark: SparkSession, dir: String): DataFrame = {
     val labels = d6ClusterLabels(spark, dir)
     val quality = docs(spark, dir).select(col("doc_id"),
@@ -2103,37 +2093,6 @@ object Documents {
       |  cluster_size
       |FROM sel ORDER BY cluster_id, doc_id""".stripMargin
 
-  /** d26: incremental duplicate clustering — the last leg of the
-    * incremental dedup story (d20 maintains substring spans, d21 the
-    * near-dup PAIRS; this maintains the CLUSTERS). The base corpus's
-    * connected-components fixpoint persists as its STAR EDGE SET
-    * (node → root, one row per non-isolated base node) — a star is the
-    * ideal incremental input because it preserves exactly the base
-    * graph's connectivity in depth 1 — and a new shard contributes only
-    * its delta pairs (d21's bucket-scoped expansion off the shared
-    * persisted signature table). Only components TOUCHED by a delta
-    * endpoint enter the re-convergence ([[d26Reconverge]]); untouched
-    * components' labels pass through verbatim, so star ∪ delta
-    * re-converges in O(log affected-component-size) rounds over
-    * affected-sized frames instead of O(log² n) over the full pair
-    * graph, and equality with the full rebuild is the oracle: the
-    * same recursive-CTE clustering over ALL of d6's pairs.
-    *
-    * Scale shape: at 100 TB + daily shard the dominant costs are
-    * shard-sized (shingle/hash the shard, expand only shard-touched
-    * buckets); the star table re-reads bucketed via broadcast
-    * semi/anti-joins (scans, not exchanges), and the CC fixpoint
-    * shuffles only affected components' rows — ScalingSpec's d26_delta
-    * probe pins that volume flat under a 10× corpus.
-    *
-    * LIMIT — additions only: connectivity is monotone under new edges,
-    * which is what makes the star a sufficient summary. Doc DELETION can
-    * split a cluster, and the star alone cannot answer it (it forgets
-    * the internal edge structure); the production path for deletes is
-    * to recompute components INTERSECTING the tombstone set from the
-    * retained pair tables (d21's persisted base/delta pairs) — still
-    * affected-components-sized; [[d28DeletionClusters]] IS that query.
-    */
   /** The persisted base-corpus star table (node → component root, one
     * row per non-isolated base node) — d26's previous-run summary,
     * built once per session/corpus like the signature table it derives
@@ -2153,7 +2112,7 @@ object Documents {
           graft.operators.ConnectedComponents.run(
             baseNodes, basePairs,
             store = graft.operators.ConnectedComponents
-              .freshRounds(spark, "cc_d26b")),
+              .freshTableRounds(spark, "cc_d26b")),
           Seq("id"), Seq("id"))
         .saveAsTable(table)
     }
@@ -2199,7 +2158,7 @@ object Documents {
       .unionByName(deltaNodes).distinct()
     graft.operators.ConnectedComponents.run(
       nodes, starEdges.unionByName(delta),
-      store = graft.operators.ConnectedComponents.freshRounds(spark, ccTag))
+      store = graft.operators.ConnectedComponents.freshTableRounds(spark, ccTag))
   }
 
   /** d26's delta branch alone for ScalingSpec's fixed-shard gate: the
@@ -2249,6 +2208,37 @@ object Documents {
     untouched.unionByName(reconverged)
   }
 
+  /** d26: incremental duplicate clustering — the last leg of the
+    * incremental dedup story (d20 maintains substring spans, d21 the
+    * near-dup PAIRS; this maintains the CLUSTERS). The base corpus's
+    * connected-components fixpoint persists as its STAR EDGE SET
+    * (node → root, one row per non-isolated base node) — a star is the
+    * ideal incremental input because it preserves exactly the base
+    * graph's connectivity in depth 1 — and a new shard contributes only
+    * its delta pairs (d21's bucket-scoped expansion off the shared
+    * persisted signature table). Only components TOUCHED by a delta
+    * endpoint enter the re-convergence ([[d26Reconverge]]); untouched
+    * components' labels pass through verbatim, so star ∪ delta
+    * re-converges in O(log affected-component-size) rounds over
+    * affected-sized frames instead of O(log² n) over the full pair
+    * graph, and equality with the full rebuild is the oracle: the
+    * same recursive-CTE clustering over ALL of d6's pairs.
+    *
+    * Scale shape: at 100 TB + daily shard the dominant costs are
+    * shard-sized (shingle/hash the shard, expand only shard-touched
+    * buckets); the star table re-reads bucketed via broadcast
+    * semi/anti-joins (scans, not exchanges), and the CC fixpoint
+    * shuffles only affected components' rows — ScalingSpec's d26_delta
+    * probe pins that volume flat under a 10× corpus.
+    *
+    * LIMIT — additions only: connectivity is monotone under new edges,
+    * which is what makes the star a sufficient summary. Doc DELETION can
+    * split a cluster, and the star alone cannot answer it (it forgets
+    * the internal edge structure); the production path for deletes is
+    * to recompute components INTERSECTING the tombstone set from the
+    * retained pair tables (d21's persisted base/delta pairs) — still
+    * affected-components-sized; [[d28DeletionClusters]] IS that query.
+    */
   def d26IncrementalClusters(spark: SparkSession, dir: String): DataFrame = {
     val delta = incDeltaScored(spark, dir)
       .select(col("da").as("src"), col("db").as("dst"))
@@ -2279,15 +2269,6 @@ object Documents {
       |FROM cc ORDER BY cluster_id, doc_id""".stripMargin
 
 
-  /** The RECOMPUTE branch of deletion-aware cluster maintenance: find
-    * the components intersecting the tombstone set, re-run CC on their
-    * surviving pairs. Shared verbatim by [[d28DeletionClusters]] and
-    * ScalingSpec's fixed-tombstone probe (which feeds MATERIALIZED
-    * labels/pairs — production's previous-run tables — and holds the
-    * tombstone COUNT fixed while the corpus grows, asserting the
-    * affected subgraph's exchange volume tracks the tombstones, not the
-    * corpus).
-    */
   /** The clusters intersecting the tombstone set — the single source of
     * the "affected" notion d28's pass-through and recompute branches
     * share (a tiny broadcast frame).
@@ -2297,6 +2278,15 @@ object Documents {
     labels.filter(pmod(col("doc_id"), lit(tombMod)) === 0)
       .select(col("cluster_id")).distinct()
 
+  /** The RECOMPUTE branch of deletion-aware cluster maintenance: find
+    * the components intersecting the tombstone set, re-run CC on their
+    * surviving pairs. Shared verbatim by [[d28DeletionClusters]] and
+    * ScalingSpec's fixed-tombstone probe (which feeds MATERIALIZED
+    * labels/pairs — production's previous-run tables — and holds the
+    * tombstone COUNT fixed while the corpus grows, asserting the
+    * affected subgraph's exchange volume tracks the tombstones, not the
+    * corpus).
+    */
   private[graft] def deletionRecompute(
       spark: SparkSession, labels: DataFrame, allPairs: DataFrame,
       tombMod: Long, ccTag: String): DataFrame = {
@@ -2314,7 +2304,7 @@ object Documents {
       .unionByName(subPairs.select(col("dst").as("id"))).distinct()
     graft.operators.ConnectedComponents.run(
         subNodes, subPairs,
-        store = graft.operators.ConnectedComponents.freshRounds(spark, ccTag))
+        store = graft.operators.ConnectedComponents.freshTableRounds(spark, ccTag))
       .select(col("comp").as("cluster_id"), col("id").as("doc_id"))
   }
 
@@ -2327,22 +2317,6 @@ object Documents {
       .unionByName(incDeltaScored(spark, dir))
       .select(col("da").as("src"), col("db").as("dst"))
 
-  /** d28: deletion-aware cluster maintenance — the OTHER direction of
-    * incremental clustering. d26 exploits that connectivity is monotone
-    * under ADDED edges; deletions break that (removing a doc can split
-    * its cluster), and the persisted star is insufficient for them (it
-    * forgets internal edge structure). The production recipe, executed
-    * here: take the pre-deletion labels (d26's star ∪ delta result,
-    * re-read from the persisted previous-run table — [[incLabels]]),
-    * find the components INTERSECTING the tombstone set (a tiny
-    * broadcast set), re-run CC only on those components' surviving
-    * pairs re-read from the retained pair tables, and pass every
-    * untouched component through verbatim — deletion cost scales with
-    * the affected components, not the corpus. Survivors that lose their
-    * last pair drop out (consistent with the pair-graph node set);
-    * equality with the full rebuild over the post-deletion pair graph
-    * is the oracle.
-    */
   /** The persisted PRE-DELETION label table — d26's (cluster_id, doc_id)
     * output as the previous-run artifact d28 reads. Production
     * materializes labels between runs (d28's own scaladoc describes
@@ -2365,6 +2339,22 @@ object Documents {
         .saveAsTable(table)
     }
 
+  /** d28: deletion-aware cluster maintenance — the OTHER direction of
+    * incremental clustering. d26 exploits that connectivity is monotone
+    * under ADDED edges; deletions break that (removing a doc can split
+    * its cluster), and the persisted star is insufficient for them (it
+    * forgets internal edge structure). The production recipe, executed
+    * here: take the pre-deletion labels (d26's star ∪ delta result,
+    * re-read from the persisted previous-run table — [[incLabels]]),
+    * find the components INTERSECTING the tombstone set (a tiny
+    * broadcast set), re-run CC only on those components' surviving
+    * pairs re-read from the retained pair tables, and pass every
+    * untouched component through verbatim — deletion cost scales with
+    * the affected components, not the corpus. Survivors that lose their
+    * last pair drop out (consistent with the pair-graph node set);
+    * equality with the full rebuild over the post-deletion pair graph
+    * is the oracle.
+    */
   def d28DeletionClusters(spark: SparkSession, dir: String): DataFrame = {
     val allPairs = incAllPairs(spark, dir)
     // the previous run's labels, re-read from the persisted table (the
@@ -2597,11 +2587,6 @@ object Documents {
     }.orderBy(col("merge_rank"))
   }
 
-  /** d29's oracle: the identical rounds unrolled as a CTE chain — round
-    * k's 1-row merge pick feeds round k's rewrite via a cross join, so
-    * the oracle derives every merge itself (no values copied from the
-    * Spark side).
-    */
   /** The d29 training chain as WITH-body clauses (w, v, r1..r9, p_k,
     * m_k), shared by d29's merge-table oracle and d33's encode oracle.
     * The r frames carry `word` so the final frame r{n+1} doubles as the
@@ -2630,6 +2615,11 @@ object Documents {
       |$rounds""".stripMargin
   }
 
+  /** d29's oracle: the identical rounds unrolled as a CTE chain — round
+    * k's 1-row merge pick feeds round k's rewrite via a cross join, so
+    * the oracle derives every merge itself (no values copied from the
+    * Spark side).
+    */
   val d29Sql: String = {
     val out = (1 to BpeMerges)
       .map(k => s"SELECT $k AS merge_rank, lhs, rhs, cnt FROM m$k")
@@ -2755,31 +2745,6 @@ object Documents {
   /** Fixed-point scale for d31's likelihood scores (parts-per-million). */
   private val LmScale = 1000000L
 
-  /** d31: bigram-LM quality scoring — the CCNet filter shape (Wenzek et
-    * al. 2020: score web text under an LM trained on a trusted corpus;
-    * low likelihood = drop candidate). The trusted slice here is the
-    * `lang = 'en'` documents (d25's target-domain convention); the model
-    * is Laplace-smoothed bigram counts over that slice, and every doc
-    * scores by its mean per-occurrence likelihood.
-    *
-    * Engine-exactness: classic perplexity is a libm-log geometric mean,
-    * so the score is instead the arithmetic mean of the smoothed bigram
-    * probabilities in parts-per-million, all-integer —
-    * lik(w1 w2) = (c(w1 w2) + 1) · 10^6 DIV (c(w1 ·) + V), V = trusted
-    * vocabulary size — monotone in each bigram's probability, total on
-    * unseen contexts (1·10^6 DIV V), and bit-identical across engines.
-    *
-    * Scale shape (100 TB): TWO corpus passes — one folds the trusted
-    * slice into the bigram model (vocab²-bounded, in practice Zipf-tiny),
-    * one scores; CCNet's own shape. The model materializes once (lazy
-    * localCheckpoint) and BOTH derived artifacts fold from it, not from
-    * the corpus: the left-context rollup sums the model's counts, and the
-    * vocabulary count is distinct(w1 ∪ w2) over the model's bigrams —
-    * exact, because every token of a ≥2-token doc borders some bigram.
-    * All three broadcast; the only corpus-keyed shuffle is the per-doc
-    * (doc, bigram) grid agg. Output is the drop list a curator reviews:
-    * the bottom-25 docs by mean likelihood.
-    */
   /** The d31 per-doc LM-likelihood frame (doc_id, lang, n_bigrams,
     * mean_lik_ppm) WITHOUT d31's presentation order/limit — shared by
     * d31 (worst-25 report) and p19 (CCNet head/middle/tail buckets), so
@@ -2846,6 +2811,31 @@ object Documents {
         expr("SUM(cnt * lik) DIV SUM(cnt)").as("mean_lik_ppm"))
   }
 
+  /** d31: bigram-LM quality scoring — the CCNet filter shape (Wenzek et
+    * al. 2020: score web text under an LM trained on a trusted corpus;
+    * low likelihood = drop candidate). The trusted slice here is the
+    * `lang = 'en'` documents (d25's target-domain convention); the model
+    * is Laplace-smoothed bigram counts over that slice, and every doc
+    * scores by its mean per-occurrence likelihood.
+    *
+    * Engine-exactness: classic perplexity is a libm-log geometric mean,
+    * so the score is instead the arithmetic mean of the smoothed bigram
+    * probabilities in parts-per-million, all-integer —
+    * lik(w1 w2) = (c(w1 w2) + 1) · 10^6 DIV (c(w1 ·) + V), V = trusted
+    * vocabulary size — monotone in each bigram's probability, total on
+    * unseen contexts (1·10^6 DIV V), and bit-identical across engines.
+    *
+    * Scale shape (100 TB): TWO corpus passes — one folds the trusted
+    * slice into the bigram model (vocab²-bounded, in practice Zipf-tiny),
+    * one scores; CCNet's own shape. The model materializes once (lazy
+    * localCheckpoint) and BOTH derived artifacts fold from it, not from
+    * the corpus: the left-context rollup sums the model's counts, and the
+    * vocabulary count is distinct(w1 ∪ w2) over the model's bigrams —
+    * exact, because every token of a ≥2-token doc borders some bigram.
+    * All three broadcast; the only corpus-keyed shuffle is the per-doc
+    * (doc, bigram) grid agg. Output is the drop list a curator reviews:
+    * the bottom-25 docs by mean likelihood.
+    */
   def d31LmQuality(spark: SparkSession, dir: String): DataFrame =
     lmScored(spark, dir)
       .orderBy(col("mean_lik_ppm"), col("doc_id"))

@@ -520,21 +520,6 @@ object Events {
       |  cm_est - exact_count AS overestimate
       |FROM ranked WHERE rank <= 20 ORDER BY rank""".stripMargin
 
-  /** w13: ordered-funnel analysis — per user, the earliest strictly-
-    * increasing view → click → purchase chain: t1 = first view, t2 =
-    * first click AFTER t1, t3 = first purchase AFTER t2. The greedy
-    * earliest chain is the standard funnel semantics (ClickHouse
-    * `windowFunnel`, Amplitude-style) and — unlike "any subsequence
-    * exists" — each step time is a pure function of the event SET
-    * (min over a filtered set), so the result is deterministic under
-    * any partitioning, arrival order, or timestamp ties.
-    *
-    * Physical shape: NO self-joins (the naive funnel is a 3-way
-    * self-join on user_id) — three stacked window minima over the SAME
-    * user partitioning collapse into one exchange + one per-user sort;
-    * the per-user rollup rides the same partitioning. At 100 TB this is
-    * one shuffle of (user, type, ts) triples, nothing else.
-    */
   /** The shared funnel computation (per-user earliest strictly-
     * increasing stage times) w13 reports and w25 bands — one
     * definition so the chaining rule can never drift between them.
@@ -557,6 +542,21 @@ object Events {
         max(col("t3_us")).as("t3_us"))
   }
 
+  /** w13: ordered-funnel analysis — per user, the earliest strictly-
+    * increasing view → click → purchase chain: t1 = first view, t2 =
+    * first click AFTER t1, t3 = first purchase AFTER t2. The greedy
+    * earliest chain is the standard funnel semantics (ClickHouse
+    * `windowFunnel`, Amplitude-style) and — unlike "any subsequence
+    * exists" — each step time is a pure function of the event SET
+    * (min over a filtered set), so the result is deterministic under
+    * any partitioning, arrival order, or timestamp ties.
+    *
+    * Physical shape: NO self-joins (the naive funnel is a 3-way
+    * self-join on user_id) — three stacked window minima over the SAME
+    * user partitioning collapse into one exchange + one per-user sort;
+    * the per-user rollup rides the same partitioning. At 100 TB this is
+    * one shuffle of (user, type, ts) triples, nothing else.
+    */
   def w13Funnel(spark: SparkSession, dir: String): DataFrame = {
     funnelTimes(spark, dir)
       .select(col("user_id"), col("t1_us"), col("t2_us"), col("t3_us"),
@@ -1143,6 +1143,25 @@ object Events {
       |  CAST(MAX(gap_us) AS BIGINT) AS max_gap_us
       |FROM b GROUP BY 1 ORDER BY gap_bucket""".stripMargin
 
+  /** The w22 register derivation: (day_idx, reg, rho) per event, rho
+    * saturated at P=20. Trailing-zero rank on a NON-NEGATIVE domain:
+    * (x & -x) - 1 is the trailing-zero mask, bit_count counts it; x = 0
+    * exhausts the 32 hash bits -> rank 33 (saturates to 20).
+    */
+  private def sketchRegisterRows(events: DataFrame): DataFrame = {
+    val h = graft.functions.HashFunctions.md5NumberBigEndian(
+      concat(lit("u:"), col("user_id").cast("string")))
+    events
+      .select(expr("unix_micros(ts) DIV 86400000000").as("d"), col("user_id"))
+      .withColumn("hu", pmod(h, lit(1099511627776L))) // 2^40, non-negative
+      .withColumn("reg", col("hu") % 256)
+      .withColumn("x", expr("hu DIV 256"))
+      .withColumn("rho", least(when(col("x") === 0, lit(33L))
+        .otherwise(expr("CAST(bit_count((x & -x) - 1) AS BIGINT) + 1")),
+        lit(20L)))
+      .select(col("d"), col("reg"), col("rho"))
+  }
+
   /** w22: MERGEABLE-SKETCH ROLLING DISTINCT — the pattern that actually
     * serves "distinct users, trailing 7 days" at 100 TB: the corpus is
     * touched ONCE to build per-day HLL-style register sketches (m=256
@@ -1169,25 +1188,6 @@ object Events {
     * join appears anywhere; at scale you'd persist the daily grid and
     * skip the exact side entirely.
     */
-  /** The w22 register derivation: (day_idx, reg, rho) per event, rho
-    * saturated at P=20. Trailing-zero rank on a NON-NEGATIVE domain:
-    * (x & -x) - 1 is the trailing-zero mask, bit_count counts it; x = 0
-    * exhausts the 32 hash bits -> rank 33 (saturates to 20).
-    */
-  private def sketchRegisterRows(events: DataFrame): DataFrame = {
-    val h = graft.functions.HashFunctions.md5NumberBigEndian(
-      concat(lit("u:"), col("user_id").cast("string")))
-    events
-      .select(expr("unix_micros(ts) DIV 86400000000").as("d"), col("user_id"))
-      .withColumn("hu", pmod(h, lit(1099511627776L))) // 2^40, non-negative
-      .withColumn("reg", col("hu") % 256)
-      .withColumn("x", expr("hu DIV 256"))
-      .withColumn("rho", least(when(col("x") === 0, lit(33L))
-        .otherwise(expr("CAST(bit_count((x & -x) - 1) AS BIGINT) + 1")),
-        lit(20L)))
-      .select(col("d"), col("reg"), col("rho"))
-  }
-
   def w22SketchMerge(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.load(spark, dir, "events")
     val daily = sketchRegisterRows(ev)

@@ -34,13 +34,6 @@ object MultimodalQ {
       |  COUNT(DISTINCT md5(text)) AS n_distinct
       |FROM documents GROUP BY 1 ORDER BY format""".stripMargin
 
-  /** Planted real-codec artifacts: every 25th doc contributes one tiny
-    * constant-value RGB PNG encoded by the JDK's ImageIO, with
-    * dimensions and pixel value pure functions of doc_id — so an
-    * arithmetic oracle can value-check a REAL encode→decode round-trip.
-    * Synthesis runs in the same mapPartitions codec seam as the decode
-    * (distributed; no driver-side image loop).
-    */
   /** The planted-media synthesis seam shared by m2's constant PNGs,
     * m6's PCM WAVs and m7's gradient PNGs: every Nth doc contributes one
     * artifact, synthesized in the same mapPartitions codec seam the
@@ -66,6 +59,13 @@ object MultimodalQ {
       }(enc)
   }
 
+  /** Planted real-codec artifacts: every 25th doc contributes one tiny
+    * constant-value RGB PNG encoded by the JDK's ImageIO, with
+    * dimensions and pixel value pure functions of doc_id — so an
+    * arithmetic oracle can value-check a REAL encode→decode round-trip.
+    * Synthesis runs in the same mapPartitions codec seam as the decode
+    * (distributed; no driver-side image loop).
+    */
   private def pngMedia(spark: SparkSession, dir: String): DataFrame =
     plantedMedia(spark, dir, every = 25, offset = 2000000L, fmt = "image/png")(
       id => M.syntheticPng(

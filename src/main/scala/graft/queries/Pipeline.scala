@@ -48,13 +48,6 @@ object Pipeline {
   private def docs(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "documents")
 
-  /** p1: split each document into overlapping context windows. A chunk
-    * starts every `ChunkStride` tokens; the count is
-    * 1 + ceil(max(0, len - ChunkSize) / ChunkStride), so the last window
-    * is the first one to reach the end of the document (no degenerate
-    * all-inside-previous tails). Emits the chunk's token count and an
-    * md5 of its text — the downstream join key for chunk-level dedup.
-    */
   /** Chunk count for a `len`-token doc — the ONE definition of the
     * chunking delivery rule, shared by the chunker (p1) and its audit
     * (p25): p25's whole claim is that it audits the real delivery, so
@@ -65,6 +58,13 @@ object Pipeline {
   private def nChunksCol(len: Column): Column = lit(1) +
     ceil(greatest(len - ChunkSize, lit(0)).cast("double") / ChunkStride).cast("int")
 
+  /** p1: split each document into overlapping context windows. A chunk
+    * starts every `ChunkStride` tokens; the count is
+    * 1 + ceil(max(0, len - ChunkSize) / ChunkStride), so the last window
+    * is the first one to reach the end of the document (no degenerate
+    * all-inside-previous tails). Emits the chunk's token count and an
+    * md5 of its text — the downstream join key for chunk-level dedup.
+    */
   def p1Chunking(spark: SparkSession, dir: String): DataFrame = {
     val len = size(col("w"))
     val nChunks = nChunksCol(len)
@@ -164,11 +164,6 @@ object Pipeline {
       |FROM train t JOIN bench b ON t.s = b.s
       |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin
 
-  /** p4: top-5 TF-IDF terms per document (doc_id < 20). The idf is the
-    * exact rational N/df instead of ln(N/df): one IEEE division is
-    * bit-identical across engines, while libm log implementations are
-    * not — and the RANKING is the same either way (ln is monotone).
-    */
   /** (doc_id, term) exploded tokens of non-empty docs, tokenized ONCE
     * (select-then-filter, the r12 discipline p1/p3/p9/p25 follow — the
     * former filter-then-explode split the same O(len) split into two
@@ -182,6 +177,11 @@ object Pipeline {
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
       .select(col("doc_id"), explode(col("w")).as("term"))
 
+  /** p4: top-5 TF-IDF terms per document (doc_id < 20). The idf is the
+    * exact rational N/df instead of ln(N/df): one IEEE division is
+    * bit-identical across engines, while libm log implementations are
+    * not — and the RANKING is the same either way (ln is monotone).
+    */
   def p4Tfidf(spark: SparkSession, dir: String): DataFrame = {
     val tok = explodedTokens(spark, dir)
     val tf = tok.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
@@ -352,22 +352,13 @@ object Pipeline {
     * (row-multiply by #columns) feeding one aggregate — the costed-in
     * price of exactness; the 100 TB knob is swapping each for
     * approx_count_distinct (HLL, same plan shape, no Expand), kept exact
-    * by default so the DuckDB oracle can replay the values. The 100 TB
-    * form is one conf away: `graft.profile.approxDistinct=true` swaps
-    * every distinct count for the HLL sketch — the plan loses its
-    * Expand (asserted in PlanAuditSpec), columns and semantics are
-    * otherwise identical.
+    * so the DuckDB oracle can replay the values.
     */
   def p7Profile(spark: SparkSession, dir: String): DataFrame = {
-    val approx =
-      spark.conf.getOption("graft.profile.approxDistinct").contains("true")
-    def distinctOf(c: String) =
-      (if (approx) approx_count_distinct(col(c)) else countDistinct(col(c)))
-        .as(s"${c}_distinct")
     val cols = Seq("doc_id", "text", "lang", "source", "n_chars")
     val aggs = count(lit(1)).as("n_rows") +: cols.flatMap(c => Seq(
       sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}_nulls"),
-      distinctOf(c),
+      countDistinct(col(c)).as(s"${c}_distinct"),
       min(col(c)).cast("string").as(s"${c}_min"),
       max(col(c)).cast("string").as(s"${c}_max")))
     docs(spark, dir)
@@ -734,32 +725,6 @@ object Pipeline {
       |FROM s ORDER BY epoch, shard, pos""".stripMargin
   }
 
-  /** The BM25-scored candidate frame (qid < 3): (qid, doc_id, n_terms,
-    * score) — Okapi BM25 (Robertson-Spärck Jones probabilistic
-    * weighting), the scoring pipeline shared by p13's ranked retrieval
-    * and the fusion query's lexical leg ([[p27RankFusion]]), factored
-    * so both rank IDENTICAL scores.
-    *
-    * Determinism: p4's rational-idf discipline extends to the full BM25
-    * weight — the idf is the exact rational (N - df + 0.5)/(df + 0.5)
-    * + 1 (Lucene's +1 form, so weights stay positive) WITHOUT the ln
-    * around it: libm logs differ across engines in the last ULP while
-    * one IEEE division tree is bit-identical, and the ranking is
-    * unchanged (monotone). Per-term scores stay double (identical
-    * expression trees both engines); the per-document SUM goes through
-    * DECIMAL(18,6) so Spark's partial-agg order vs DuckDB's cannot
-    * produce last-ULP mismatches (the Relational.scala convention).
-    *
-    * Scale shape — retrieval runs against a PERSISTED INVERTED INDEX,
-    * not a per-query re-tokenize (what a real search tier does): one
-    * build per (corpus, params) writes the (term, doc_id, tf, dl) index
-    * bucketed by term, plus its one-row corpus stats. Query-time work is
-    * then bucket-layout aggregations (df needs no exchange), broadcasts
-    * of the tiny query-term frames, and exactly one corpus-keyed
-    * exchange — the final (qid, doc) score agg — plus the consumer's
-    * top-k window. The naive form re-pays three corpus aggregations per
-    * query.
-    */
   /** The persisted (term, doc_id, tf, dl) inverted index and its one-row
     * corpus stats — the build half of [[bm25Scored]], shared with
     * [[bm25Contrib]] so the streaming twin's static side can never drift
@@ -829,6 +794,32 @@ object Pipeline {
     }
   }
 
+  /** The BM25-scored candidate frame (qid < 3): (qid, doc_id, n_terms,
+    * score) — Okapi BM25 (Robertson-Spärck Jones probabilistic
+    * weighting), the scoring pipeline shared by p13's ranked retrieval
+    * and the fusion query's lexical leg ([[p27RankFusion]]), factored
+    * so both rank IDENTICAL scores.
+    *
+    * Determinism: p4's rational-idf discipline extends to the full BM25
+    * weight — the idf is the exact rational (N - df + 0.5)/(df + 0.5)
+    * + 1 (Lucene's +1 form, so weights stay positive) WITHOUT the ln
+    * around it: libm logs differ across engines in the last ULP while
+    * one IEEE division tree is bit-identical, and the ranking is
+    * unchanged (monotone). Per-term scores stay double (identical
+    * expression trees both engines); the per-document SUM goes through
+    * DECIMAL(18,6) so Spark's partial-agg order vs DuckDB's cannot
+    * produce last-ULP mismatches (the Relational.scala convention).
+    *
+    * Scale shape — retrieval runs against a PERSISTED INVERTED INDEX,
+    * not a per-query re-tokenize (what a real search tier does): one
+    * build per (corpus, params) writes the (term, doc_id, tf, dl) index
+    * bucketed by term, plus its one-row corpus stats. Query-time work is
+    * then bucket-layout aggregations (df needs no exchange), broadcasts
+    * of the tiny query-term frames, and exactly one corpus-keyed
+    * exchange — the final (qid, doc) score agg — plus the consumer's
+    * top-k window. The naive form re-pays three corpus aggregations per
+    * query.
+    */
   private[graft] def bm25Scored(spark: SparkSession, dir: String): DataFrame = {
     val (idx, stats) = bm25Index(spark, dir)
     val dft = idx.groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -1214,21 +1205,6 @@ object Pipeline {
       |  CAST(SUM(fill_ppm) // COUNT(*) AS BIGINT) AS mean_fill_ppm
       |FROM b GROUP BY band ORDER BY band""".stripMargin
 
-  /** p18: REPEAT-FACTOR (epochs-per-source) PLAN — the data-constrained
-    * scaling readout: given a training budget of half the corpus's
-    * tokens and a UNIFORM per-source target (the deliberately simple
-    * policy; d22's temperature mix is the smooth one), how many times
-    * over must each source be repeated (ppm, i.e. 1e6 = exactly one
-    * epoch)? Sources below target repeat >1×; the cap at 4 epochs is
-    * the published point where repetition stops buying loss. All
-    * integer DIV arithmetic, so the compare is exact.
-    *
-    * Scale shape: one map-side-combined hash agg to per-source token
-    * counts (|sources| rows), a broadcast 1-row total, and pure
-    * projection — the corpus is touched once, output is |sources|.
-    * At 100 TB, total*1e6 approaches Long range; production widens the
-    * ppm step to DECIMAL(38,0) — same formula, same truncation.
-    */
   /** Per-source token supply — the ONE definition both mixing-family
     * allocators (p18's repeat plan, p20's waterfill) draw from, so they
     * can never disagree about a source's supply. NULL-text docs
@@ -1244,6 +1220,21 @@ object Pipeline {
       .select(col("source"), size(T.tokens(col("text"))).cast("long").as("nt"))
       .groupBy(col("source")).agg(sum(col("nt")).as("supply_tokens"))
 
+  /** p18: REPEAT-FACTOR (epochs-per-source) PLAN — the data-constrained
+    * scaling readout: given a training budget of half the corpus's
+    * tokens and a UNIFORM per-source target (the deliberately simple
+    * policy; d22's temperature mix is the smooth one), how many times
+    * over must each source be repeated (ppm, i.e. 1e6 = exactly one
+    * epoch)? Sources below target repeat >1×; the cap at 4 epochs is
+    * the published point where repetition stops buying loss. All
+    * integer DIV arithmetic, so the compare is exact.
+    *
+    * Scale shape: one map-side-combined hash agg to per-source token
+    * counts (|sources| rows), a broadcast 1-row total, and pure
+    * projection — the corpus is touched once, output is |sources|.
+    * At 100 TB, total*1e6 approaches Long range; production widens the
+    * ppm step to DECIMAL(38,0) — same formula, same truncation.
+    */
   def p18RepeatFactor(spark: SparkSession, dir: String): DataFrame = {
     val perSrc = perSourceTokens(spark, dir)
       .withColumnRenamed("supply_tokens", "n_tokens")
@@ -1468,6 +1459,10 @@ object Pipeline {
       |  CAST(SUM(drift_ppm) OVER () // 2 AS BIGINT) AS tv_ppm
       |FROM d ORDER BY source, lang""".stripMargin
 
+  /** Cap on p22's single-partition prefix frame: the bucket-total table
+    * the global running sum runs over never exceeds this many rows. */
+  private val CurriculumPrefixBuckets = 4096L
+
   /** p22: CURRICULUM BATCHES — order the corpus easy-to-hard by a
     * difficulty proxy (mean token length, ppm — short-word docs first)
     * and cut it into fixed-size training batches; the report is one row
@@ -1494,10 +1489,6 @@ object Pipeline {
     * through ONE partition — the exact anti-pattern this shape exists
     * to avoid.
     */
-  /** Cap on p22's single-partition prefix frame: the bucket-total table
-    * the global running sum runs over never exceeds this many rows. */
-  private val CurriculumPrefixBuckets = 4096L
-
   def p22CurriculumBatches(spark: SparkSession, dir: String): DataFrame = {
     val batchSize = 32L
     val sRaw = Tables.load(spark, dir, "documents")

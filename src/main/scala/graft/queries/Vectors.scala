@@ -65,16 +65,6 @@ object Vectors {
   private def emb(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "embeddings")
 
-  /** The planted-near-duplicate convention of the neardup/LSH family
-    * (d1's planted-signal discipline for vectors): every vector gains a
-    * clone at `vec_id + 1000000` with its FIRST component scaled by
-    * 1.05, perturbed in DOUBLE so the oracle replays it bitwise. ONE
-    * definition — v2/v5/v14/v15 previously each restated the offset
-    * and factor, so editing the perturbation in one spot silently broke
-    * only that query's planted-signal contract. Keeps only (vec_id, v):
-    * clones carry no label by design (they are corpus additions, not
-    * labeled members).
-    */
   /** Loud construction-time guard for [[cloneAugmented]]'s +1M vec_id
     * offset — Documents' requireIdHeadroom rule (r12 review): an id
     * collision corrupts results IDENTICALLY in both engines (the oracle
@@ -99,6 +89,16 @@ object Vectors {
     }
   }
 
+  /** The planted-near-duplicate convention of the neardup/LSH family
+    * (d1's planted-signal discipline for vectors): every vector gains a
+    * clone at `vec_id + 1000000` with its FIRST component scaled by
+    * 1.05, perturbed in DOUBLE so the oracle replays it bitwise. ONE
+    * definition — v2/v5/v14/v15 previously each restated the offset
+    * and factor, so editing the perturbation in one spot silently broke
+    * only that query's planted-signal contract. Keeps only (vec_id, v):
+    * clones carry no label by design (they are corpus additions, not
+    * labeled members).
+    */
   private def cloneAugmented(
       spark: SparkSession, dir: String, base: DataFrame): DataFrame = {
     requireIdHeadroom(spark, dir, base, 1000000L)
@@ -409,6 +409,46 @@ object Vectors {
       |SELECT qid, rank, cid, cosine FROM ranked WHERE rank <= 3
       |ORDER BY qid, rank""".stripMargin
 
+  /** (label, dim, ce9) fixed-point centroids packed to one DOUBLE[]
+    * row per cell — the ONE definition of the e9 unpack + dim sort
+    * (previously restated by ivfRanked/v29/v30 independently; a change
+    * to the fixed-point scale or sort key lives here and nowhere
+    * else). `cellCol` names the output key (`cell` for assignment
+    * flows, `label` for own-centroid joins).
+    */
+  private def centroidVecs(centLong: DataFrame, cellCol: String = "cell"): DataFrame =
+    centLong.groupBy(col("label").as(cellCol))
+      .agg(sort_array(collect_list(struct(col("dim"), col("ce9")))).as("cs"))
+      .select(col(cellCol),
+        transform(col("cs"), c => c.getField("ce9").cast("double") / 1e9).as("cvec"))
+
+  /** IVF cell assignment shared by v6/v8/v13: rank cells per vector by
+    * dot product against the broadcast centroid table (built from
+    * (label, dim, ce9) fixed-point means), keep the top `maxRank`.
+    * crank=1 is the home cell where the vector LIVES; higher cranks are
+    * what a multi-probe query additionally searches. Lazy
+    * localCheckpoint: the assignment feeds both the query side and the
+    * candidate side; without it the scoring+argmax subtree is planned
+    * twice (Spark plans are trees, and AQE misses sibling exchange
+    * reuse) — one materialization, read twice.
+    */
+  private def ivfRanked(
+      base: DataFrame, centLong: DataFrame, maxRank: Int,
+      keep: Seq[String] = Nil): DataFrame = {
+    val centroids = centroidVecs(centLong)
+    val w = Window.partitionBy(col("vec_id"))
+      .orderBy(dot(col("v"), col("cvec")).desc, col("cell"))
+    base.crossJoin(broadcast(centroids))
+      .withColumn("crank", row_number().over(w))
+      .filter(col("crank") <= maxRank)
+      // `keep`: extra columns carried through the assignment (e.g. the
+      // base's label, or the matched cell's cvec for residual coding) —
+      // ONE definition of the assignment tie-break serves the family
+      .select((Seq(col("vec_id"), col("v"), col("cell"), col("crank")) ++
+        keep.map(col)): _*)
+      .localCheckpoint(false)
+  }
+
   /** IVF with nprobe=2 AND measured recall — the knob a real ANN user
     * turns first when single-probe recall disappoints. Every vector LIVES
     * in its nearest cell (crank=1, same assignment as v6); each QUERY
@@ -428,46 +468,6 @@ object Vectors {
     * ONE window pass (r2 = plain row_number; r1 = running count of
     * crank-1 rows), so measuring recall costs no extra shuffle.
     */
-  /** IVF cell assignment shared by v6/v8/v13: rank cells per vector by
-    * dot product against the broadcast centroid table (built from
-    * (label, dim, ce9) fixed-point means), keep the top `maxRank`.
-    * crank=1 is the home cell where the vector LIVES; higher cranks are
-    * what a multi-probe query additionally searches. Lazy
-    * localCheckpoint: the assignment feeds both the query side and the
-    * candidate side; without it the scoring+argmax subtree is planned
-    * twice (Spark plans are trees, and AQE misses sibling exchange
-    * reuse) — one materialization, read twice.
-    */
-  /** (label, dim, ce9) fixed-point centroids packed to one DOUBLE[]
-    * row per cell — the ONE definition of the e9 unpack + dim sort
-    * (previously restated by ivfRanked/v29/v30 independently; a change
-    * to the fixed-point scale or sort key lives here and nowhere
-    * else). `cellCol` names the output key (`cell` for assignment
-    * flows, `label` for own-centroid joins).
-    */
-  private def centroidVecs(centLong: DataFrame, cellCol: String = "cell"): DataFrame =
-    centLong.groupBy(col("label").as(cellCol))
-      .agg(sort_array(collect_list(struct(col("dim"), col("ce9")))).as("cs"))
-      .select(col(cellCol),
-        transform(col("cs"), c => c.getField("ce9").cast("double") / 1e9).as("cvec"))
-
-  private def ivfRanked(
-      base: DataFrame, centLong: DataFrame, maxRank: Int,
-      keep: Seq[String] = Nil): DataFrame = {
-    val centroids = centroidVecs(centLong)
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(dot(col("v"), col("cvec")).desc, col("cell"))
-    base.crossJoin(broadcast(centroids))
-      .withColumn("crank", row_number().over(w))
-      .filter(col("crank") <= maxRank)
-      // `keep`: extra columns carried through the assignment (e.g. the
-      // base's label, or the matched cell's cvec for residual coding) —
-      // ONE definition of the assignment tie-break serves the family
-      .select((Seq(col("vec_id"), col("v"), col("cell"), col("crank")) ++
-        keep.map(col)): _*)
-      .localCheckpoint(false)
-  }
-
   def v8IvfNprobe(spark: SparkSession, dir: String): DataFrame = {
     val base = emb(spark, dir).select(col("vec_id"), col("label"),
       transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -553,20 +553,6 @@ object Vectors {
       |FROM wr w LEFT JOIN exact e ON w.qid = e.qid AND w.cid = e.cid
       |GROUP BY w.qid ORDER BY w.qid""".stripMargin
 
-  /** Int8 scalar quantization — the compression stage before ANN at
-    * 100 TB: per-dimension min/max over the corpus (one aggregation,
-    * 64 rows out), then a pure projection mapping every float to a
-    * [0,255] level, reported as the quantized checksum plus the worst
-    * per-vector reconstruction error in fixed-point. 4x memory and
-    * bandwidth off the vector table with a measured error bound.
-    *
-    * Parity: min/max are order-free (no summation), the quantize/
-    * dequantize formulas are written with IDENTICAL operation order in
-    * both engines, outputs are integers (floor / fixed-point e6) so no
-    * cross-row float summation exists; constant dimensions (mx = mn)
-    * quantize to 0 by an explicit guard in BOTH engines rather than
-    * relying on engine-specific NaN ordering inside the clamp.
-    */
   /** Per-dim (min, max) of the corpus packed into ONE broadcastable
     * row — the scalar-quantization training frame the SQ8 pair
     * (v7/v22) shares; previously each restated it verbatim, so a fix
@@ -593,6 +579,20 @@ object Vectors {
           (element_at(col("mxs"), i) - element_at(col("mns"), i))))))
       .otherwise(lit(0.0))
 
+  /** Int8 scalar quantization — the compression stage before ANN at
+    * 100 TB: per-dimension min/max over the corpus (one aggregation,
+    * 64 rows out), then a pure projection mapping every float to a
+    * [0,255] level, reported as the quantized checksum plus the worst
+    * per-vector reconstruction error in fixed-point. 4x memory and
+    * bandwidth off the vector table with a measured error bound.
+    *
+    * Parity: min/max are order-free (no summation), the quantize/
+    * dequantize formulas are written with IDENTICAL operation order in
+    * both engines, outputs are integers (floor / fixed-point e6) so no
+    * cross-row float summation exists; constant dimensions (mx = mn)
+    * quantize to 0 by an explicit guard in BOTH engines rather than
+    * relying on engine-specific NaN ordering inside the clamp.
+    */
   def v7Quantize(spark: SparkSession, dir: String): DataFrame = {
     val base = emb(spark, dir).select(col("vec_id"),
       transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -1065,27 +1065,21 @@ object Vectors {
     * production pipeline ships a trained codebook to its consumers).
     * The trace table writes FIRST: the centroid table is the existence
     * marker [[graft.operators.PersistedIndex.ensure]] checks, so a
-    * partial build can never be mistaken for a finished one. Set
-    * `graft.kmeans.persistModel=false` for the zero-side-effect inline
-    * chain.
+    * partial build can never be mistaken for a finished one.
     */
   private def lloydArtifacts(
       spark: SparkSession, dir: String, base: DataFrame): (DataFrame, DataFrame) = {
-    if (spark.conf.getOption("graft.kmeans.persistModel").contains("false"))
-      lloydRounds(spark, base, KmeansIters)
-    else {
-      val sources = Seq(s"$dir/embeddings.parquet")
-      val params = s"iters=$KmeansIters"
-      val centTable = graft.operators.PersistedIndex.ensure(
-        spark, "graft_kmeans_cent", dir, sources, params) { table =>
-        val (trace, cent) = lloydRounds(spark, base, KmeansIters)
-        trace.write.format("parquet").saveAsTable(s"${table}_trace")
-        cent.write.format("parquet").saveAsTable(table)
-      }
-      val traceName = graft.operators.PersistedIndex.scopedName(
-        spark, "graft_kmeans_cent", dir, sources, params) + "_trace"
-      (spark.table(traceName), centTable)
+    val sources = Seq(s"$dir/embeddings.parquet")
+    val params = s"iters=$KmeansIters"
+    val centTable = graft.operators.PersistedIndex.ensure(
+      spark, "graft_kmeans_cent", dir, sources, params) { table =>
+      val (trace, cent) = lloydRounds(spark, base, KmeansIters)
+      trace.write.format("parquet").saveAsTable(s"${table}_trace")
+      cent.write.format("parquet").saveAsTable(table)
     }
+    val traceName = graft.operators.PersistedIndex.scopedName(
+      spark, "graft_kmeans_cent", dir, sources, params) + "_trace"
+    (spark.table(traceName), centTable)
   }
 
   /** k-means driven to its fixed point (VERDICT r4 #4) — the convergence
@@ -2729,30 +2723,6 @@ object Vectors {
   private[graft] val MmrDepth = 20
   private[graft] val MmrK = 5
 
-  /** v28: DIVERSIFIED retrieval via maximal marginal relevance — the
-    * anti-redundancy selection a curation pipeline runs after ANN
-    * retrieval (near-duplicate neighbors waste a context window /
-    * training batch; MMR picks each next item by
-    * λ·rel(c) − (1−λ)·max_{s∈S} sim(c, s), trading relevance against
-    * similarity to what's already selected). Greedy and inherently
-    * sequential in k — but k is THE SMALL constant (5 here), so the
-    * loop unrolls into k dataframe stages over Q × depth frames while
-    * the corpus-sized work (the retrieval pool) stays one v1-discipline
-    * pass. Step 1's "max over the empty selected set" is defined 0 on
-    * both engines (the score is then λ·rel uniformly).
-    *
-    * Determinism: rel and pairwise sim are the v1 cosine (double-
-    * widened sequential fold — bit-identical to DuckDB's list_reduce);
-    * the MMR score is one fixed expression tree over them
-    * (λ·rel − (1−λ)·MAX(sim), MAX is order-free); ties break by cid.
-    *
-    * Scale shape: the pool is per-query top-[[MmrDepth]] (at corpus
-    * scale from an IVF probe — v6's path); pairwise sims are
-    * depth² × Q rows; each greedy step is a broadcast-sized join +
-    * argmax window. The pool+sims barrier materializes once
-    * (localCheckpoint) so the k unrolled stages never replan the
-    * corpus-sized retrieval subtree.
-    */
   /** The depth-bounded cosine retrieval pool — v1's broadcast-Q × scan-N
     * discipline (double-widened sequential-fold cosine, (rel DESC, cid)
     * tie-break), shared by v28's MMR pool and p27's vector leg so the
@@ -2778,6 +2748,30 @@ object Vectors {
       .filter(col("vrank") <= depth)
   }
 
+  /** v28: DIVERSIFIED retrieval via maximal marginal relevance — the
+    * anti-redundancy selection a curation pipeline runs after ANN
+    * retrieval (near-duplicate neighbors waste a context window /
+    * training batch; MMR picks each next item by
+    * λ·rel(c) − (1−λ)·max_{s∈S} sim(c, s), trading relevance against
+    * similarity to what's already selected). Greedy and inherently
+    * sequential in k — but k is THE SMALL constant (5 here), so the
+    * loop unrolls into k dataframe stages over Q × depth frames while
+    * the corpus-sized work (the retrieval pool) stays one v1-discipline
+    * pass. Step 1's "max over the empty selected set" is defined 0 on
+    * both engines (the score is then λ·rel uniformly).
+    *
+    * Determinism: rel and pairwise sim are the v1 cosine (double-
+    * widened sequential fold — bit-identical to DuckDB's list_reduce);
+    * the MMR score is one fixed expression tree over them
+    * (λ·rel − (1−λ)·MAX(sim), MAX is order-free); ties break by cid.
+    *
+    * Scale shape: the pool is per-query top-[[MmrDepth]] (at corpus
+    * scale from an IVF probe — v6's path); pairwise sims are
+    * depth² × Q rows; each greedy step is a broadcast-sized join +
+    * argmax window. The pool+sims barrier materializes once
+    * (localCheckpoint) so the k unrolled stages never replan the
+    * corpus-sized retrieval subtree.
+    */
   def v28MmrDiversify(spark: SparkSession, dir: String): DataFrame = {
     val pool = cosinePool(spark, dir, qMax = 10, depth = MmrDepth)
       .drop("vrank")

@@ -126,17 +126,10 @@ object JdbcSink {
     // is never overwritten-and-dropped
     val canonicalCkpt =
       new org.apache.hadoop.fs.Path(checkpointDir).toUri.normalize().toString
-    def stageFor(ckptSpelling: String) = s"${table}_stage_" +
+    val stage = s"${table}_stage_" +
       java.security.MessageDigest.getInstance("MD5")
-        .digest(ckptSpelling.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        .digest(canonicalCkpt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         .take(6).map(b => f"$b%02x").mkString
-    val stage = stageFor(canonicalCkpt)
-    // upgrade seam: versions that hashed the RAW spelling derived a
-    // different suffix for non-canonical configs, so a stage table
-    // crash-stranded by the OLD binary would never be reclaimed by the
-    // new name — sweep the legacy name once per query incarnation
-    val legacyStage = Option(stageFor(checkpointDir)).filter(_ != stage)
-    val legacySwept = new java.util.concurrent.atomic.AtomicBoolean(false)
     changes.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -193,29 +186,6 @@ object JdbcSink {
             }
             val st = conn.createStatement()
             try {
-              // the sweep is best-effort cleanup: only mark it done AFTER
-              // the DROP (or a definitive "nothing stranded") completes,
-              // and never let it fail the micro-batch — an unexpected
-              // SQLState (dialects beyond the four-state whitelist return
-              // their own codes, some drivers null SQLState) would
-              // otherwise crash-loop the query on a statement whose whole
-              // purpose is reclaiming a leftover
-              if (!legacySwept.get()) legacyStage match {
-                case None => legacySwept.set(true)
-                case Some(ls) =>
-                  try { st.executeUpdate(s"DROP TABLE $ls"); legacySwept.set(true) }
-                  catch {
-                    case e: java.sql.SQLException
-                        if Set("42X05", "42Y07", "42S02", "42P01")
-                          .contains(e.getSQLState) =>
-                      legacySwept.set(true) // nothing stranded
-                    case e: java.sql.SQLException =>
-                      System.err.println(
-                        s"[jdbc-sink] legacy stage sweep of $ls failed " +
-                          s"(SQLState ${e.getSQLState}): ${e.getMessage} — " +
-                          "will retry next batch")
-                  }
-              }
               if (!exists)
                 st.executeUpdate(
                   s"CREATE TABLE $table AS SELECT * FROM $stage WITH NO DATA")

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Producer-side operators: WAL entries -> keyed Kafka messages.
   *
@@ -49,15 +48,4 @@ object Producer {
       // (left-join miss -> null topic) are skipped, never sent to a
       // writer that throws on null topics
       .filter(col("topic").isNotNull)
-
-  /** K1: Kafka producer sink. `flush()` per batch ≙ micro-batch commit.
-    * Config-only in this environment (no broker); the message contract is
-    * exercised by the shaping functions above.
-    */
-  def kafkaSink(messages: DataFrame, bootstrap: String, checkpointDir: String): StreamingQuery =
-    messages.writeStream
-      .format("kafka")
-      .option("kafka.bootstrap.servers", bootstrap)
-      .option("checkpointLocation", checkpointDir)
-      .start()
 }

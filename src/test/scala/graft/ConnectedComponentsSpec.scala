@@ -88,90 +88,6 @@ class ConnectedComponentsSpec extends SparkSpec {
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
-  test("cadenced rounds: same labels, durable final table, no leaked cache") {
-    val nodes = (0L until 64L)
-    // long chain: converges in ~4-5 star rounds, so with durableEvery=3
-    // the run exercises durable round 0, ephemeral 1-2, durable 3,
-    // ephemeral 4..., and a seal promotion of an ephemeral final round
-    val edges = (1L until 64L).map(i => (i, i - 1))
-    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
-    try {
-      val store = ConnectedComponents.CadencedRounds(
-        TableRounds(spark, "cc_cad"), durableEvery = 3)
-      val labels = ConnectedComponents.run(
-        nodes.toDF("id"), edges.toDF("src", "dst"), store = store)
-      // labels identical to the all-durable and checkpoint stores
-      assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        === unionFind(nodes, edges))
-      // the CONVERGED round is durable: after evicting every cached block,
-      // the labels frame still evaluates (its lineage roots at the sealed
-      // catalog table's parquet, not at ephemeral persist blocks)
-      spark.sharedState.cacheManager.clearCache()
-      assert(labels.filter(col("comp") === 0L).count() === 64L)
-      val gens = Seq("cc_cad_0", "cc_cad_1").filter(spark.catalog.tableExists)
-      assert(gens.nonEmpty, "sealed final-round generation table must exist")
-      // every mid-burst persist was released at seal time. <=, not ===:
-      // earlier suites' lazy localCheckpoints linger in
-      // getPersistentRDDs until the ContextCleaner reclaims them, which
-      // can happen DURING this test — pre-existing entries disappearing
-      // is fine, this test's own persists surviving the seal is not
-      assert(spark.sparkContext.getPersistentRDDs.size <= cachedBefore,
-        "cadenced rounds leaked persisted RDDs past seal")
-    } finally Seq("cc_cad_0", "cc_cad_1")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-  }
-
-  test("cadenced rounds agree with union-find across cadences and graphs") {
-    val rnd = new scala.util.Random(7)
-    Seq(1, 2, 4).foreach { k =>
-      val nodes = (0L until 50L)
-      val edges = Seq.fill(55)((rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
-        .filter { case (a, b) => a != b }
-      try {
-        val got = labelsOf(nodes, edges,
-          store = ConnectedComponents.CadencedRounds(
-            TableRounds(spark, s"cc_cadk$k"), durableEvery = k))
-        assert(got === unionFind(nodes, edges), s"cadence $k diverged")
-      } finally Seq(s"cc_cadk${k}_0", s"cc_cadk${k}_1")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    }
-  }
-
-  test("cadenced rounds release mid-burst caches when the fixpoint FAILS pre-seal") {
-    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
-    try {
-      intercept[IllegalArgumentException] {
-        // maxIters=1 trips the non-convergence require AFTER round 1's
-        // ephemeral persist — seal() never runs; withLiveness's finally
-        // must release the cached blocks anyway
-        labelsOf(
-          nodes = (0L until 16L), edges = (1L until 16L).map(i => (i, i - 1)),
-          maxIters = 1,
-          store = ConnectedComponents.CadencedRounds(
-            TableRounds(spark, "cc_fail"), durableEvery = 3))
-      }
-      assert(spark.sparkContext.getPersistentRDDs.size === cachedBefore,
-        "failed fixpoint leaked persisted round caches")
-    } finally Seq("cc_fail_0", "cc_fail_1")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-  }
-
-  test("graft.cc.durableEvery selects the store: same labels either way") {
-    val rnd = new scala.util.Random(11)
-    val nodes = (0L until 40L)
-    val edges = Seq.fill(45)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
-      .filter { case (a, b) => a != b }
-    val expect = unionFind(nodes, edges)
-    Seq("1", "3").foreach { k =>
-      spark.conf.set("graft.cc.durableEvery", k)
-      try {
-        val got = labelsOf(nodes, edges,
-          store = ConnectedComponents.freshRounds(spark, "cc_conf"))
-        assert(got === expect, s"durableEvery=$k diverged")
-      } finally spark.conf.unset("graft.cc.durableEvery")
-    }
-  }
-
   test("windowed star rounds match the SoCC'14 definitions on random edge sets") {
     // r15 rewrote largeStar/smallStar from groupBy+join-back to a
     // single-exchange window MIN; this pins the per-round SET semantics
@@ -205,10 +121,31 @@ class ConnectedComponentsSpec extends SparkSpec {
 
   test("putCounted folds the round stats into the durable write") {
     val store = TableRounds(spark, "cc_obs")
+    // jobs started by `f`, counted by a listener drained after it returns
+    def jobsOf(f: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      org.apache.spark.GraftTestBridge.drainListeners(spark.sparkContext)
+      spark.sparkContext.addSparkListener(l)
+      try { f; org.apache.spark.GraftTestBridge.drainListeners(spark.sparkContext) }
+      finally spark.sparkContext.removeSparkListener(l)
+      jobs.get()
+    }
     try {
       val df = (0L until 257L).map(i => (i + 1, i)).toDF("src", "dst")
-      val (out, n, sig) = store.putCounted(df, 0)
-      assert(n === 257L, "observed/fallback count wrong")
+      // the stats ride the write itself: no job beyond a bare put's (the
+      // stat-job fallback would add at least one)
+      val putJobs = jobsOf(store.put(df, 1))
+      var counted: (org.apache.spark.sql.DataFrame, Long, Long) = null
+      val countedJobs = jobsOf { counted = store.putCounted(df, 0) }
+      assert(countedJobs <= putJobs,
+        s"putCounted ran $countedJobs jobs, a bare put $putJobs")
+      val (out, n, sig) = counted
+      assert(n === 257L, "observed count wrong")
       assert(out.count() === 257L)
       assert(spark.catalog.tableExists("cc_obs_0"))
       // the signature is deterministic: a permuted write of the SAME set

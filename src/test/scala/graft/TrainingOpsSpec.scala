@@ -131,13 +131,6 @@ class TrainingOpsSpec extends SparkSpec {
       assert(trace.last._3 === 0L, "chain did not reach its fixed point")
       assert(trace.sliding(2).forall(p => p(1)._2 <= p(0)._2),
         "assignment inertia increased between rounds")
-      // the gate: inline chain (no persisted model) is value-identical
-      val persisted = trace.toSeq
-      spark.conf.set("graft.kmeans.persistModel", "false")
-      val inline = V.v11KmeansConverged(spark, sf).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-      assert(inline === persisted, "inline chain differs from persisted model")
-      spark.conf.unset("graft.kmeans.persistModel")
       // v12/v13: 3 ADC-ranked rows per query, hit flags are 0/1, and
       // recall is measured in-query (at least one exact-top-3 hit
       // overall — the fixture's clusters make a zero-hit result a bug)
@@ -148,10 +141,7 @@ class TrainingOpsSpec extends SparkSpec {
         assert(hits.forall(h => h == 0L || h == 1L), s"$name hit flag out of range")
         assert(hits.sum > 0, s"$name measured zero recall")
       }
-    } finally {
-      spark.conf.unset("graft.kmeans.persistModel")
-      graft.operators.PersistedIndex.dropAll(spark, "graft_kmeans_cent")
-    }
+    } finally graft.operators.PersistedIndex.dropAll(spark, "graft_kmeans_cent")
   }
 
   test("the Lloyd chain scales in K: a 256-cell codebook trains at sf0.1") {
