@@ -103,10 +103,6 @@ object SnapshotStore {
   def writeSnapshot(spark: SparkSession, df: DataFrame, dir: String): Long =
     stagedSwap(spark, dir)(p => df.write.mode("overwrite").parquet(p))
 
-  /** Load a snapshot dir and (re)register its read view. */
-  def readSnapshot(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
-
   /** Write `df` hive-partitioned on `partCols` (same staged atomic swap
     * as [[writeSnapshot]]). This is the time-series storage layout at
     * 100 TB: a reader's predicate on the partition column prunes whole

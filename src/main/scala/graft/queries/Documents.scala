@@ -388,74 +388,26 @@ object Documents {
           min(WrapMulAdd(col("h"), LaneA(i), LaneB(i))).as(s"m$i")): _*)
       .select(col("doc_id"),
         array((0 until NumHashes).map(i => col(s"m$i")): _*).as("m"))
-    explodeBands(mh, width)
-  }
-
-  /** band signature = "ii:m,ii:m,..." with i ascending — lpad keeps the
-    * lexicographic layout of the row-wise formulation / oracle.
-    */
-  private def bandSigCol(b: Int, width: Int = BandSize): Column = concat_ws(",",
-    (b * width until (b + 1) * width).map(i =>
-      concat(lpad(lit(i).cast("string"), 2, "0"), lit(":"),
-        element_at(col("m"), i + 1).cast("string"))): _*)
-
-  /** (doc_id, m) -> one row per (doc, band) with the band signature. */
-  private def explodeBands(mh: DataFrame, width: Int = BandSize): DataFrame =
+    // one row per (doc, band) with the band signature
     mh.select(col("doc_id"), col("m"),
         explode_outer(array((0 until NumHashes / width).map(b =>
           struct(lit(b).as("band"), bandSigCol(b, width).as("sig"))): _*)).as("bs"))
       .select(col("doc_id"), col("m"),
         col("bs.band").as("band"), col("bs.sig").as("sig"))
-
-  /** [[bandSignatures]] as a PURE PROJECTION — each doc's 16 MinHash
-    * lanes computed with array HOFs (hash every shingle once, fold each
-    * lane as an array_min) instead of the explode + groupBy pipeline, so
-    * there is no shuffle and no aggregation state. Identical output
-    * (asserted in StreamingOpsSpec), but the right shape for STREAMING
-    * ingestion: a readStream of arriving docs maps straight to band
-    * signatures row-by-row, ready for a stream-static join against the
-    * persisted corpus signature table. The batch pipeline keeps the
-    * explode form (it spreads hot docs across tasks and feeds the
-    * bucketed index write); this form keeps per-row state O(shingles).
-    */
-  def streamingSignatures(documents: DataFrame): DataFrame = {
-    val mh = documents
-      .filter(size(T.tokens(col("text"))) >= 3)
-      .select(col("doc_id"),
-        T.shingles(T.tokens(coalesce(col("text"), lit(""))), 3).as("shs"))
-      .select(col("doc_id"),
-        transform(col("shs"), s => H.md5NumberBigEndian(s)).as("hs"))
-      .select(col("doc_id"), array((0 until NumHashes).map(i =>
-        array_min(transform(col("hs"), h => WrapMulAdd(h, LaneA(i), LaneB(i))))): _*)
-        .as("m"))
-    explodeBands(mh)
   }
 
-  /** The streaming near-dup gate: arriving docs (a stream or any frame
-    * with doc_id/text) against the CORPUS signature table — one
-    * stream-static equi-join on (band, sig), then d6's matching-lane
-    * estimate per candidate. Emits one row per (incoming doc, corpus
-    * near-dup) at the threshold; docs with no row are novel. This is
-    * d21's ingestion story made continuous: signatures for the arriving
-    * shard only, candidates only from buckets the arrival touches.
+  /** band signature = "ii:m,ii:m,..." with i ascending — lpad keeps the
+    * lexicographic layout of the row-wise formulation / oracle.
     */
-  def streamNeardup(incoming: DataFrame, corpusSigs: DataFrame): DataFrame = {
-    val matches = laneMatches(col("m"), col("cm"))
-    streamingSignatures(incoming)
-      .join(corpusSigs.select(col("band"), col("sig"),
-          col("doc_id").as("dup_of"), col("m").as("cm")),
-        Seq("band", "sig"))
-      .filter(col("doc_id") =!= col("dup_of"))
-      .select(col("doc_id"), col("dup_of"),
-        (matches / lit(NumHashes.toDouble)).as("est_jaccard"))
-      .filter(col("est_jaccard") >= 0.5)
-      .dropDuplicates("doc_id", "dup_of")
-  }
+  private def bandSigCol(b: Int, width: Int): Column = concat_ws(",",
+    (b * width until (b + 1) * width).map(i =>
+      concat(lpad(lit(i).cast("string"), 2, "0"), lit(":"),
+        element_at(col("m"), i + 1).cast("string"))): _*)
 
   /** Count of agreeing MinHash lanes between two signature columns —
     * the ONE definition of the estimator's numerator (previously
-    * restated by the d6 scorer, the streaming gate, p8, d32 and d35;
-    * a change to lane semantics must land once, not five times —
+    * restated by the d6 scorer, p8, d32 and d35; a change to lane
+    * semantics must land once, not four times —
     * r12 review).
     */
   private[graft] def laneMatches(x: Column, y: Column): Column =
@@ -1589,7 +1541,7 @@ object Documents {
     * appended — one PersistedIndex build per session/corpus feeds every
     * incremental consumer.
     */
-  private[graft] def incSigTable(spark: SparkSession, dir: String): DataFrame =
+  private def incSigTable(spark: SparkSession, dir: String): DataFrame =
     graft.operators.PersistedIndex.ensure(
       spark, "graft_sig_inc", dir,
       sources = Seq(s"$dir/documents.parquet"),
@@ -2098,7 +2050,7 @@ object Documents {
     * built once per session/corpus like the signature table it derives
     * from.
     */
-  private[graft] def incBaseStar(spark: SparkSession, dir: String): DataFrame =
+  private def incBaseStar(spark: SparkSession, dir: String): DataFrame =
     graft.operators.PersistedIndex.ensure(
       spark, "graft_ccstar_inc", dir,
       sources = Seq(s"$dir/documents.parquet"),
@@ -2177,23 +2129,19 @@ object Documents {
 
   /** Apply a delta edge set to a previous-run star table and return the
     * UPDATED star (id, comp) — the single definition of incremental
-    * cluster maintenance, shared verbatim by the batch catalog query
-    * ([[d26IncrementalClusters]]) and its streaming twin
-    * ([[graft.streaming.ClusterStream]]), so their bit-identity is by
-    * construction. Components no delta endpoint touches keep their
-    * previous-run labels verbatim (their depth-1 stars are already the
-    * fixpoint — connectivity is monotone under added edges), so they
-    * never enter the CC rounds at all: the fixpoint cost is
-    * affected-sized, not corpus-sized. The shard-sized touched set
-    * materializes ONCE (localCheckpoint) and feeds both the
-    * pass-through anti-join and the re-convergence semi-join — without
-    * the barrier each branch re-derives it (scan + distinct +
-    * broadcast, twice). Idempotent by construction: re-applying edges
-    * already inside the star's components changes no label, which is
-    * what makes the streaming twin safe under at-least-once
-    * re-delivery.
+    * cluster maintenance behind [[d26IncrementalClusters]]. Components
+    * no delta endpoint touches keep their previous-run labels verbatim
+    * (their depth-1 stars are already the fixpoint — connectivity is
+    * monotone under added edges), so they never enter the CC rounds at
+    * all: the fixpoint cost is affected-sized, not corpus-sized. The
+    * shard-sized touched set materializes ONCE (localCheckpoint) and
+    * feeds both the pass-through anti-join and the re-convergence
+    * semi-join — without the barrier each branch re-derives it (scan +
+    * distinct + broadcast, twice). Idempotent by construction:
+    * re-applying edges already inside the star's components changes no
+    * label.
     */
-  private[graft] def applyDeltaToStar(
+  private def applyDeltaToStar(
       spark: SparkSession, star: DataFrame, delta: DataFrame,
       ccTag: String): DataFrame = {
     val deltaNodes = delta.select(col("src").as("id"))

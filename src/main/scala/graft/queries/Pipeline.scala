@@ -726,9 +726,7 @@ object Pipeline {
   }
 
   /** The persisted (term, doc_id, tf, dl) inverted index and its one-row
-    * corpus stats — the build half of [[bm25Scored]], shared with
-    * [[bm25Contrib]] so the streaming twin's static side can never drift
-    * from the batch scorer's.
+    * corpus stats — the build half of [[bm25Scored]].
     */
   private def bm25Index(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val idx = graft.operators.PersistedIndex.ensure(
@@ -750,48 +748,6 @@ object Pipeline {
         .write.format("parquet").saveAsTable(table)
     }
     (idx, stats)
-  }
-
-  /** The BM25 weight expressions over the joined (idx ⋈ df ⋈ stats)
-    * frame — ONE definition feeding both the batch scorer and the
-    * streaming contribution index.
-    */
-  private def bm25Idf: org.apache.spark.sql.Column =
-    (col("n_docs").cast("double") - col("df").cast("double") + lit(0.5)) /
-      (col("df").cast("double") + lit(0.5)) + lit(1.0)
-  private def bm25TfNorm: org.apache.spark.sql.Column = {
-    val avgdl = col("tot_len").cast("double") / col("n_docs").cast("double")
-    col("tf").cast("double") * lit(2.2) /
-      (col("tf").cast("double") +
-        lit(1.2) * (lit(0.25) + lit(0.75) * (col("dl").cast("double") / avgdl)))
-  }
-
-  /** The persisted per-(term, candidate) BM25 PARTIAL-SCORE table for
-    * stream-static retrieval: because the per-(q, d) BM25 score is
-    * Σ_{t ∈ q ∩ d} idf(t)·tfnorm(t, d) and neither factor depends on the
-    * query, the whole corpus side of the scorer collapses to one
-    * (term, cid, contrib) table an arriving query joins on term. The
-    * contrib is stored DECIMAL(18,6) — the same rounding [[bm25Scored]]
-    * sums through — so a downstream summation in ANY order (micro-batch
-    * state included) is exact-integer arithmetic and bit-reproduces the
-    * batch score. Bucketed by term like the inverted index; built once
-    * per (corpus, params) and read by every micro-batch.
-    */
-  private[graft] def bm25Contrib(spark: SparkSession, dir: String): DataFrame = {
-    val (idx, stats) = bm25Index(spark, dir)
-    graft.operators.PersistedIndex.ensure(
-      spark, "graft_bm25_contrib", dir,
-      sources = Seq(s"$dir/documents.parquet"), params = "contrib") { table =>
-      val dft = idx.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      graft.operators.Bucketing.alignedBucketed(
-          idx.join(dft, Seq("term"))
-            .crossJoin(broadcast(stats))
-            .select(col("term"), col("doc_id").as("cid"),
-              (bm25Idf * bm25TfNorm)
-                .cast(org.apache.spark.sql.types.DecimalType(18, 6)).as("contrib")),
-          Seq("term"), Seq("term"))
-        .saveAsTable(table)
-    }
   }
 
   /** The BM25-scored candidate frame (qid < 3): (qid, doc_id, n_terms,
@@ -826,8 +782,12 @@ object Pipeline {
     val q = idx.filter(col("doc_id") < 3)
       .select(col("doc_id").as("qid"), col("term"))
     val qdf = dft.join(q.select(col("term")).distinct(), Seq("term"), "left_semi")
-    val idf = bm25Idf
-    val tfNorm = bm25TfNorm
+    val idf = (col("n_docs").cast("double") - col("df").cast("double") + lit(0.5)) /
+      (col("df").cast("double") + lit(0.5)) + lit(1.0)
+    val avgdl = col("tot_len").cast("double") / col("n_docs").cast("double")
+    val tfNorm = col("tf").cast("double") * lit(2.2) /
+      (col("tf").cast("double") +
+        lit(1.2) * (lit(0.25) + lit(0.75) * (col("dl").cast("double") / avgdl)))
     idx.join(broadcast(q), Seq("term"))
       .filter(col("qid") =!= col("doc_id"))
       .join(broadcast(qdf), Seq("term"))
@@ -894,9 +854,9 @@ object Pipeline {
     * reciprocal rank fusion outperforms learned fusion with this single
     * constant) over depth-20 per-ranker lists, fused top-10.
     */
-  private[graft] val RrfK = 60
-  private[graft] val RrfDepth = 20
-  private[graft] val RrfTopN = 10
+  private val RrfK = 60
+  private val RrfDepth = 20
+  private val RrfTopN = 10
 
   /** p27: HYBRID RETRIEVAL via reciprocal rank fusion — the rank
     * aggregation step a curation/hard-negative-mining pipeline runs to

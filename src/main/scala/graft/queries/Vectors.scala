@@ -2719,9 +2719,9 @@ object Vectors {
   /** MMR constants: λ=0.7 relevance weight (Carbonell-Goldstein 1998's
     * diversification trade-off), depth-20 candidate pool, 5 selections.
     */
-  private[graft] val MmrLambda = 0.7
-  private[graft] val MmrDepth = 20
-  private[graft] val MmrK = 5
+  private val MmrLambda = 0.7
+  private val MmrDepth = 20
+  private val MmrK = 5
 
   /** The depth-bounded cosine retrieval pool — v1's broadcast-Q × scan-N
     * discipline (double-widened sequential-fold cosine, (rel DESC, cid)

@@ -260,31 +260,41 @@ private class WalReaderFactory(conf: SerializableHadoopConf) extends PartitionRe
 }
 
 /** Reads one JSON-lines chunk; Jackson streaming parse per line (no
-  * per-row DataFrame machinery), emitting InternalRows directly.
+  * per-row DataFrame machinery), emitting InternalRows directly. A chunk
+  * is bounded by the pump's `maxPerChunk`, so it is read whole and each
+  * line's bytes go straight to Jackson: there is no charset decoder in
+  * front of the `try`, so invalid UTF-8 is one more unparseable line.
   */
 private class WalChunkReader(file: String, conf: SerializableHadoopConf)
   extends PartitionReader[InternalRow] {
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-  private val path = new Path(file)
-  private val in = path.getFileSystem(conf.value).open(path)
-  private val lines = scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+  private val bytes = {
+    val path = new Path(file)
+    val in = path.getFileSystem(conf.value).open(path)
+    try in.readAllBytes() finally in.close()
+  }
+  private var pos = 0
   private var current: InternalRow = _
   private var skipped = 0L
 
   override def next(): Boolean = {
-    while (lines.hasNext) {
-      val line = lines.next().trim
-      if (line.nonEmpty) {
+    while (pos < bytes.length) {
+      var start = pos
+      var end = start
+      while (end < bytes.length && bytes(end) != '\n' && bytes(end) != '\r') end += 1
+      pos = end + 1
+      while (start < end && bytes(start) >= 0 && bytes(start) <= ' ') start += 1
+      if (start < end) {
         // a torn/corrupt line must not fail the task: every retry would
         // hit the same bytes and the streaming query would crash-loop at
         // the same checkpoint offset FOREVER — the poison-line livelock
         // the HTTP tail and the pump are already hardened against. The
         // pump's atomic-rename contract means chunks are never half-
-        // written, so an unparseable line is external corruption: skip
-        // it (counted, reported once per chunk on close) and keep the
-        // stream alive.
+        // written, so an unparseable line (bad JSON, bad UTF-8, a bad
+        // tick) is external corruption: skip it (counted, reported once
+        // per chunk on close) and keep the stream alive.
         try {
-          val n = mapper.readTree(line)
+          val n = mapper.readTree(bytes, start, end - start)
           def str(f: String): UTF8String =
             if (n.hasNonNull(f)) UTF8String.fromString(
               if (n.get(f).isTextual) n.get(f).asText else n.get(f).toString)
@@ -300,8 +310,9 @@ private class WalChunkReader(file: String, conf: SerializableHadoopConf)
             if (n.hasNonNull("offset")) n.get("offset").asLong else null)
           return true
         } catch {
-          case _: com.fasterxml.jackson.core.JacksonException |
-               _: NumberFormatException => skipped += 1
+          // JacksonException is an IOException; so is the
+          // CharConversionException its encoding detection can raise
+          case _: java.io.IOException | _: NumberFormatException => skipped += 1
         }
       }
     }
@@ -313,6 +324,5 @@ private class WalChunkReader(file: String, conf: SerializableHadoopConf)
     if (skipped > 0)
       System.err.println(
         s"[wal-source] $file: skipped $skipped unparseable line(s)")
-    in.close()
   }
 }

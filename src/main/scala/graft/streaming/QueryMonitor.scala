@@ -14,7 +14,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   *    min observed offset skips past the previous max is reported via
   *    `onGap` — processing continues, matching the reference;
   *  - E3 failure alerting (alert/mailer.py:24-38): `onQueryTerminated`
-  *    with an exception fires `onFailure`; plug [[SmtpAlerter]] in for
+  *    with an exception fires `onFailure` with the query's name (its id
+  *    when it has none, or when the listener missed its start, since the
+  *    terminated event carries no name); plug [[SmtpAlerter]] in for
   *    the actual mail hop (a dependency-free RFC 5321 client —
   *    SmtpAlerterSpec drives the whole chain from a real failing query
   *    through a real SMTP conversation).
@@ -27,11 +29,13 @@ final class QueryMonitor(
   private val processed = new ConcurrentHashMap[String, Long]()
   private val lastMaxOffset = new ConcurrentHashMap[String, Long]()
   private val lastBatch = new ConcurrentHashMap[String, Long]()
+  private val names = new ConcurrentHashMap[java.util.UUID, String]()
 
   /** Total rows observed for a query name so far (V3). */
   def processedCount(name: String): Long = processed.getOrDefault(name, 0L)
 
-  override def onQueryStarted(event: QueryStartedEvent): Unit = ()
+  override def onQueryStarted(event: QueryStartedEvent): Unit =
+    names.put(event.runId, Option(event.name).getOrElse(event.id.toString))
 
   override def onQueryProgress(event: QueryProgressEvent): Unit = {
     val p = event.progress
@@ -95,8 +99,10 @@ final class QueryMonitor(
     }
   }
 
-  override def onQueryTerminated(event: QueryTerminatedEvent): Unit =
-    event.exception.foreach(e => onFailure(event.id.toString, e))
+  override def onQueryTerminated(event: QueryTerminatedEvent): Unit = {
+    val name = Option(names.remove(event.runId)).getOrElse(event.id.toString)
+    event.exception.foreach(e => onFailure(name, e))
+  }
 }
 
 object QueryMonitor {

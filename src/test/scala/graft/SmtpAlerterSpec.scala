@@ -117,6 +117,7 @@ class SmtpAlerterSpec extends SparkSpec {
       Files.write(dir.resolve("one.json"), """{"x": 1}""".getBytes)
       val q = spark.readStream.schema("x LONG").json(dir.toString)
         .writeStream
+        .queryName("replication_smtp_probe")
         .option("checkpointLocation",
           Files.createTempDirectory("smtp-ck").toString)
         .trigger(Trigger.AvailableNow())
@@ -131,6 +132,10 @@ class SmtpAlerterSpec extends SparkSpec {
       val lines = transcript()
       assert(lines.exists(_.contains("induced sink failure")),
         s"mail body missing the failure:\n${lines.mkString("\n")}")
+      // the subject names the query, not its UUID
+      assert(lines.contains(
+        "Subject: [graft] replication query failed: replication_smtp_probe"),
+        s"subject does not name the query:\n${lines.mkString("\n")}")
     } finally {
       spark.streams.removeListener(monitor)
       server.close()

@@ -6,7 +6,6 @@ import java.nio.file.Files
 /** Snapshot atomic-swap semantics (reference K3, minus its
   * drop-then-rename visibility gap).
   */
-@graft.tags.Soak
 class SnapshotStoreSpec extends SparkSpec {
   import spark.implicits._
 
@@ -14,11 +13,11 @@ class SnapshotStoreSpec extends SparkSpec {
     val dir = Files.createTempDirectory("snap").toString + "/t"
     val n1 = SnapshotStore.writeSnapshot(spark, Seq(1, 2, 3).toDF("v"), dir)
     assert(n1 == 3)
-    assert(SnapshotStore.readSnapshot(spark, dir).count() == 3)
+    assert(spark.read.parquet(dir).count() == 3)
     // second snapshot replaces the first, no leftover staging/old dirs
     val n2 = SnapshotStore.writeSnapshot(spark, Seq(4, 5).toDF("v"), dir)
     assert(n2 == 2)
-    val vals = SnapshotStore.readSnapshot(spark, dir).as[Int].collect().sorted
+    val vals = spark.read.parquet(dir).as[Int].collect().sorted
     assert(vals.toSeq == Seq(4, 5))
     assert(!new java.io.File(dir + ".staging").exists)
     assert(!new java.io.File(dir + ".old").exists)
@@ -39,7 +38,7 @@ class SnapshotStoreSpec extends SparkSpec {
     fs.create(new Path(d1 + ".staging", "_graft_swap_ready"), true).close()
     assert(fs.rename(new Path(d1), new Path(d1 + ".old")))
     SnapshotStore.recoverInterruptedSwap(spark, d1)
-    assert(SnapshotStore.readSnapshot(spark, d1).as[Int].collect().sorted.toSeq
+    assert(spark.read.parquet(d1).as[Int].collect().sorted.toSeq
       === Seq(10, 20), "recovery must complete the marked swap forward")
     assert(!fs.exists(new Path(d1 + ".old")) && !fs.exists(new Path(d1 + ".staging")))
 
@@ -50,7 +49,7 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(fs.rename(new Path(d2), new Path(d2 + ".old")))
     Seq(99).toDF("v").write.parquet(d2 + ".staging") // NO ready marker
     SnapshotStore.recoverInterruptedSwap(spark, d2)
-    assert(SnapshotStore.readSnapshot(spark, d2).as[Int].collect().sorted.toSeq
+    assert(spark.read.parquet(d2).as[Int].collect().sorted.toSeq
       === Seq(7, 8), "recovery must roll an unmarked swap back")
 
     // and writeSnapshot itself heals before writing (the in-stream

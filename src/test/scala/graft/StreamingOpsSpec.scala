@@ -8,10 +8,9 @@ import org.apache.spark.sql.types._
 
 /** Streaming twins of batch catalog rules (SURVEY §2.10): the four
   * per-user event twins in [[graft.queries.EventStreams]] (with and
-  * without state TTL, and the w29 profile that runs them), the
-  * stream-static near-dup flow, and the retrieval and cluster twins.
-  * Each must reproduce its batch twin's rows across micro-batch
-  * boundaries and checkpoint restarts.
+  * without state TTL, and the w29 profile that runs them). Each must
+  * reproduce its batch twin's rows across micro-batch boundaries and
+  * checkpoint restarts.
   */
 @graft.tags.Soak
 class StreamingOpsSpec extends SparkSpec
@@ -34,10 +33,6 @@ class StreamingOpsSpec extends SparkSpec
         Files.walk(root).iterator().asScala.toSeq.reverseIterator
           .foreach(p => Files.deleteIfExists(p))
     }
-    // reclaim the persisted retrieval tables the twin tests build
-    // (suites reclaim what they persist; later ensures rebuild)
-    Seq("graft_bm25_contrib", "graft_bm25_idx", "graft_bm25_stats")
-      .foreach(graft.operators.PersistedIndex.dropAll(spark, _))
     super.afterAll()
   }
 
@@ -355,44 +350,6 @@ class StreamingOpsSpec extends SparkSpec
     }
   }
 
-  test("streaming near-dup: projection signatures equal the batch pipeline; arriving clone flags") {
-    import spark.implicits._
-    val docsDf = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
-      (2L, "one two three four five six seven eight nine ten"),
-      (3L, "completely different words with no overlap whatsoever here today"))
-      .toDF("doc_id", "text")
-
-    // 1. the pure-projection form is row-for-row the batch pipeline
-    val batch = graft.queries.Documents.bandSignatures(spark, docsDf)
-      .collect().map(_.toString).sorted.toSeq
-    val proj = graft.queries.Documents.streamingSignatures(docsDf)
-      .collect().map(_.toString).sorted.toSeq
-    assert(proj === batch, "projection signatures differ from the batch pipeline")
-
-    // 2. live stream-static flow: doc 100 clones doc 1 (near-dup must
-    // flag with dup_of=1), doc 101 is novel (no output row)
-    val src = tmp("nd-src"); val ckpt = tmp("nd-ck")
-    Files.write(src.resolve("in.json"), java.util.Arrays.asList(
-      """{"doc_id":100,"text":"alpha beta gamma delta epsilon zeta eta theta iota kappa"}""",
-      """{"doc_id":101,"text":"entirely fresh unseen content streaming in right now friends"}"""))
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val stream = spark.readStream.schema(schema).json(src.toString)
-    val corpusSigs = graft.queries.Documents.bandSignatures(spark, docsDf)
-    val q = graft.queries.Documents.streamNeardup(stream, corpusSigs)
-      .writeStream.format("memory").queryName("nd_out")
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val got = spark.table("nd_out")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(got.map(t => (t._1, t._2)) === Set((100L, 1L)),
-      s"expected exactly the planted clone pair, got $got")
-    assert(got.forall(_._3 >= 0.5))
-  }
-
   // ---- per-user state TTL (the round-8 verdict's top scale item): the
   // four per-user twins thread `ttl` through to the state store, so
   // years of one-shot users cannot accumulate in RocksDB forever. Two
@@ -673,175 +630,5 @@ class StreamingOpsSpec extends SparkSpec
       .head.getLong(0)
     assert(prof("decay_attribution") === ((openUsers, credits)),
       "decay profile diverges from the open-segment batch rule")
-  }
-
-  // ---- streaming retrieval twins (VERDICT r11 #5 / r12 #4): arriving
-  // queries against the persisted BM25/embedding state must reproduce
-  // the batch p27/v28 rows bit-for-bit on AvailableNow ----
-
-  private val sfDir = "/root/testdata/sf0.001"
-
-  test("streaming RRF twin: arriving queries fuse to the batch p27 rows bit-for-bit") {
-    def key(qid: Long, rank: Long) = (qid, rank)
-    val batch = graft.queries.Pipeline.p27RankFusion(spark, sfDir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        if (r.isNullAt(3)) None else Some(r.getLong(3)),
-        if (r.isNullAt(4)) None else Some(r.getLong(4)),
-        r.getDouble(5)))
-      .sortBy(t => key(t._1, t._2)).toSeq
-    assert(batch.nonEmpty)
-
-    // the arriving query: doc text (lexical leg) + embedding (vector leg)
-    val arrivals = Tables.load(spark, sfDir, "documents")
-      .filter(col("doc_id") < 3).select(col("doc_id").as("qid"), col("text"))
-      .join(Tables.load(spark, sfDir, "embeddings").filter(col("vec_id") < 3)
-        .select(col("vec_id").as("qid"), col("embedding")), Seq("qid"))
-    val src = tmp("rrf-src"); val ckpt = tmp("rrf-ck")
-    // each query row delivered TWICE in the same micro-batch: the
-    // at-least-once contract — intra-batch duplicates must dedup on the
-    // per-query-unique keys, not double-count lexical contribs or
-    // halve the distinct candidate pool
-    arrivals.unionAll(arrivals).write.parquet(src.resolve("q").toString)
-
-    val stream = spark.readStream.schema(arrivals.schema)
-      .parquet(src.resolve("q").toString)
-    val out = graft.streaming.RetrievalStream.streamRankFusion(stream,
-      graft.queries.Pipeline.bm25Contrib(spark, sfDir),
-      Tables.load(spark, sfDir, "embeddings"))
-    val q = out.writeStream.format("memory").queryName("rrf_twin")
-      .outputMode("update")
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-
-    val got = spark.table("rrf_twin").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        if (r.isNullAt(3)) None else Some(r.getLong(3)),
-        if (r.isNullAt(4)) None else Some(r.getLong(4)),
-        r.getDouble(5)))
-      .sortBy(t => key(t._1, t._2)).toSeq
-    assert(got === batch, "streamed fusion diverges from batch p27")
-  }
-
-  test("streaming MMR twin: arriving queries diversify to the batch v28 rows bit-for-bit") {
-    val batch = graft.queries.Vectors.v28MmrDiversify(spark, sfDir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3), r.getDouble(4)))
-      .sortBy(t => (t._1, t._2)).toSeq
-    assert(batch.nonEmpty)
-
-    val arrivals = Tables.load(spark, sfDir, "embeddings")
-      .filter(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("embedding"))
-    val src = tmp("mmr-src"); val ckpt = tmp("mmr-ck")
-    // duplicated delivery, as in the RRF twin: the depth-20 pool must
-    // hold 20 DISTINCT candidates
-    arrivals.unionAll(arrivals).write.parquet(src.resolve("q").toString)
-
-    val stream = spark.readStream.schema(arrivals.schema)
-      .parquet(src.resolve("q").toString)
-    val out = graft.streaming.RetrievalStream.streamMmrDiversify(stream,
-      Tables.load(spark, sfDir, "embeddings"))
-    val q = out.writeStream.format("memory").queryName("mmr_twin")
-      .outputMode("update")
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-
-    val got = spark.table("mmr_twin").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3), r.getDouble(4)))
-      .sortBy(t => (t._1, t._2)).toSeq
-    assert(got === batch, "streamed MMR selection diverges from batch v28")
-  }
-
-  test("streaming cluster twin: arriving shard converges to the batch d26 labels under duplicate delivery") {
-    // VERDICT r13 #6: the incremental-clustering family's streaming twin.
-    // The shard docs ARRIVE as a stream (multiple micro-batches, one doc
-    // slice re-delivered outright); the maintained star must converge to
-    // the batch d26 query's exact labels — same base artifacts (the
-    // persisted base signature table and base star), same delta scoring
-    // (streamNeardup ≡ the minhash estimator), same re-convergence code
-    // (Documents.applyDeltaToStar, shared by construction).
-    val dir = "/root/testdata/sf0.001"
-    val expected = graft.queries.Documents.d26IncrementalClusters(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(expected.nonEmpty, "batch d26 sanity: the shard must cluster something")
-
-    val shardMod = graft.queries.Documents.D20ShardMod.toLong
-    val isShard = pmod(col("doc_id"), lit(shardMod)) === 0
-    val baseSigs = graft.queries.Documents.incSigTable(spark, dir)
-      .filter(!isShard)
-    val baseStar = graft.queries.Documents.incBaseStar(spark, dir)
-    val shardDocs = Tables.load(spark, dir, "documents")
-      .filter(isShard).select(col("doc_id"), col("text"))
-
-    val src = tmp("cs-src"); val ckpt = tmp("cs-ck"); val state = tmp("cs-state")
-    // three appends -> multiple source files: the first half, the second
-    // half, then the FIRST HALF AGAIN (an at-least-once duplicate
-    // delivery of 25 whole documents) — the sig-store anti-join and the
-    // idempotent star application must make the replay a label no-op
-    val half1 = shardDocs.filter(pmod(col("doc_id"), lit(2 * shardMod)) === 0)
-    val half2 = shardDocs.filter(pmod(col("doc_id"), lit(2 * shardMod)) =!= 0)
-    half1.write.mode("append").parquet(src.toString)
-    half2.write.mode("append").parquet(src.toString)
-    half1.write.mode("append").parquet(src.toString)
-
-    val stream = spark.readStream.schema(shardDocs.schema)
-      .option("maxFilesPerTrigger", "2").parquet(src.toString)
-    val q = graft.streaming.ClusterStream.start(
-      stream, baseSigs, baseStar,
-      stateDir = state.toString, checkpointDir = ckpt.toString,
-      ccFamily = "cc_twin")
-    q.awaitTermination()
-
-    val got = graft.streaming.ClusterStream.labels(spark, state.toString)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(got === expected,
-      "streamed cluster maintenance diverges from the batch d26 labels")
-  }
-
-  test("streaming cluster twin resumes from its checkpoint across restarts") {
-    // the CDC resume path: the stream terminates after the first half of
-    // the shard, a NEW query incarnation restarts on the same checkpoint
-    // and state, and only then does the second half arrive — the
-    // checkpoint must skip the processed files and the star/sig stores
-    // must carry the first incarnation's state forward to the same
-    // converged labels
-    val dir = "/root/testdata/sf0.001"
-    val expected = graft.queries.Documents.d26IncrementalClusters(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-
-    val shardMod = graft.queries.Documents.D20ShardMod.toLong
-    val isShard = pmod(col("doc_id"), lit(shardMod)) === 0
-    val baseSigs = graft.queries.Documents.incSigTable(spark, dir)
-      .filter(!isShard)
-    val baseStar = graft.queries.Documents.incBaseStar(spark, dir)
-    val shardDocs = Tables.load(spark, dir, "documents")
-      .filter(isShard).select(col("doc_id"), col("text"))
-
-    val src = tmp("csr-src"); val ckpt = tmp("csr-ck"); val state = tmp("csr-state")
-    def incarnation(): Unit = {
-      val stream = spark.readStream.schema(shardDocs.schema)
-        .parquet(src.toString)
-      val q = graft.streaming.ClusterStream.start(
-        stream, baseSigs, baseStar,
-        stateDir = state.toString, checkpointDir = ckpt.toString,
-        ccFamily = "cc_twin_r")
-      q.awaitTermination()
-    }
-    shardDocs.filter(pmod(col("doc_id"), lit(2 * shardMod)) === 0)
-      .write.mode("append").parquet(src.toString)
-    incarnation()
-    val mid = graft.streaming.ClusterStream.labels(spark, state.toString).count()
-    shardDocs.filter(pmod(col("doc_id"), lit(2 * shardMod)) =!= 0)
-      .write.mode("append").parquet(src.toString)
-    incarnation()
-
-    val got = graft.streaming.ClusterStream.labels(spark, state.toString)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(got === expected,
-      s"restarted cluster maintenance diverges from batch d26 " +
-        s"(first incarnation left $mid labeled docs)")
   }
 }

@@ -127,4 +127,23 @@ class WalSourceSpec extends SparkSpec {
     assert(out.select("offset").orderBy("offset").collect().map(_.getLong(0)).toSeq ===
       Seq(100L, 150L))
   }
+
+  test("malformed JSON and invalid UTF-8 lines are skipped, not fatal") {
+    // invalid UTF-8 must reach the per-line skip: failing the task
+    // instead would fail every retry on the same bytes
+    val dir = Files.createTempDirectory("walbad")
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    val out = new java.io.ByteArrayOutputStream()
+    out.write(("""{"tick":"100","type":2300,"db":"d","cuid":"c1","tid":"t","data":"{\"k\":1}","offset":100}""" +
+      "\n" + """{"tick":"110","type":2300,"db""" + "\n").getBytes(utf8))
+    out.write("""{"tick":"120","type":2300,"db":"d","cuid":"c1","tid":"t","data":"""".getBytes(utf8))
+    out.write(Array(0xff, 0xfe).map(_.toByte))
+    out.write(("\",\"offset\":120}\n" +
+      """{"tick":"130","type":2300,"db":"d","cuid":"c1","tid":"t","data":"{\"k\":3}","offset":130}""" +
+      "\n").getBytes(utf8))
+    Files.write(dir.resolve("wal-100-199.json"), out.toByteArray)
+    val rows = spark.read.format("graft.sources.WalSource").load(dir.toString)
+      .orderBy("offset").collect().map(r => (r.getLong(6), r.getString(5)))
+    assert(rows.toSeq === Seq((100L, """{"k":1}"""), (130L, """{"k":3}""")))
+  }
 }
