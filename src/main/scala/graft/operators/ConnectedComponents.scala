@@ -130,17 +130,14 @@ object ConnectedComponents {
       * re-scan of the just-written table) disappears — at bench scale
       * that was one of ~3 jobs per round; at 100 TB it is a TB-scale
       * table scan per round. The observation completes from an
-      * asynchronous listener, so the wait is bounded: metrics that do
-      * not arrive inside it fall back to the plain stat job, and the
-      * convergence compare never sees wrong or missing stats.
+      * asynchronous listener, so the wait is bounded ([[CountedWrite]]):
+      * metrics that do not arrive inside it fall back to the plain stat
+      * job, and the convergence compare never sees wrong or missing stats.
       */
     override def putCounted(df: DataFrame, round: Int): (DataFrame, Long, Long) = {
-      val obs = org.apache.spark.sql.Observation(s"graft_cc_rows_${prefix}_$round")
-      val out = put(df.observe(obs,
-        count(lit(1)).as("rows"), bit_xor(roundSig).as("sig")), round)
-      val r = scala.util.Try(scala.concurrent.Await.result(
-          obs.future, scala.concurrent.duration.Duration(10, "s")))
-        .getOrElse(out.agg(count(lit(1)), bit_xor(roundSig)).head())
+      val (out, r) = CountedWrite(count(lit(1)).as("rows"), bit_xor(roundSig).as("sig"))(
+        observe => put(observe(df), round))(
+        _.agg(count(lit(1)), bit_xor(roundSig)).head())
       (out, r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
     override def put(df: DataFrame, round: Int): DataFrame = {

@@ -62,23 +62,36 @@ object SchemaTransform {
     (withDefault.as(spec.name), errs.result())
   }
 
+  /** Over the staged frame (see [[split]]): true for a rejected row. */
+  private[graft] val rejected: Column = size(col(ErrCol)) > 0
+
   /** Apply `config` to `df`, splitting valid rows from rejects.
     *
     * `keep` optionally carries source columns (e.g. the Kafka offset)
     * through to the output unchanged.
     */
-  def apply(df: DataFrame, config: TableConfig, keep: Seq[String] = Nil): TransformResult = {
+  def apply(df: DataFrame, config: TableConfig, keep: Seq[String] = Nil): TransformResult =
+    split(df, config, keep)(identity)
+
+  /** [[apply]] with `tap` applied to the staged frame — the source
+    * columns plus the error array, before the valid/reject filter. That
+    * is the one frame both halves read, so an observation placed there
+    * by `tap` counts the rejects ([[rejected]]) during whichever half is
+    * written first.
+    */
+  private[graft] def split(df: DataFrame, config: TableConfig, keep: Seq[String])(
+      tap: DataFrame => DataFrame): TransformResult = {
     val built = config.columns.map(c => columnExprs(df, c))
     val outCols = keep.map(col) ++ built.map(_._1)
     val errExprs = built.flatMap(_._2)
 
     // array of non-null error strings; empty <=> row valid
     val errArray = filter(array(errExprs: _*), e => e.isNotNull)
-    val staged = df.withColumn(ErrCol, errArray)
+    val staged = tap(df.withColumn(ErrCol, errArray))
 
     val valid = staged.filter(size(col(ErrCol)) === 0).select(outCols: _*)
     val errors = staged
-      .filter(size(col(ErrCol)) > 0)
+      .filter(rejected)
       .select(
         to_json(struct(df.columns.map(col): _*)).as("document"),
         array_join(col(ErrCol), "; ").as("error"))

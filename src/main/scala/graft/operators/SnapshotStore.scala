@@ -1,7 +1,8 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Snapshot load with crash-recoverable swap (reference operator K3:
   * replication/replicator/store.py:25-49,86-90 — create `<T>Temp`,
@@ -20,7 +21,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SnapshotStore {
 
   /** Completeness witness inside a staging dir: created only after the
-    * staging write finished AND its row count was read back, i.e. the
+    * staging write returned AND its observed row count is known, i.e. the
     * last step before the renames begin. Underscore-prefixed so parquet
     * readers ignore it (the `_SUCCESS` convention); it travels with the
     * rename into the live dir, where [[writeSnapshot]] removes it.
@@ -62,13 +63,14 @@ object SnapshotStore {
   }
 
   /** The staged-swap protocol, shared by both write shapes — the
-    * crash-window invariants (heal, staged write, counted readback,
-    * ready witness, two renames with rollback, cleanup) live HERE and
-    * only here; `write` supplies the one varying step (how the frame
-    * lands in the staging path).
+    * crash-window invariants (heal, staged write, observed count, ready
+    * witness, two renames with rollback, cleanup) live HERE and only
+    * here; `write` supplies the one varying step (how the frame lands in
+    * the staging path). The row count is observed on the write itself
+    * ([[CountedWrite]]); only a missing observation reads staging back.
     */
-  private def stagedSwap(
-      spark: SparkSession, dir: String)(write: String => Unit): Long = {
+  private def stagedSwap(spark: SparkSession, df: DataFrame, dir: String)(
+      write: (DataFrame, String) => Unit): Long = {
     val staging = new Path(dir + ".staging")
     val live = new Path(dir)
     val old = new Path(dir + ".old")
@@ -77,8 +79,10 @@ object SnapshotStore {
     recoverInterruptedSwap(spark, dir) // a prior crash mid-swap heals here
 
     fs.delete(staging, true)
-    write(staging.toString)
-    val n = spark.read.parquet(staging.toString).count()
+    val (_, counted) = CountedWrite(count(lit(1)).as("rows"))(
+      observe => write(observe(df), staging.toString))(
+      _ => Row(spark.read.parquet(staging.toString).count()))
+    val n = counted.getLong(0)
     fs.create(new Path(staging, SwapReady), true).close()
 
     fs.delete(old, true)
@@ -101,7 +105,7 @@ object SnapshotStore {
     * counts from its snapshot loader, store.py:61-91).
     */
   def writeSnapshot(spark: SparkSession, df: DataFrame, dir: String): Long =
-    stagedSwap(spark, dir)(p => df.write.mode("overwrite").parquet(p))
+    stagedSwap(spark, df, dir)((d, p) => d.write.mode("overwrite").parquet(p))
 
   /** Write `df` hive-partitioned on `partCols` (same staged atomic swap
     * as [[writeSnapshot]]). This is the time-series storage layout at
@@ -116,6 +120,6 @@ object SnapshotStore {
       df: DataFrame,
       dir: String,
       partCols: Seq[String]): Long =
-    stagedSwap(spark, dir)(p =>
-      df.write.mode("overwrite").partitionBy(partCols: _*).parquet(p))
+    stagedSwap(spark, df, dir)((d, p) =>
+      d.write.mode("overwrite").partitionBy(partCols: _*).parquet(p))
 }

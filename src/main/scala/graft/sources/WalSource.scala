@@ -4,6 +4,8 @@ import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -13,6 +15,7 @@ import org.apache.spark.sql.sources.{Filter, GreaterThan, GreaterThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 batch connector for WAL change-log directories — the
   * engine's native form of the reference's WAL tail with a tick cursor
@@ -85,6 +88,12 @@ object WalSource {
         .map { case (lo, hi) => (lo, hi, st.getPath.toString) })
       .sortBy(_._2)
   }
+
+  /** The SparkContext's Hadoop conf as one broadcast for a scan's
+    * readers (what Spark's own file scans ship).
+    */
+  private[sources] def broadcastConf(sc: SparkContext): Broadcast[SerializableConfiguration] =
+    sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
 }
 
 private class WalTable(path: String) extends Table with SupportsRead {
@@ -141,18 +150,20 @@ private class WalScan(path: String, minTick: Long,
   override def readSchema(): StructType = WalSource.schema
   override def toBatch: Batch = this
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new WalMicroBatchStream(path, minTick, hadoopConf, maxChunksPerTrigger)
+    new WalMicroBatchStream(path, minTick, maxChunksPerTrigger)
   override def description(): String =
     s"graft WAL scan, minTick=${if (minTick == Long.MinValue) "none" else minTick}"
 
-  // driver-side conf, serialized once and shipped to every reader —
-  // executors have NO SparkContext; getOrCreate() there would try to
-  // construct one and fail on a real cluster
-  private val hadoopConf = new SerializableHadoopConf(
-    org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration)
+  // captured where the scan is planned: executors have NO SparkContext;
+  // getOrCreate() there would try to construct one and fail on a real
+  // cluster
+  private val sc = org.apache.spark.sql.SparkSession.active.sparkContext
+
+  // lazy: a scan built only to become a stream never broadcasts its own
+  private lazy val hadoopConf = WalSource.broadcastConf(sc)
 
   override def planInputPartitions(): Array[InputPartition] =
-    WalSource.chunks(path, hadoopConf.value).collect {
+    WalSource.chunks(path, sc.hadoopConfiguration).collect {
       // the pushed cursor prunes whole chunks by filename range
       case (_, hi, file) if hi >= minTick => WalChunkPartition(file)
     }.toArray
@@ -177,10 +188,15 @@ private case class WalOffset(tick: Long) extends Offset {
   * drains exactly the chunks present when it started.
   */
 private class WalMicroBatchStream(path: String, minTick: Long,
-    conf: SerializableHadoopConf, maxChunksPerTrigger: Option[Int])
+    maxChunksPerTrigger: Option[Int])
   extends MicroBatchStream with SupportsTriggerAvailableNow {
 
-  private def chunks(): Seq[(Long, Long, String)] = WalSource.chunks(path, conf.value)
+  private val sc = org.apache.spark.sql.SparkSession.active.sparkContext
+
+  // one broadcast for the stream's lifetime, shared by every batch's tasks
+  private val conf = WalSource.broadcastConf(sc)
+
+  private def chunks(): Seq[(Long, Long, String)] = WalSource.chunks(path, sc.hadoopConfiguration)
 
   private var availableNowCap: Option[Long] = None
 
@@ -233,30 +249,18 @@ private class WalMicroBatchStream(path: String, minTick: Long,
   override def createReaderFactory(): PartitionReaderFactory = new WalReaderFactory(conf)
 
   override def commit(end: Offset): Unit = () // checkpoint log is the record
-  override def stop(): Unit = ()
-}
-
-/** Minimal serializable Hadoop Configuration carrier (the Spark-internal
-  * equivalent is private[spark]).
-  */
-private class SerializableHadoopConf(@transient var value: org.apache.hadoop.conf.Configuration)
-  extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new org.apache.hadoop.conf.Configuration(false)
-    value.readFields(in)
-  }
+  override def stop(): Unit = conf.destroy()
 }
 
 private case class WalChunkPartition(file: String) extends InputPartition
 
-private class WalReaderFactory(conf: SerializableHadoopConf) extends PartitionReaderFactory {
+/** Ships only the broadcast's handle: each executor fetches the conf once,
+  * instead of every task binary carrying and deserializing all of it.
+  */
+private class WalReaderFactory(conf: Broadcast[SerializableConfiguration])
+  extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new WalChunkReader(partition.asInstanceOf[WalChunkPartition].file, conf)
+    new WalChunkReader(partition.asInstanceOf[WalChunkPartition].file, conf.value.value)
 }
 
 /** Reads one JSON-lines chunk; Jackson streaming parse per line (no
@@ -265,12 +269,12 @@ private class WalReaderFactory(conf: SerializableHadoopConf) extends PartitionRe
   * line's bytes go straight to Jackson: there is no charset decoder in
   * front of the `try`, so invalid UTF-8 is one more unparseable line.
   */
-private class WalChunkReader(file: String, conf: SerializableHadoopConf)
+private class WalChunkReader(file: String, conf: org.apache.hadoop.conf.Configuration)
   extends PartitionReader[InternalRow] {
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
   private val bytes = {
     val path = new Path(file)
-    val in = path.getFileSystem(conf.value).open(path)
+    val in = path.getFileSystem(conf).open(path)
     try in.readAllBytes() finally in.close()
   }
   private var pos = 0

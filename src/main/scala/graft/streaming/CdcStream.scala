@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.config.TableConfig
-import graft.operators.{Envelope, ReplicaTable, SchemaTransform}
+import graft.operators.{CountedWrite, Envelope, ReplicaTable, SchemaTransform}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -132,22 +132,27 @@ object CdcStream {
         graft.operators.SnapshotStore.recoverInterruptedSwap(
           batch.sparkSession, tableDir)
         if (!fs.exists(marker)) {
-          // cache: the batch feeds two writes (+ an emptiness probe); without
-          // it each job re-executes the source plan — recomputing the batch
-          // and double-counting the observe() metrics
+          // cache: the batch feeds two writes; without it the reject
+          // write re-executes the source plan — recomputing the batch and
+          // double-counting the observe() metrics
           batch.persist()
           try {
-            val t = SchemaTransform(batch, config,
-              keep = Seq("offset", config.versionColumn, config.deletedColumn)
-                .filter(batch.columns.contains))
-            t.valid.write.mode("append").parquet(tableDir)
-            val errs = t.errors
+            val keep = Seq("offset", config.versionColumn, config.deletedColumn)
+              .filter(batch.columns.contains)
+            // the reject count is observed on the valid append's own job,
+            // so a clean batch runs that one job and nothing else
+            val (t, counted) = CountedWrite(count_if(SchemaTransform.rejected).as("rejects")) {
+              observe =>
+                val t = SchemaTransform.split(batch, config, keep)(observe)
+                t.valid.write.mode("append").parquet(tableDir)
+                t
+            }(t => Row(t.errors.count()))
             // the deadletter log has no keys/_ver for a read view to
             // collapse, so a bare append would DOUBLE its rows on every
             // crash inside this marker window; one partition per batch
             // makes redelivery rewrite its own partition instead
             // (exactly-once reject storage)
-            if (!errs.isEmpty) writeRejects(errs, tableDir, batchId)
+            if (counted.getLong(0) > 0) writeRejects(t.errors, tableDir, batchId)
           } finally batch.unpersist()
           fs.mkdirs(marker.getParent)
           fs.create(marker, true).close()
@@ -181,17 +186,14 @@ object CdcStream {
   }
 
   /** Write `rejects` as partition `batch_id = batchId` of
-    * `<tableDir>.deadletter` (E1's DOCUMENT log as a queryable table),
-    * replacing that partition only (dynamic overwrite). The sink writes
-    * one partition per micro-batch; [[Sync.snapshot]] writes
-    * `batch_id = -1`.
+    * `<tableDir>.deadletter` (E1's DOCUMENT log as a queryable table):
+    * the rows go straight into that partition's directory, replacing it
+    * and nothing else, and readers infer `batch_id` from the directory
+    * name. The sink writes one partition per micro-batch;
+    * [[Sync.snapshot]] writes `batch_id = -1`.
     */
-  private[streaming] def writeRejects(rejects: DataFrame, tableDir: String, batchId: Long): Unit =
-    rejects.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(tableDir + ".deadletter")
+  private[graft] def writeRejects(rejects: DataFrame, tableDir: String, batchId: Long): Unit =
+    rejects.write.mode("overwrite").parquet(s"$tableDir.deadletter/batch_id=$batchId")
 
   /** Per-tableDir monitors serializing writer starts and external
     * compactions (reentrant, so [[graft.streaming.Sync.resync]] can hold

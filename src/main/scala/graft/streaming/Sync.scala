@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.config.TableConfig
-import graft.operators.{SchemaTransform, SnapshotStore}
+import graft.operators.{CountedWrite, SchemaTransform, SnapshotStore}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -57,32 +57,36 @@ object Sync {
       collection: DataFrame,
       config: TableConfig,
       tableDir: String): (Long, Long) = {
-    // this is by definition the full-corpus path: persist the source so the
-    // valid write, the reject count and the reject write all run off ONE
-    // collection scan (MEMORY_AND_DISK — at snapshot scale the spill is a
-    // local shadow copy, still cheaper than three scans over the source)
+    // this is by definition the full-corpus path, and the source may be a
+    // live scan that must be read once: persist it so the valid write and
+    // the reject write both run off ONE collection scan (MEMORY_AND_DISK
+    // — at snapshot scale the spill is a local shadow copy, still cheaper
+    // than a second scan over the source)
     val cached = collection.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val t = SchemaTransform(cached, config)
-      // the sink's column order (its SchemaTransform `keep` columns
-      // first): Spark takes a parquet dir's schema from one part file, so
-      // snapshot and stream files must agree or the read order depends
-      // on file names
-      val meta = Seq(lit(null).cast("long").as("offset"),
-        lit(0L).as(config.versionColumn), lit(0).as(config.deletedColumn))
-      val rows = t.valid.select(meta ++ t.valid.columns.map(col): _*)
-      val n = SnapshotStore.writeSnapshot(spark, rows, tableDir)
-      val rejects = t.errors
-      val nRejects = rejects.count()
+      // the reject count is observed on the valid write's own job
+      val ((t, n), counted) = CountedWrite(count_if(SchemaTransform.rejected).as("rejects")) {
+        observe =>
+          val t = SchemaTransform.split(cached, config, Nil)(observe)
+          // the sink's column order (its SchemaTransform `keep` columns
+          // first): Spark takes a parquet dir's schema from one part file,
+          // so snapshot and stream files must agree or the read order
+          // depends on file names
+          val meta = Seq(lit(null).cast("long").as("offset"),
+            lit(0L).as(config.versionColumn), lit(0).as(config.deletedColumn))
+          val rows = t.valid.select(meta ++ t.valid.columns.map(col): _*)
+          (t, SnapshotStore.writeSnapshot(spark, rows, tableDir))
+      }({ case (t, _) => Row(t.errors.count()) })
+      val nRejects = counted.getLong(0)
       // batch_id = -1 marks the snapshot partition: a re-run snapshot
       // OVERWRITES its own rejects instead of appending a duplicate set
       // — consistent with the snapshot itself replacing the table
-      if (nRejects > 0) CdcStream.writeRejects(rejects, tableDir, -1L)
+      if (nRejects > 0) CdcStream.writeRejects(t.errors, tableDir, -1L)
       else {
         // a clean re-run must also CLEAR a previous snapshot's rejects:
-        // dynamic overwrite with zero rows writes nothing, so without
-        // this an operator auditing the E1 log sees phantom rejects the
-        // live snapshot never produced
+        // no reject write runs for it, so without this an operator
+        // auditing the E1 log sees phantom rejects the live snapshot
+        // never produced
         val stale = new Path(tableDir + ".deadletter", "batch_id=-1")
         val fs = stale.getFileSystem(spark.sparkContext.hadoopConfiguration)
         if (fs.exists(stale)) fs.delete(stale, true)

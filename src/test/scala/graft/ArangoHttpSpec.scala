@@ -195,7 +195,7 @@ class ArangoHttpSpec extends SparkSpec {
   test("cursor scan pages to exhaustion, tail spools into WalSource, ticks line up") {
     val m = new MiniArango
     try {
-      val spool = Files.createTempDirectory("arango-spool").toString
+      val spool = tempDir("arango-spool").toString
       val src = ArangoHttpCollectionSource(cfgFor(m), "events", spool, batchSize = 2)
 
       // snapshot: all 5 docs across 3 cursor pages, schema inferred; the
@@ -238,7 +238,7 @@ class ArangoHttpSpec extends SparkSpec {
         .load(spool)
       val q = streamed.writeStream.format("memory").queryName("arango_wal")
         .option("checkpointLocation",
-          Files.createTempDirectory("arango-ck").toString)
+          tempDir("arango-ck").toString)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
@@ -250,7 +250,7 @@ class ArangoHttpSpec extends SparkSpec {
   test("a long backlog lands as multiple bounded chunks with contiguous ticks") {
     val m = new MiniArango
     try {
-      val spool = Files.createTempDirectory("arango-bounded").toString
+      val spool = tempDir("arango-bounded").toString
       val src = ArangoHttpCollectionSource(cfgFor(m), "events", spool)
       // 20 pending ticks, chunk bound 8: the pump must LOOP bounded tail
       // calls (the reference's chunk_size discipline, settings.yaml:32),
@@ -274,7 +274,7 @@ class ArangoHttpSpec extends SparkSpec {
   test("a new snapshot sweeps stale snapshot spool dirs but never fresh ones") {
     val m = new MiniArango
     try {
-      val spool = Files.createTempDirectory("arango-sweep")
+      val spool = tempDir("arango-sweep")
       val stale = Files.createDirectory(spool.resolve("snapshot-stale"))
       Files.write(stale.resolve("page-000000.json"), "{}".getBytes)
       val fresh = Files.createDirectory(spool.resolve("snapshot-fresh"))
@@ -293,7 +293,7 @@ class ArangoHttpSpec extends SparkSpec {
   test("distributed scan opens one key-range cursor per partition and reunites exactly") {
     val m = new MiniArango
     try {
-      val spool = Files.createTempDirectory("arango-dist").toString
+      val spool = tempDir("arango-dist").toString
       val src = ArangoHttpCollectionSource(cfgFor(m), "events", spool, batchSize = 2)
 
       // 2 partitions: boundary probe at offset 5/2=2 → "k03"; ranges
@@ -361,15 +361,15 @@ class ArangoHttpSpec extends SparkSpec {
     import org.apache.spark.sql.types._
     val m = new MiniArango
     try {
-      val spool = Files.createTempDirectory("rs-spool").toString
+      val spool = tempDir("rs-spool").toString
       val src = ArangoHttpCollectionSource(cfgFor(m), "events", spool, batchSize = 2)
       val config = TableConfig("Doc", Seq(
         ColumnSpec("K", Seq("int"), ref = Some("k"), primaryKey = true),
         ColumnSpec("V", Seq("float"), ref = Some("v"), default = Some(0.0))))
       val payloadSchema = StructType(Seq(
         StructField("k", LongType), StructField("v", StringType)))
-      val tableDir = Files.createTempDirectory("rs-tbl").toString
-      val ckpt = Files.createTempDirectory("rs-ck").toString
+      val tableDir = tempDir("rs-tbl").toString
+      val ckpt = tempDir("rs-ck").toString
       val clock = lit("2024-01-01").cast("timestamp")
 
       // backlog already in the WAL when the resync begins: ticks 1..20
@@ -420,7 +420,7 @@ class ArangoHttpSpec extends SparkSpec {
     import org.apache.spark.sql.types._
     val m = new MiniArango
     try {
-      val spool = Files.createTempDirectory("rsd-spool").toString
+      val spool = tempDir("rsd-spool").toString
       val src = ArangoHttpCollectionSource(cfgFor(m), "events", spool,
         batchSize = 2, scanPartitions = 2)
       val config = TableConfig("Doc", Seq(
@@ -429,8 +429,8 @@ class ArangoHttpSpec extends SparkSpec {
       val payloadSchema = StructType(Seq(
         StructField("k", LongType), StructField("v", StringType)))
       val r = graft.streaming.Sync.resync(spark, src, config, payloadSchema,
-        Files.createTempDirectory("rsd-tbl").toString,
-        Files.createTempDirectory("rsd-ck").toString,
+        tempDir("rsd-tbl").toString,
+        tempDir("rsd-ck").toString,
         collectionIds = Seq("c1"), clock = lit("2024-01-01").cast("timestamp"),
         trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
         queryName = None)
@@ -459,7 +459,7 @@ class ArangoHttpSpec extends SparkSpec {
       // (absence observable, never invented), exactly like a
       // mergeSchema read across old and new parquet files
       m.schemaCutover = 22L
-      val spool = Files.createTempDirectory("ev-spool").toString
+      val spool = tempDir("ev-spool").toString
       val src = ArangoHttpCollectionSource(cfgFor(m), "events", spool)
       val config = TableConfig("Doc", Seq(
         ColumnSpec("K", Seq("int"), ref = Some("k"), primaryKey = true),
@@ -468,8 +468,8 @@ class ArangoHttpSpec extends SparkSpec {
       val payloadSchema = StructType(Seq(
         StructField("k", LongType), StructField("v", StringType),
         StructField("w", LongType)))
-      val tableDir = Files.createTempDirectory("ev-tbl").toString
-      val ckpt = Files.createTempDirectory("ev-ck").toString
+      val tableDir = tempDir("ev-tbl").toString
+      val ckpt = tempDir("ev-ck").toString
       m.headTick = 24L
       assert(src.pump() === Some((1L, 24L)))
       val q = graft.streaming.CdcStream.startReplication(
@@ -495,7 +495,7 @@ class ArangoHttpSpec extends SparkSpec {
   test("a boundary-re-including tail is deduped; a non-advancing tail fails loudly") {
     val m = new MiniArango
     try {
-      val spool = Files.createTempDirectory("arango-stuck").toString
+      val spool = tempDir("arango-stuck").toString
       val src = ArangoHttpCollectionSource(cfgFor(m), "events", spool)
       m.headTick = 5L
       assert(src.pump() === Some((1L, 5L)))
@@ -529,7 +529,7 @@ class ArangoHttpSpec extends SparkSpec {
   test("collection names that could inject AQL are rejected before any splice") {
     val m = new MiniArango
     try {
-      val spool = Files.createTempDirectory("arango-inj").toString
+      val spool = tempDir("arango-inj").toString
       // the page-spool source validates at construction
       val e1 = intercept[IllegalArgumentException](
         ArangoHttpCollectionSource(cfgFor(m), "c RETURN 1; FOR x IN secrets", spool))

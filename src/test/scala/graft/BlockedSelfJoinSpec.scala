@@ -71,8 +71,7 @@ class BlockedSelfJoinSpec extends SparkSpec {
     // collect_list expansion. With chunkSize=256 the bucket splits into
     // 3 chunks; the full quadratic pair set must still come out, once.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("d6skew")
-    dir.toFile.deleteOnExit()
+    val dir = tempDir("d6skew")
     val text = (1 to 30).map(i => s"tok$i").mkString(" ")
     (1 to 600).map(i => (i.toLong, text)).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path}
 import graft.config.{ColumnSpec, TableConfig}
-import graft.operators.SnapshotStore
+import graft.operators.{CountedWrite, SnapshotStore}
 import graft.streaming.CdcStream
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -15,12 +15,6 @@ import org.apache.spark.sql.types._
   * handoff (replication/replicator/store.py:51-58).
   */
 class CdcStreamSpec extends SparkSpec {
-
-  private def tmp(prefix: String): Path = {
-    val p = Files.createTempDirectory(prefix)
-    p.toFile.deleteOnExit()
-    p
-  }
 
   private val config = TableConfig(
     name = "Doc",
@@ -63,7 +57,7 @@ class CdcStreamSpec extends SparkSpec {
     CdcStream.currentView(spark, tableDir.toString, keys = Seq("K"))
 
   test("snapshot + CDC batches converge to latest-version state") {
-    val walDir = tmp("wal"); val tableDir = tmp("tbl"); val ckpt = tmp("ckpt")
+    val walDir = tempDir("wal"); val tableDir = tempDir("tbl"); val ckpt = tempDir("ckpt")
 
     // snapshot: keys 1,2 at _ver below any CDC version
     import spark.implicits._
@@ -91,7 +85,7 @@ class CdcStreamSpec extends SparkSpec {
   }
 
   test("replay of the whole stream is idempotent (at-least-once + versioned sink)") {
-    val walDir = tmp("wal"); val tableDir = tmp("tbl"); val ckpt1 = tmp("ck1")
+    val walDir = tempDir("wal"); val tableDir = tempDir("tbl"); val ckpt1 = tempDir("ck1")
 
     writeWal(walDir, "wal-11-13.json", Seq(
       walLine(11, 11, 2300, "c1", """{"k": 1, "v": "1.5"}"""),
@@ -104,7 +98,7 @@ class CdcStreamSpec extends SparkSpec {
 
     // fresh checkpoint = full replay: every append lands AGAIN (duplicate
     // rows in storage), yet the read view must not change
-    runOnce(walDir, tableDir, tmp("ck2"))
+    runOnce(walDir, tableDir, tempDir("ck2"))
     val twice = current(tableDir).select("K", "V").orderBy("K")
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
@@ -116,12 +110,12 @@ class CdcStreamSpec extends SparkSpec {
   }
 
   test("sink commit ledger: a re-delivered batchId is not appended twice") {
-    val walDir = tmp("wal"); val ckpt = tmp("ck")
+    val walDir = tempDir("wal"); val ckpt = tempDir("ck")
     writeWal(walDir, "wal-11-11.json", Seq(
       walLine(11, 11, 2300, "c1", """{"k": 1, "v": "1.5"}""")))
 
     // normal run: data lands and the batch marker is written
-    val t1 = tmp("tbl1")
+    val t1 = tempDir("tbl1")
     runOnce(walDir, t1, ckpt)
     assert(spark.read.parquet(t1.toString).count() === 1)
     val commits = ckpt.resolve("graft-sink-commits")
@@ -131,8 +125,8 @@ class CdcStreamSpec extends SparkSpec {
     // a marker pre-seeded in a FRESH checkpoint simulates the retry of a
     // batch whose sink write already committed: the foreachBatch body
     // must skip the append entirely (no table dir is ever created)
-    val ckpt2 = tmp("ck2")
-    val t2 = tmp("tbl2").resolve("t") // not created: skip must never write it
+    val ckpt2 = tempDir("ck2")
+    val t2 = tempDir("tbl2").resolve("t") // not created: skip must never write it
     val pre = ckpt2.resolve("graft-sink-commits")
     Files.createDirectories(pre)
     Files.write(pre.resolve(f"batch-${0L}%020d"), Array.empty[Byte])
@@ -145,12 +139,12 @@ class CdcStreamSpec extends SparkSpec {
   }
 
   test("compact() collapses storage without changing the read view") {
-    val walDir = tmp("wal"); val tableDir = tmp("tbl")
+    val walDir = tempDir("wal"); val tableDir = tempDir("tbl")
     writeWal(walDir, "wal-11-13.json", Seq(
       walLine(11, 11, 2300, "c1", """{"k": 1, "v": "1.0"}"""),
       walLine(12, 12, 2300, "c1", """{"k": 1, "v": "1.1"}"""),
       walLine(13, 13, 2302, "c1", """{"k": 2, "v": "0"}""")))
-    runOnce(walDir, tableDir, tmp("ck"))
+    runOnce(walDir, tableDir, tempDir("ck"))
 
     val before = current(tableDir).select("K", "V").orderBy("K").collect().toSeq
     val rows = CdcStream.compact(spark, tableDir.toString, keys = Seq("K"))
@@ -174,17 +168,17 @@ class CdcStreamSpec extends SparkSpec {
         walLine(10L + i, 10L + i, 2300, "c1", s"""{"k": 1, "v": "$i.0"}""")))
     }
     def run(tableDir: Path, cadence: Option[Int]): Unit = {
-      val walDir = tmp("wal")
+      val walDir = tempDir("wal")
       seed(walDir)
       val q = CdcStream.startReplication(
         wal(walDir, maxChunksPerTrigger = Some(1)),
-        config, payloadSchema, tableDir.toString, tmp("ck").toString,
+        config, payloadSchema, tableDir.toString, tempDir("ck").toString,
         collectionIds = Seq("c1"), initialTick = Some(10L), clock = clock,
         compactEvery = cadence)
       q.awaitTermination()
     }
-    val plain = tmp("tblplain"); run(plain, None)
-    val compacted = tmp("tblcomp"); run(compacted, Some(2))
+    val plain = tempDir("tblplain"); run(plain, None)
+    val compacted = tempDir("tblcomp"); run(compacted, Some(2))
     // identical read view either way: the latest upsert wins
     val viewOf = (d: Path) => current(d).select("K", "V").orderBy("K")
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -201,12 +195,12 @@ class CdcStreamSpec extends SparkSpec {
   }
 
   test("compact() refuses to run while the table's replication query is active") {
-    val walDir = tmp("wal"); val tableDir = tmp("tbl")
+    val walDir = tempDir("wal"); val tableDir = tempDir("tbl")
     writeWal(walDir, "wal-11-11.json", Seq(
       walLine(11, 11, 2300, "c1", """{"k": 1, "v": "1.0"}""")))
     val q = CdcStream.startReplication(
       wal(walDir), config, payloadSchema,
-      tableDir.toString, tmp("ck").toString, collectionIds = Seq("c1"),
+      tableDir.toString, tempDir("ck").toString, collectionIds = Seq("c1"),
       initialTick = Some(10L), clock = clock,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"))
     try {
@@ -223,11 +217,13 @@ class CdcStreamSpec extends SparkSpec {
   }
 
   test("transform rejects land in the dead-letter table") {
-    val walDir = tmp("wal"); val tableDir = tmp("tbl")
+    // the dead-letter table is a sibling of the table dir: keep both
+    // inside one temp dir
+    val walDir = tempDir("wal"); val tableDir = tempDir("tbl").resolve("t")
     writeWal(walDir, "wal-11-12.json", Seq(
       walLine(11, 11, 2300, "c1", """{"k": 1, "v": "1.0"}"""),
       walLine(12, 12, 2300, "c1", """{"v": "no key"}"""))) // missing pk
-    runOnce(walDir, tableDir, tmp("ck"))
+    runOnce(walDir, tableDir, tempDir("ck"))
 
     assert(current(tableDir).count() === 1)
     val dead = spark.read.parquet(tableDir.toString + ".deadletter")
@@ -239,20 +235,53 @@ class CdcStreamSpec extends SparkSpec {
     // so its storage must be idempotent at the WRITE: a crash between
     // the reject write and the sink commit marker re-delivers the batch,
     // and the re-write must land in the SAME batch partition instead of
-    // appending a duplicate reject set. Re-run the exact sink write for
-    // the same batch id and assert the log did not grow.
-    val replay = dead.drop("batch_id")
-      .withColumn("batch_id", org.apache.spark.sql.functions.lit(0L))
-    replay.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(tableDir.toString + ".deadletter")
-    assert(spark.read.parquet(tableDir.toString + ".deadletter").count() === 1,
-      "a re-delivered batch duplicated its deadletter rows")
+    // appending a duplicate reject set. Re-run the sink's reject write
+    // for the same batch id, twice, and assert the log did not grow.
+    val rejects = spark.createDataFrame(
+      java.util.Arrays.asList(dead.drop("batch_id").collect(): _*),
+      dead.drop("batch_id").schema)
+    CdcStream.writeRejects(rejects, tableDir.toString, 0L)
+    CdcStream.writeRejects(rejects, tableDir.toString, 0L)
+    val replayed = spark.read.parquet(tableDir.toString + ".deadletter")
+    assert(replayed.count() === 1, "a re-delivered batch duplicated its deadletter rows")
+    assert(replayed.select("batch_id").collect().map(_.getInt(0)).toSeq === Seq(0))
+  }
+
+  test("sink jobs per batch: one for a clean or all-filtered batch, two with rejects") {
+    val walDir = tempDir("wal"); val tableDir = tempDir("tbl").resolve("t")
+    writeWal(walDir, "wal-11-12.json", Seq(
+      walLine(11, 11, 2300, "c1", """{"k": 1, "v": "1.0"}"""),
+      walLine(12, 12, 2300, "c1", """{"v": "no key"}"""))) // reject
+    writeWal(walDir, "wal-13-13.json", Seq(
+      walLine(13, 13, 2300, "c1", """{"k": 2, "v": "2.0"}""")))
+    writeWal(walDir, "wal-14-15.json", Seq(
+      walLine(14, 14, 2200, "c1", """{"k": 9, "v": "9.9"}"""),   // txn marker
+      walLine(15, 15, 2300, "c2", """{"k": 8, "v": "8.8"}"""))) // foreign collection
+    val (q, jobs) = jobsDuring {
+      val q = CdcStream.startReplication(
+        wal(walDir, maxChunksPerTrigger = Some(1)), config, payloadSchema,
+        tableDir.toString, tempDir("ck").toString,
+        collectionIds = Seq("c1"), initialTick = Some(10L), clock = clock)
+      q.awaitTermination()
+      q
+    }
+    val perBatch = jobs.filter(_._1 == q.runId.toString)
+      .groupBy(_._2).map { case (b, js) => b -> js.size }
+    // the reject count rides the valid append: only a batch with rejects
+    // pays a second job (the reject write); no probe, no fallback count
+    assert(perBatch === Map("0" -> 2, "1" -> 1, "2" -> 1))
+    // the all-filtered batch got its (zero) count from the observation,
+    // not by waiting out the bound
+    q.recentProgress.foreach { p =>
+      assert(p.durationMs.get("addBatch") < CountedWrite.Wait.toMillis,
+        s"batch ${p.batchId} took ${p.durationMs.get("addBatch")} ms in the sink")
+    }
+    assert(current(tableDir).count() === 2)
+    assert(spark.read.parquet(tableDir.toString + ".deadletter").count() === 1)
   }
 
   test("replication end-to-end over the custom WAL streaming source") {
-    val walDir = tmp("walsrc"); val tableDir = tmp("tbl")
+    val walDir = tempDir("walsrc"); val tableDir = tempDir("tbl")
     // tick-ranged chunk naming — the WalSource contract
     Files.write(walDir.resolve("wal-11-13.json"), java.util.Arrays.asList(
       walLine(11, 11, 2300, "c1", """{"k": 1, "v": "1.0"}"""),
@@ -263,7 +292,7 @@ class CdcStreamSpec extends SparkSpec {
 
     val q = CdcStream.startReplication(
       wal(walDir), config, payloadSchema,
-      tableDir.toString, tmp("ck").toString,
+      tableDir.toString, tempDir("ck").toString,
       collectionIds = Seq("c1"), clock = clock)
     q.awaitTermination()
 

@@ -6,7 +6,6 @@ import org.apache.spark.TaskContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One-shot task-failure fuse (VERDICT r11 #3): arm(k) makes the next k
@@ -52,7 +51,7 @@ object ChaosFuse {
   * JVM, so the next suite's getOrCreate lazily rebuilds the default.
   */
 @graft.tags.Soak
-class ChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ChaosSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = {
     SparkSession.getActiveSession.foreach(_.stop())
@@ -70,11 +69,11 @@ class ChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
       .getOrCreate()
   }
 
-  override def afterAll(): Unit = {
+  override def afterAll(): Unit = try {
     spark.stop()
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-  }
+  } finally super.afterAll()
 
   private def fused(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
@@ -187,7 +186,7 @@ class ChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
     def walLine(offset: Long, opType: Int, data: String): String =
       s"""{"offset":$offset,"tick":"$offset","type":$opType,"db":"d","cuid":"c1","tid":"t","data":${
         if (data == null) "null" else "\"" + data.replace("\"", "\\\"") + "\""}}"""
-    val walDir = Files.createTempDirectory("chaoswal")
+    val walDir = tempDir("chaoswal")
     // two chunks + maxChunksPerTrigger=1 -> two micro-batches, so the
     // ledger has real multi-batch structure to keep clean under chaos
     Files.write(walDir.resolve("wal-11-12.json"), String.join("\n",
@@ -199,7 +198,7 @@ class ChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     def run(withFuse: Boolean, tag: String)
         : (Seq[(Long, Double)], Long, Seq[String]) = {
-      val root = Files.createTempDirectory(s"chaoscdc_$tag")
+      val root = tempDir(s"chaoscdc_$tag")
       val tableDir = root.resolve("t").toString
       val ckpt = root.resolve("ck").toString
       val wal0 = spark.readStream.format("graft.sources.WalSource")

@@ -161,6 +161,39 @@ class ConnectedComponentsSpec extends SparkSpec {
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
+  test("a counted write whose observation misses the bound returns the exact counts") {
+    val store = TableRounds(spark, "cc_fallback")
+    val df = (0L until 257L).map(i => (i + 1, i)).toDF("src", "dst")
+    val metrics = Seq(count(lit(1)).as("rows"),
+      bit_xor(xxhash64(col("src"), col("dst"))).as("sig"))
+    val expected = df.agg(metrics.head, metrics.tail: _*).head()
+    // hold the shared listener queue at the write's job end: the
+    // observation is delivered on that queue, so it cannot arrive before
+    // the zero bound has expired
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val stall = new org.apache.spark.scheduler.SparkListener {
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        release.await(30, java.util.concurrent.TimeUnit.SECONDS)
+    }
+    var fellBack = false
+    spark.sparkContext.addSparkListener(stall)
+    try {
+      val (_, got) = graft.operators.CountedWrite(metrics: _*)(
+        observe => store.put(observe(df), 0))(
+        out => {
+          fellBack = true
+          release.countDown()
+          out.agg(metrics.head, metrics.tail: _*).head()
+        }, wait = scala.concurrent.duration.Duration.Zero)
+      assert(fellBack, "the zero bound did not take the fallback")
+      assert(got === expected)
+    } finally {
+      release.countDown()
+      spark.sparkContext.removeSparkListener(stall)
+      Seq("cc_fallback_0", "cc_fallback_1").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
+  }
+
   test("non-convergence inside the round bound fails loudly, not silently") {
     val e = intercept[IllegalArgumentException] {
       labelsOf(

@@ -86,7 +86,7 @@ class FixtureCanarySpec extends SparkSpec {
 
   test("the loader rejects an unknown events.ts encoding loudly, not silently") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("broken_fixture").toString
+    val dir = tempDir("broken_fixture").toString
     // a fixture generation nobody planned for: ts written as STRING
     spark.range(3).select(col("id").as("event_id"),
         lit("2024-01-01T00:00:00").as("ts"), col("id").as("user_id"),

@@ -24,12 +24,6 @@ import org.apache.spark.sql.types._
 @graft.tags.Soak
 class JdbcSinkSpec extends SparkSpec {
 
-  private def tmp(prefix: String): Path = {
-    val p = Files.createTempDirectory(prefix)
-    p.toFile.deleteOnExit()
-    p
-  }
-
   private val schema = StructType(Seq(
     StructField("k", LongType), StructField("v", StringType),
     StructField("_ver", LongType)))
@@ -54,13 +48,13 @@ class JdbcSinkSpec extends SparkSpec {
 
   test("micro-batches append into Derby and values survive the round trip") {
     val url = "jdbc:derby:memory:graft_rt;create=true"
-    val srcDir = tmp("jdbc_src")
+    val srcDir = tempDir("jdbc_src")
     writeBatch(srcDir, "b1.json", Seq((1L, "one", 11L), (2L, "two", 12L)))
-    runStream(srcDir, url, "changes_rt", tmp("jdbc_ck"))
+    runStream(srcDir, url, "changes_rt", tempDir("jdbc_ck"))
     // a second file = a second micro-batch through the SAME foreachBatch
     val src = spark.readStream.schema(schema).json(srcDir.toString)
     val q = JdbcSink.start(src, url, "changes_rt", "app", "app",
-      tmp("jdbc_ck2").toString, batchSize = 2)
+      tempDir("jdbc_ck2").toString, batchSize = 2)
     try {
       q.processAllAvailable()
       writeBatch(srcDir, "b2.json", Seq((1L, "one-v2", 21L), (3L, "three", 22L)))
@@ -79,10 +73,10 @@ class JdbcSinkSpec extends SparkSpec {
 
   test("redelivered duplicates collapse in the versioned read view, not the transport") {
     val url = "jdbc:derby:memory:graft_dup;create=true"
-    val srcDir = tmp("jdbc_src2")
+    val srcDir = tempDir("jdbc_src2")
     writeBatch(srcDir, "b1.json", Seq((1L, "a", 1L), (1L, "b", 2L), (2L, "c", 1L)))
-    runStream(srcDir, url, "changes_dup", tmp("jdbc_ck3"))
-    runStream(srcDir, url, "changes_dup", tmp("jdbc_ck4")) // fresh ckpt = replay
+    runStream(srcDir, url, "changes_dup", tempDir("jdbc_ck3"))
+    runStream(srcDir, url, "changes_dup", tempDir("jdbc_ck4")) // fresh ckpt = replay
     val raw = readBack(url, "changes_dup")
     assert(raw.count() === 6, "replay must append duplicates (at-least-once)")
     // V1 latest-wins over the JDBC-backed table: same view as one delivery
@@ -103,12 +97,12 @@ class JdbcSinkSpec extends SparkSpec {
 
   test("upsert mode: redelivery does not grow the raw table; view is value-exact") {
     val url = "jdbc:derby:memory:graft_up;create=true"
-    val srcDir = tmp("jdbc_src3")
+    val srcDir = tempDir("jdbc_src3")
     // in-batch duplicate key (1): the batch collapses to its latest row
     // per key BEFORE the merge (two matches on one target row would be
     // an illegal MERGE), so only (1,"b",2) lands
     writeBatch(srcDir, "b1.json", Seq((1L, "a", 1L), (1L, "b", 2L), (2L, "c", 1L)))
-    runUpsert(srcDir, url, "changes_up", tmp("jdbc_ck5"))
+    runUpsert(srcDir, url, "changes_up", tempDir("jdbc_ck5"))
     def rows() = readBack(url, "changes_up")
       .select("k", "v", "_ver").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq.sorted
@@ -117,7 +111,7 @@ class JdbcSinkSpec extends SparkSpec {
 
     // fresh checkpoint = full redelivery: in APPEND mode this doubles the
     // raw table (proven in the test above); upsert must leave it EXACT
-    runUpsert(srcDir, url, "changes_up", tmp("jdbc_ck6"))
+    runUpsert(srcDir, url, "changes_up", tempDir("jdbc_ck6"))
     assert(rows() === Seq((1L, "b", 2L), (2L, "c", 1L)),
       "redelivered batch grew or altered the upserted table")
 
@@ -125,14 +119,14 @@ class JdbcSinkSpec extends SparkSpec {
     // version updates in place, a new key inserts
     writeBatch(srcDir, "b2.json",
       Seq((1L, "a-stale", 1L), (2L, "c2", 7L), (3L, "d", 5L)))
-    runUpsert(srcDir, url, "changes_up", tmp("jdbc_ck7"))
+    runUpsert(srcDir, url, "changes_up", tempDir("jdbc_ck7"))
     assert(rows() === Seq((1L, "b", 2L), (2L, "c2", 7L), (3L, "d", 5L)),
       "merge did not apply latest-wins per row")
 
     // the upserted table IS the read view: value-exact with what the
     // append-mode path + versioned collapse produces from the same log
     val appendUrl = "jdbc:derby:memory:graft_up_ref;create=true"
-    runStream(srcDir, appendUrl, "changes_ref", tmp("jdbc_ck8"))
+    runStream(srcDir, appendUrl, "changes_ref", tempDir("jdbc_ck8"))
     val viaAppend = graft.operators.ReplicaTable
       .current(readBack(appendUrl, "changes_ref").withColumn("_deleted", lit(0)),
         keys = Seq("k"), ver = "_ver")
@@ -200,7 +194,7 @@ class JdbcSinkSpec extends SparkSpec {
     for (point <- Seq("post-stage-write-first", "post-create-first")) {
       dbIdx += 1
       val url = s"jdbc:derby:memory:graft_cm$dbIdx;create=true"
-      val srcDir = tmp("jdbc_cm_src"); val ckpt = tmp("jdbc_cm_ck")
+      val srcDir = tempDir("jdbc_cm_src"); val ckpt = tempDir("jdbc_cm_ck")
       val stage = stageNameFor("t_cm", ckpt)
       strandStage(url, stage, b1)
       if (point == "post-create-first")
@@ -219,7 +213,7 @@ class JdbcSinkSpec extends SparkSpec {
          followup <- Seq("restart", "redelivery")) {
       dbIdx += 1
       val url = s"jdbc:derby:memory:graft_cm$dbIdx;create=true"
-      val srcDir = tmp("jdbc_cm_src"); val ckpt = tmp("jdbc_cm_ck")
+      val srcDir = tempDir("jdbc_cm_src"); val ckpt = tempDir("jdbc_cm_ck")
       writeBatch(srcDir, "b1.json", b1)
       runUpsert(srcDir, url, "t_cm", ckpt) // clean batch 0
       val stage = stageNameFor("t_cm", ckpt)
@@ -238,7 +232,7 @@ class JdbcSinkSpec extends SparkSpec {
         case "redelivery" =>
           // checkpoint loss: a fresh query identity reprocesses the
           // whole source against the already-advanced target
-          runUpsert(srcDir, url, "t_cm", tmp("jdbc_cm_ck2"))
+          runUpsert(srcDir, url, "t_cm", tempDir("jdbc_cm_ck2"))
       }
       assert(rows(url) === afterB2,
         s"[$point/$followup] target not exactly-once: ${rows(url)}")
@@ -251,12 +245,12 @@ class JdbcSinkSpec extends SparkSpec {
     // would grow without bound — the exact failure upsert mode exists to
     // prevent; the ON clause must match null-safely
     val url = "jdbc:derby:memory:graft_upnull;create=true"
-    val srcDir = tmp("jdbc_src4")
+    val srcDir = tempDir("jdbc_src4")
     Files.write(srcDir.resolve("b1.json"),
       Seq("""{"k":null,"v":"n","_ver":1}""", """{"k":1,"v":"a","_ver":1}""")
         .mkString("\n").getBytes("UTF-8"))
-    runUpsert(srcDir, url, "changes_un", tmp("jdbc_ck9"))
-    runUpsert(srcDir, url, "changes_un", tmp("jdbc_ck10")) // fresh ckpt = replay
+    runUpsert(srcDir, url, "changes_un", tempDir("jdbc_ck9"))
+    runUpsert(srcDir, url, "changes_un", tempDir("jdbc_ck10")) // fresh ckpt = replay
     def rows() = readBack(url, "changes_un")
       .select("k", "v", "_ver").collect()
       .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
@@ -267,7 +261,7 @@ class JdbcSinkSpec extends SparkSpec {
     // and the NULL key still advances in place like any other key
     Files.write(srcDir.resolve("b2.json"),
       Seq("""{"k":null,"v":"n2","_ver":5}""").mkString("\n").getBytes("UTF-8"))
-    runUpsert(srcDir, url, "changes_un", tmp("jdbc_ck11"))
+    runUpsert(srcDir, url, "changes_un", tempDir("jdbc_ck11"))
     assert(rows() === Seq((None, "n2", 5L), (Some(1L), "a", 1L)),
       "NULL-keyed row did not update in place")
   }

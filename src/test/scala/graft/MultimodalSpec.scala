@@ -158,7 +158,7 @@ class MultimodalSpec extends SparkSpec {
     // frameSize 16 / stride 8; byte sums: 16 a's = 1552, 8a+8z = 1752,
     // 16 z's = 1952; the 10% rule cuts on both the 1552->1752 and
     // 1752->1952 transitions (delta 200, x10 = 2000 > prev)
-    val dir = java.nio.file.Files.createTempDirectory("m8_fixture").toString
+    val dir = tempDir("m8_fixture").toString
     Seq(
       (1L, "a" * 40), // 4 flat frames -> one scene
       (2L, "a" * 16 + "z" * 16), // 3 frames, every transition cuts

@@ -25,7 +25,7 @@ import scala.sys.process._
   * classpath — the test shells out, and cancels (not passes) when the
   * interpreter is unavailable so the gate can't silently rot.
   */
-class OracleGateSpec extends AnyFunSuite {
+class OracleGateSpec extends AnyFunSuite with TempDirs {
 
   private val fixtures = "/root/testdata/sf0.001"
 
@@ -45,7 +45,7 @@ class OracleGateSpec extends AnyFunSuite {
   test("every catalog oracle executes against DuckDB (sf0.001)") {
     assume(duckdbAvailable, "python3+duckdb unavailable — gate cannot run here")
     assume(Files.isDirectory(Paths.get(fixtures)), s"fixtures missing: $fixtures")
-    val dir = Files.createTempDirectory("oracle_gate")
+    val dir = tempDir("oracle_gate")
     SparkEntry.oracleSql.foreach { case (name, sql) =>
       Files.writeString(dir.resolve(s"$name.sql"), sql)
     }

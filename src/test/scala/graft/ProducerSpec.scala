@@ -62,8 +62,8 @@ class ProducerSpec extends SparkSpec {
     val mon = new QueryMonitor(onGap = (_, lo, hi, kind) => gaps ::= (lo, hi, kind))
     spark.streams.addListener(mon)
     try {
-      val walDir = Files.createTempDirectory("walmon")
-      val tableDir = Files.createTempDirectory("tblmon").resolve("t")
+      val walDir = tempDir("walmon")
+      val tableDir = tempDir("tblmon").resolve("t")
       for ((name, lines) <- chunks)
         Files.write(walDir.resolve(name), java.util.Arrays.asList(lines: _*))
       val config = TableConfig("Doc", Seq(
@@ -74,7 +74,7 @@ class ProducerSpec extends SparkSpec {
           .option("maxChunksPerTrigger", "1").load(walDir.toString),
         config,
         StructType(Seq(StructField("k", LongType), StructField("v", StringType))),
-        tableDir.toString, Files.createTempDirectory("ckmon").toString,
+        tableDir.toString, tempDir("ckmon").toString,
         queryName = Some(query))
       q.awaitTermination()
       val deadline = System.currentTimeMillis() + 10000

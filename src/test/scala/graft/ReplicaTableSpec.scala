@@ -73,7 +73,7 @@ class ReplicaTableSpec extends SparkSpec {
     */
   private def eventsDir(rows: Seq[(Long, String, Long, String, Double)]): String = {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("events_fixture").toString
+    val dir = tempDir("events_fixture").toString
     rows.toDF("event_id", "ts_s", "user_id", "event_type", "value")
       .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
       .withColumn("props", lit("""{"k":"1"}"""))
@@ -85,7 +85,7 @@ class ReplicaTableSpec extends SparkSpec {
   test("r11: schema evolution backfills typed NULLs and never invents values") {
     import org.apache.spark.sql.functions._
     // planted log, ids 0..10 -> cutover tick = 10 DIV 2 = 5
-    val dir = java.nio.file.Files.createTempDirectory("events_fixture").toString
+    val dir = tempDir("events_fixture").toString
     Seq(
       (1L, 1L, "click", 1.0, 3L),   // gen-1: its payload k is NOT visible
       (3L, 1L, "view", 2.0, 4L),    // gen-1 latest for user 1 -> k NULL
@@ -121,7 +121,7 @@ class ReplicaTableSpec extends SparkSpec {
     // gen-1 stores amount = trunc(value) (old integer units) and
     // legacy_flag = value >= 50; gen-2 stores amount = value (double) and
     // DROPPED legacy_flag.
-    val dir = java.nio.file.Files.createTempDirectory("events_fixture").toString
+    val dir = tempDir("events_fixture").toString
     Seq(
       (1L, 1L, "click", 61.75),  // gen-1, superseded
       (3L, 1L, "view", 12.25),   // gen-1 latest u1: amount 12.0, flag 0
@@ -159,7 +159,7 @@ class ReplicaTableSpec extends SparkSpec {
     // read must surface gen-1 units as exact .0 doubles and gen-2 as
     // exact fractions, with the sibling tag field untouched (a
     // positional-cast bug would swap or corrupt it).
-    val dir = java.nio.file.Files.createTempDirectory("events_fixture").toString
+    val dir = tempDir("events_fixture").toString
     Seq(
       (1L, 1L, "click", 61.75),  // gen-1, superseded
       (3L, 1L, "view", 12.25),   // gen-1 latest u1: units 12.0

@@ -113,13 +113,13 @@ class SmtpAlerterSpec extends SparkSpec {
     })
     spark.streams.addListener(monitor)
     try {
-      val dir = Files.createTempDirectory("smtp-src")
+      val dir = tempDir("smtp-src")
       Files.write(dir.resolve("one.json"), """{"x": 1}""".getBytes)
       val q = spark.readStream.schema("x LONG").json(dir.toString)
         .writeStream
         .queryName("replication_smtp_probe")
         .option("checkpointLocation",
-          Files.createTempDirectory("smtp-ck").toString)
+          tempDir("smtp-ck").toString)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (_: DataFrame, _: Long) =>
           throw new RuntimeException("induced sink failure")

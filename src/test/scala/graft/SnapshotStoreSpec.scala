@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.SnapshotStore
-import java.nio.file.Files
 
 /** Snapshot atomic-swap semantics (reference K3, minus its
   * drop-then-rename visibility gap).
@@ -10,7 +9,7 @@ class SnapshotStoreSpec extends SparkSpec {
   import spark.implicits._
 
   test("writeSnapshot swaps atomically and survives re-snapshot") {
-    val dir = Files.createTempDirectory("snap").toString + "/t"
+    val dir = tempDir("snap").toString + "/t"
     val n1 = SnapshotStore.writeSnapshot(spark, Seq(1, 2, 3).toDF("v"), dir)
     assert(n1 == 3)
     assert(spark.read.parquet(dir).count() == 3)
@@ -30,7 +29,7 @@ class SnapshotStoreSpec extends SparkSpec {
     // FORWARD: live renamed out, complete marked staging present — the
     // crash hit after live->old; recovery must finish the swap (promote
     // staging), not resurrect the stale old
-    val d1 = Files.createTempDirectory("snapf").toString + "/t"
+    val d1 = tempDir("snapf").toString + "/t"
     SnapshotStore.writeSnapshot(spark, Seq(1, 2, 3).toDF("v"), d1)
     // simulate the next swap's crash point: staging fully written +
     // ready-marked, live staged out to .old
@@ -44,7 +43,7 @@ class SnapshotStoreSpec extends SparkSpec {
 
     // BACKWARD: live missing, staging absent or unmarked (crash mid
     // staging-write of a later attempt) — roll the old snapshot back
-    val d2 = Files.createTempDirectory("snapb").toString + "/t"
+    val d2 = tempDir("snapb").toString + "/t"
     SnapshotStore.writeSnapshot(spark, Seq(7, 8).toDF("v"), d2)
     assert(fs.rename(new Path(d2), new Path(d2 + ".old")))
     Seq(99).toDF("v").write.parquet(d2 + ".staging") // NO ready marker
@@ -54,7 +53,7 @@ class SnapshotStoreSpec extends SparkSpec {
 
     // and writeSnapshot itself heals before writing (the in-stream
     // compaction path crashes here too)
-    val d3 = Files.createTempDirectory("snapw").toString + "/t"
+    val d3 = tempDir("snapw").toString + "/t"
     SnapshotStore.writeSnapshot(spark, Seq(1).toDF("v"), d3)
     assert(fs.rename(new Path(d3), new Path(d3 + ".old"))) // staged out, no staging
     val n = SnapshotStore.writeSnapshot(spark, Seq(2, 3).toDF("v"), d3)
@@ -81,7 +80,7 @@ class SnapshotStoreSpec extends SparkSpec {
     // reconstruct the exact state a death immediately AFTER each
     // protocol step leaves on disk
     def mkCrash(point: String): String = {
-      val dir = Files.createTempDirectory(s"cm").toString + "/t"
+      val dir = tempDir(s"cm").toString + "/t"
       if (point != "first-swap-between-renames")
         SnapshotStore.writeSnapshot(spark, oldRows.toDF("v"), dir)
       def stage(marked: Boolean): Unit = {

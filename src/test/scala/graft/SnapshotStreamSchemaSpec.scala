@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 import graft.config.{ColumnSpec, TableConfig}
 import graft.streaming.Sync
@@ -14,12 +14,6 @@ import org.apache.spark.sql.types._
   */
 class SnapshotStreamSchemaSpec extends SparkSpec {
 
-  private def tmp(prefix: String): Path = {
-    val p = Files.createTempDirectory(prefix)
-    p.toFile.deleteOnExit()
-    p
-  }
-
   test("snapshot and stream part files list the same fields in the same order") {
     import spark.implicits._
     val config = TableConfig(
@@ -29,7 +23,7 @@ class SnapshotStreamSchemaSpec extends SparkSpec {
         ColumnSpec("V", Seq("float"), ref = Some("v"), default = Some(0.0))))
     val payloadSchema = StructType(Seq(
       StructField("k", LongType), StructField("v", StringType)))
-    val walDir = tmp("wal"); val tableDir = tmp("tbl"); val colDir = tmp("col")
+    val walDir = tempDir("wal"); val tableDir = tempDir("tbl"); val colDir = tempDir("col")
     Files.write(walDir.resolve("wal-20-21.json"), java.util.Arrays.asList(
       """{"offset":20,"tick":"20","type":2300,"db":"d","cuid":"c1","tid":"t","data":"{\"k\": 4, \"v\": \"4.0\"}"}""",
       """{"offset":21,"tick":"21","type":2300,"db":"d","cuid":"c1","tid":"t","data":"{\"k\": 5, \"v\": \"5.0\"}"}"""))
@@ -39,7 +33,7 @@ class SnapshotStreamSchemaSpec extends SparkSpec {
     // snapshot, then one AvailableNow batch appended to the same dir
     val r = Sync.resync(spark,
       graft.sources.FileCollectionSource(colDir.toString, walDir.toString),
-      config, payloadSchema, tableDir.toString, tmp("ck").toString,
+      config, payloadSchema, tableDir.toString, tempDir("ck").toString,
       collectionIds = Seq("c1"), clock = lit("2024-01-01").cast("timestamp"))
     r.query.awaitTermination()
     assert(r.snapshotRows === 2L)

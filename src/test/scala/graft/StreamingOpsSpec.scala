@@ -13,28 +13,7 @@ import org.apache.spark.sql.types._
   * checkpoint restarts.
   */
 @graft.tags.Soak
-class StreamingOpsSpec extends SparkSpec
-    with org.scalatest.BeforeAndAfterAll {
-
-  // deleteOnExit only removes EMPTY dirs, and these fill with source
-  // files and RocksDB checkpoints — delete recursively after the suite
-  private val created = scala.collection.mutable.ListBuffer.empty[java.nio.file.Path]
-
-  private def tmp(prefix: String) = {
-    val p = Files.createTempDirectory(prefix)
-    created += p
-    p
-  }
-
-  override def afterAll(): Unit = {
-    import scala.jdk.CollectionConverters._
-    created.foreach { root =>
-      if (Files.exists(root))
-        Files.walk(root).iterator().asScala.toSeq.reverseIterator
-          .foreach(p => Files.deleteIfExists(p))
-    }
-    super.afterAll()
-  }
+class StreamingOpsSpec extends SparkSpec {
 
   test("decayAttributionStream: a value-less purchase consumes its segment, credits nothing") {
     import scala.jdk.CollectionConverters._
@@ -42,7 +21,7 @@ class StreamingOpsSpec extends SparkSpec
     // NULL-value purchase but the purchase still delimits segments; the
     // stream's first cut coalesced NULL to 0.0 and emitted zero-credit
     // rows that skewed every n_touches/sum_weight_ppm rollup
-    val src = tmp("dcnull-src"); val ck = tmp("dcnull-ck")
+    val src = tempDir("dcnull-src"); val ck = tempDir("dcnull-ck")
     Files.write(src.resolve("a.json"), Seq(
       twinEv(1, "2024-01-01T09:00:00.000Z", 1, "click"),
       """{"uid":1,"ts":"2024-01-01T09:10:00.000Z","eid":2,"etype":"purchase","value":null}""",
@@ -68,7 +47,7 @@ class StreamingOpsSpec extends SparkSpec
   }
 
   test("transitionStream emits the batch w17 edges across micro-batch boundaries") {
-    val src = tmp("tr-src"); val ckpt = tmp("tr-ck")
+    val src = tempDir("tr-src"); val ckpt = tempDir("tr-ck")
     val schema = StructType(Seq(
       StructField("uid", LongType), StructField("ts", TimestampType),
       StructField("eid", LongType), StructField("etype", StringType)))
@@ -117,7 +96,7 @@ class StreamingOpsSpec extends SparkSpec
   }
 
   test("funnelStream emits the batch w25 stage latencies across micro-batch boundaries") {
-    val src = tmp("fn-src"); val ckpt = tmp("fn-ck")
+    val src = tempDir("fn-src"); val ckpt = tempDir("fn-ck")
     val schema = StructType(Seq(
       StructField("uid", LongType), StructField("ts", TimestampType),
       StructField("eid", LongType), StructField("etype", StringType)))
@@ -176,7 +155,7 @@ class StreamingOpsSpec extends SparkSpec
   }
 
   test("funnelStream's partial funnel survives a checkpoint restart") {
-    val src = tmp("fr-src"); val ckpt = tmp("fr-ck")
+    val src = tempDir("fr-src"); val ckpt = tempDir("fr-ck")
     val schema = StructType(Seq(
       StructField("uid", LongType), StructField("ts", TimestampType),
       StructField("eid", LongType), StructField("etype", StringType)))
@@ -230,7 +209,7 @@ class StreamingOpsSpec extends SparkSpec
   }
 
   test("attributionStream emits the batch w19 credits across micro-batch boundaries") {
-    val src = tmp("at-src"); val ckpt = tmp("at-ck")
+    val src = tempDir("at-src"); val ckpt = tempDir("at-ck")
     val schema = StructType(Seq(
       StructField("uid", LongType), StructField("ts", TimestampType),
       StructField("eid", LongType), StructField("etype", StringType)))
@@ -278,7 +257,7 @@ class StreamingOpsSpec extends SparkSpec
   }
 
   test("decayAttributionStream matches the batch w23 arithmetic and caps state at 20 touches") {
-    val src = tmp("da-src"); val ckpt = tmp("da-ck")
+    val src = tempDir("da-src"); val ckpt = tempDir("da-ck")
     val schema = StructType(Seq(
       StructField("uid", LongType), StructField("ts", TimestampType),
       StructField("eid", LongType), StructField("etype", StringType),
@@ -397,7 +376,7 @@ class StreamingOpsSpec extends SparkSpec
     // file a (user 1 seeds state everywhere) and file b (user 1 returns
     // AFTER the horizon; user 77 is the fresh in-batch sentinel proving
     // batch b was fully processed). User 60 is the batch-a sentinel.
-    val dirs = Seq("fnttl", "atttl", "trttl", "dcttl").map(n => (n, tmp(s"$n-src"), tmp(s"$n-ck")))
+    val dirs = Seq("fnttl", "atttl", "trttl", "dcttl").map(n => (n, tempDir(s"$n-src"), tempDir(s"$n-ck")))
     val Seq((_, fnSrc, fnCk), (_, atSrc, atCk), (_, trSrc, trCk), (_, dcSrc, dcCk)) = dirs
     def stream(src: java.nio.file.Path) =
       spark.readStream.schema(twinSchema).json(src.toString)
@@ -515,7 +494,7 @@ class StreamingOpsSpec extends SparkSpec
     // the same per-key state must SURVIVE a micro-batch boundary (file a
     // then file b via maxFilesPerTrigger=1) and produce exactly the rows
     // the no-ttl twins (proven batch-equivalent above) would
-    val dirs = Seq("fnh", "ath", "trh", "dch").map(n => (n, tmp(s"$n-src"), tmp(s"$n-ck")))
+    val dirs = Seq("fnh", "ath", "trh", "dch").map(n => (n, tempDir(s"$n-src"), tempDir(s"$n-ck")))
     val Seq((_, fnSrc, fnCk), (_, atSrc, atCk), (_, trSrc, trCk), (_, dcSrc, dcCk)) = dirs
     Seq(fnSrc, atSrc, trSrc, dcSrc).foreach { src =>
       Files.write(src.resolve("a.json"), Seq(

@@ -13,21 +13,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 class SupervisorSpec extends SparkSpec {
 
-  private def tmpDir(prefix: String) = {
-    val p = Files.createTempDirectory(prefix)
-    p.toFile.deleteOnExit()
-    p
-  }
-
   /** A query that fails its first micro-batch. */
   private def failingQuery(): StreamingQuery = {
-    val dir = tmpDir("sup-src")
+    val dir = tempDir("sup-src")
     Files.write(dir.resolve("one.json"), """{"x": 1}""".getBytes)
     spark.readStream
       .schema("x LONG")
       .json(dir.toString)
       .writeStream
-      .option("checkpointLocation", tmpDir("sup-ck").toString)
+      .option("checkpointLocation", tempDir("sup-ck").toString)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (_: DataFrame, _: Long) =>
         throw new RuntimeException("induced failure")
@@ -37,14 +31,14 @@ class SupervisorSpec extends SparkSpec {
 
   /** A query that drains cleanly. */
   private def cleanQuery(): StreamingQuery = {
-    val dir = tmpDir("sup-src")
+    val dir = tempDir("sup-src")
     Files.write(dir.resolve("one.json"), """{"x": 1}""".getBytes)
     spark.readStream
       .schema("x LONG")
       .json(dir.toString)
       .writeStream
       .format("noop")
-      .option("checkpointLocation", tmpDir("sup-ck").toString)
+      .option("checkpointLocation", tempDir("sup-ck").toString)
       .trigger(Trigger.AvailableNow())
       .start()
   }

@@ -15,12 +15,6 @@ import org.apache.spark.sql.types._
   */
 class SyncSpec extends SparkSpec {
 
-  private def tmp(prefix: String): Path = {
-    val p = Files.createTempDirectory(prefix)
-    p.toFile.deleteOnExit()
-    p
-  }
-
   private val config = TableConfig(
     name = "Doc",
     columns = Seq(
@@ -53,7 +47,7 @@ class SyncSpec extends SparkSpec {
       .select("K", "V").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
 
   test("currentTick reads the WAL cursor from chunk names (0 when empty)") {
-    val walDir = tmp("wal")
+    val walDir = tempDir("wal")
     assert(Sync.currentTick(spark, walDir.toString) === 0L)
     assert(Sync.currentTick(spark, walDir.resolve("missing").toString) === 0L)
     Files.write(walDir.resolve("wal-11-20.json"), "".getBytes)
@@ -64,7 +58,7 @@ class SyncSpec extends SparkSpec {
 
   test("resync: snapshot + overlapping CDC replay converge; old ticks dropped") {
     import spark.implicits._
-    val walDir = tmp("wal"); val tableDir = tmp("tbl"); val ckpt = tmp("ck")
+    val walDir = tempDir("wal"); val tableDir = tempDir("tbl"); val ckpt = tempDir("ck")
 
     // WAL history up to tick 20. Ticks 11/15 predate the snapshot state
     // (already folded into the collection); tick 20's upsert of k=4 is the
@@ -111,7 +105,7 @@ class SyncSpec extends SparkSpec {
 
   test("resync over the CollectionSource seam (transport-agnostic form)") {
     import spark.implicits._
-    val walDir = tmp("wal"); val tableDir = tmp("tbl"); val colDir = tmp("col")
+    val walDir = tempDir("wal"); val tableDir = tempDir("tbl"); val colDir = tempDir("col")
     Files.write(walDir.resolve("wal-11-20.json"), java.util.Arrays.asList(
       walLine(20, 20, 2300, """{"k": 4, "v": "4.0"}""")))
     Seq((1L, "1.5"), (4L, "4.0")).toDF("k", "v")
@@ -119,7 +113,7 @@ class SyncSpec extends SparkSpec {
 
     val source = graft.sources.FileCollectionSource(colDir.toString, walDir.toString)
     val r = Sync.resync(spark, source, config, payloadSchema,
-      tableDir.toString, tmp("ck").toString, Seq("c1"), clock,
+      tableDir.toString, tempDir("ck").toString, Seq("c1"), clock,
       org.apache.spark.sql.streaming.Trigger.AvailableNow(), None)
     r.query.awaitTermination()
 
@@ -129,7 +123,9 @@ class SyncSpec extends SparkSpec {
 
   test("snapshot rejects go to the dead-letter table") {
     import spark.implicits._
-    val tableDir = tmp("tbl")
+    // the dead-letter table is a sibling of the table dir: keep both
+    // inside one temp dir
+    val tableDir = tempDir("tbl").resolve("t")
     val collection = Seq((Some(1L), "1.0"), (None, "no key")).toDF("k", "v")
     val (rows, rejects) = Sync.snapshot(spark, collection, config, tableDir.toString)
     assert(rows === 1L && rejects === 1L)
@@ -139,26 +135,37 @@ class SyncSpec extends SparkSpec {
 
   test("a clean re-run snapshot clears the previous run's rejects") {
     import spark.implicits._
-    val tableDir = tmp("tbl-rerun")
+    val tableDir = tempDir("tbl-rerun").resolve("t")
+    // the jobs one snapshot runs: both counts ride the valid write, so
+    // only the reject write adds a job
+    def snapshotJobs(collection: DataFrame): ((Long, Long), Int) = {
+      val group = s"snapshot-${System.nanoTime}"
+      spark.sparkContext.setJobGroup(group, "Sync.snapshot")
+      val (counts, jobs) =
+        try jobsDuring(Sync.snapshot(spark, collection, config, tableDir.toString))
+        finally spark.sparkContext.clearJobGroup()
+      (counts, jobs.count(_._1 == group))
+    }
     val bad = Seq((Some(1L), "1.0"), (None, "no key")).toDF("k", "v")
-    Sync.snapshot(spark, bad, config, tableDir.toString)
+    assert(snapshotJobs(bad) === ((1L, 1L), 2))
     assert(spark.read.parquet(tableDir.toString + ".deadletter").count() === 1)
     // source fixed upstream; the re-run has zero rejects and must not
     // leave the stale batch_id=-1 partition reporting phantom rejects
     val clean = Seq((Some(1L), "1.0"), (Some(2L), "2.0")).toDF("k", "v")
-    val (rows, rejects) = Sync.snapshot(spark, clean, config, tableDir.toString)
+    val ((rows, rejects), cleanJobs) = snapshotJobs(clean)
     assert(rows === 2L && rejects === 0L)
+    assert(cleanJobs === 1)
     assert(!new java.io.File(tableDir.toString + ".deadletter/batch_id=-1").exists,
       "stale snapshot rejects survived a clean re-run")
   }
 
   test("resync refuses an active writer BEFORE swapping the table") {
     import spark.implicits._
-    val walDir = tmp("wal"); val tableDir = tmp("tbl-guard")
+    val walDir = tempDir("wal"); val tableDir = tempDir("tbl-guard")
     Files.write(walDir.resolve("wal-1-10.json"), java.util.Arrays.asList(
       walLine(10, 10, 2300, """{"k": 1, "v": "1.0"}""")))
     val r1 = Sync.resync(spark, memorySource(Seq((1L, "1.0")).toDF("k", "v"), walDir),
-      config, payloadSchema, tableDir.toString, tmp("ck1").toString,
+      config, payloadSchema, tableDir.toString, tempDir("ck1").toString,
       Seq("c1"), clock,
       org.apache.spark.sql.streaming.Trigger.AvailableNow(), None)
     r1.query.awaitTermination()
@@ -167,13 +174,13 @@ class SyncSpec extends SparkSpec {
     // a LIVE writer on the same dir (ProcessingTime keeps it active)
     val live = CdcStream.startReplication(
       wal(walDir), config, payloadSchema,
-      tableDir.toString, tmp("ck2").toString, Seq("c1"), clock = clock,
+      tableDir.toString, tempDir("ck2").toString, Seq("c1"), clock = clock,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("10 seconds"),
       queryName = Some("live_writer_guard"))
     try {
       val e = intercept[IllegalArgumentException] {
         Sync.resync(spark, memorySource(Seq((9L, "9.0")).toDF("k", "v"), walDir),
-          config, payloadSchema, tableDir.toString, tmp("ck3").toString,
+          config, payloadSchema, tableDir.toString, tempDir("ck3").toString,
           Seq("c1"), clock,
           org.apache.spark.sql.streaming.Trigger.AvailableNow(), None)
       }
@@ -188,26 +195,26 @@ class SyncSpec extends SparkSpec {
 
   test("the CollectionSource resync overload refuses an active writer before the swap too") {
     import spark.implicits._
-    val walDir = tmp("wal"); val tableDir = tmp("tbl-guard2"); val colDir = tmp("col")
+    val walDir = tempDir("wal"); val tableDir = tempDir("tbl-guard2"); val colDir = tempDir("col")
     Files.write(walDir.resolve("wal-1-10.json"), java.util.Arrays.asList(
       walLine(10, 10, 2300, """{"k": 1, "v": "1.0"}""")))
     Seq((1L, "1.0")).toDF("k", "v").write.parquet(colDir.resolve("c").toString)
     val source = graft.sources.FileCollectionSource(
       colDir.resolve("c").toString, walDir.toString)
     val r1 = Sync.resync(spark, source, config, payloadSchema,
-      tableDir.toString, tmp("ck1").toString, Seq("c1"), clock,
+      tableDir.toString, tempDir("ck1").toString, Seq("c1"), clock,
       org.apache.spark.sql.streaming.Trigger.AvailableNow(), None)
     r1.query.awaitTermination()
     val before = current(tableDir)
     val live = CdcStream.startReplication(
       wal(walDir), config, payloadSchema,
-      tableDir.toString, tmp("ck2").toString, Seq("c1"), clock = clock,
+      tableDir.toString, tempDir("ck2").toString, Seq("c1"), clock = clock,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("10 seconds"),
       queryName = Some("live_writer_guard2"))
     try {
       val e = intercept[IllegalArgumentException] {
         Sync.resync(spark, source, config, payloadSchema,
-          tableDir.toString, tmp("ck3").toString, Seq("c1"), clock,
+          tableDir.toString, tempDir("ck3").toString, Seq("c1"), clock,
           org.apache.spark.sql.streaming.Trigger.AvailableNow(), None)
       }
       assert(e.getMessage.contains("already appending"))

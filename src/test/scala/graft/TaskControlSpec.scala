@@ -11,7 +11,7 @@ class TaskControlSpec extends SparkSpec {
 
   private def harness() = {
     val replies = scala.collection.mutable.ListBuffer.empty[(String, String)]
-    val ckptRoot = java.nio.file.Files.createTempDirectory("tc")
+    val ckptRoot = tempDir("tc")
     var n = 0
     val starter = () => {
       n += 1
@@ -55,7 +55,7 @@ class TaskControlSpec extends SparkSpec {
   }
 
   test("an acknowledged final status outranks a stale failure") {
-    val ckpt = java.nio.file.Files.createTempDirectory("tcfail")
+    val ckpt = tempDir("tcfail")
     val starter = () =>
       spark.readStream.format("rate").option("rowsPerSecond", "100").load()
         .writeStream
@@ -96,7 +96,7 @@ class TaskControlSpec extends SparkSpec {
     // not both observe "not active" and invoke the starter twice — the
     // loser's query would run unreferenced and double-process forever
     val started = new java.util.concurrent.atomic.AtomicInteger(0)
-    val ckptRoot = java.nio.file.Files.createTempDirectory("tc_race")
+    val ckptRoot = tempDir("tc_race")
     val gate = new java.util.concurrent.CountDownLatch(1)
     val starter = () => {
       started.incrementAndGet()

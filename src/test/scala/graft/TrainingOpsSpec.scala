@@ -17,7 +17,7 @@ class TrainingOpsSpec extends SparkSpec {
   /** Write an inline documents corpus to a temp fixture dir. */
   private def corpusDir(texts: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("docs_fixture").toString
+    val dir = tempDir("docs_fixture").toString
     texts.toDF("doc_id", "text")
       .withColumn("lang", lit("en"))
       .withColumn("source", lit("test"))
@@ -2031,7 +2031,7 @@ class TrainingOpsSpec extends SparkSpec {
     // three fat sources + one tiny one: the tiny source must be taken
     // whole, the fat ones pinned at a common waterline
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("wf_fixture").toString
+    val dir = tempDir("wf_fixture").toString
     val texts = Seq(
       (1L, filler("a", 400), "big_a"), (2L, filler("b", 400), "big_b"),
       (3L, filler("c", 400), "big_c"), (4L, filler("d", 20), "tiny"))

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 class WalSourceSpec extends SparkSpec {
 
   private def writeChunks(): java.nio.file.Path = {
-    val dir = Files.createTempDirectory("walsrc")
+    val dir = tempDir("walsrc")
     Files.write(dir.resolve("wal-100-199.json"), java.util.Arrays.asList(
       """{"tick":"100","type":2300,"db":"d","cuid":"c1","tid":"t","data":"{\"k\":1}","offset":100}""",
       """{"tick":"150","type":2302,"db":"d","cuid":"c1","tid":"t","data":"{\"k\":2}","offset":150}"""))
@@ -33,6 +33,20 @@ class WalSourceSpec extends SparkSpec {
       (150L, 2302, "c1", """{"k":2}"""),
       (250L, 2300, "c2", """{"k":3}"""),
       (350L, 2300, "c1", null)))
+  }
+
+  test("the reader factory carries the Hadoop conf as a broadcast handle") {
+    val df = spark.read.format("graft.sources.WalSource").load(writeChunks().toString)
+    val scan = df.queryExecution.executedPlan.collectFirst {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.getOrElse(fail(s"no batch scan in:\n${df.queryExecution.executedPlan}"))
+    // the factory is serialized into every task: an inline Hadoop conf
+    // (~1,000 keys) made it ~100 KB
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.io.ObjectOutputStream(bytes)
+    try out.writeObject(scan.batch.createReaderFactory()) finally out.close()
+    assert(bytes.size < 4096, s"reader factory serializes to ${bytes.size} bytes")
+    assert(df.count() === 4)
   }
 
   test("tick cursor prunes whole chunks before reading") {
@@ -67,8 +81,8 @@ class WalSourceSpec extends SparkSpec {
 
   test("micro-batch stream: chunk-granular offsets, checkpoint resume") {
     val dir = writeChunks()
-    val ckpt = Files.createTempDirectory("walck")
-    val out = Files.createTempDirectory("walout").resolve("t").toString
+    val ckpt = tempDir("walck")
+    val out = tempDir("walout").resolve("t").toString
 
     def drain(): Long = {
       // parquet sink: memory sink does not support checkpoint recovery
@@ -95,7 +109,7 @@ class WalSourceSpec extends SparkSpec {
 
   test("maxChunksPerTrigger bounds each micro-batch; AvailableNow still drains all") {
     val dir = writeChunks()
-    val ckpt = Files.createTempDirectory("walck2")
+    val ckpt = tempDir("walck2")
     var batches = 0
     val q = spark.readStream.format("graft.sources.WalSource")
       .option("maxChunksPerTrigger", "1")
@@ -131,7 +145,7 @@ class WalSourceSpec extends SparkSpec {
   test("malformed JSON and invalid UTF-8 lines are skipped, not fatal") {
     // invalid UTF-8 must reach the per-line skip: failing the task
     // instead would fail every retry on the same bytes
-    val dir = Files.createTempDirectory("walbad")
+    val dir = tempDir("walbad")
     val utf8 = java.nio.charset.StandardCharsets.UTF_8
     val out = new java.io.ByteArrayOutputStream()
     out.write(("""{"tick":"100","type":2300,"db":"d","cuid":"c1","tid":"t","data":"{\"k\":1}","offset":100}""" +
