@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The driver mains' canonical local session — ONE definition so Verify
-  * validates exactly the configuration Bench measures. The bucketing
+/** The canonical local session of the driver mains, the specs and the
+  * test-scope `Probe` — ONE definition so Verify validates exactly the
+  * configuration Bench measures. The bucketing
   * confs are load-bearing for the persisted-index plan shape (see
   * BlockedSelfJoin.pairsPersisted): a conf added to one main but not
   * the other would verify one engine and benchmark another, silently.

@@ -36,7 +36,7 @@ object Tables {
   /** Inferred file schemas per path, memoized for the JVM lifetime
     * (r15): `spark.read.parquet(path)` with NO schema runs a 1-task
     * footer-inference JOB on every call, and the catalog constructs
-    * thousands of loads per Verify/Bench sweep — JobProfile showed the
+    * thousands of loads per Verify/Bench sweep — `Probe profile` showed the
     * verbatim-SQL queries spending ~0.7 s per construction on ten such
     * jobs inside registerAll alone. With the memoized schema passed
     * explicitly, the reader plans with zero jobs. Staleness contract is

@@ -285,17 +285,11 @@ object ConnectedComponents {
     * as the difference between ~7 and ~4 AQE stage jobs per round, and
     * at scale two fewer full exchanges of the edge set per round
     * (committed plan pair: 7 exchanges before, 3 after —
-    * plans/r15/cc_star_round_{before,after}.txt).
+    * plans/r15/cc_star_round_{before,after}.txt; ConnectedComponentsSpec
+    * pins the 3).
     */
-  private def starRound(e: DataFrame): DataFrame =
+  private[graft] def starRound(e: DataFrame): DataFrame =
     smallStar(largeStarMulti(e))
-
-  /** [[starRound]] exposed for the committed plan-evidence dump only
-    * (CcRoundPlanDump, test scope) — the fixpoint's per-round plan is
-    * otherwise invisible to the catalog plan dumps (rounds execute at
-    * construction time). */
-  private[graft] def starRoundForPlanDump(e: DataFrame): DataFrame =
-    starRound(e)
 
   /** @param nodes one column `id` (numeric); @param edges columns
     * `src`/`dst` in either orientation, duplicates and self-loops allowed.

@@ -24,7 +24,6 @@ object Envelope {
   /** ArangoDB WAL op codes (reference: replication/producer/reader.py:9-14). */
   val OpUpsert = 2300
   val OpRemove = 2302
-  val TxnMarkers: Seq[Int] = Seq(2200, 2201, 2202)
 
   /** F1: keep only upsert/remove ops on the synced collections; txn markers
     * and foreign collections drop out. Runs source-side (pre-shuffle), the

@@ -13,7 +13,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *     makes. The bench fixtures are exactly that shape (one writer, one
   *     row group per table), so every scan-side expression of a fact
   *     table ran serially: q1's decimal partial aggregation was 1.25 s of
-  *     CPU on one core with 31 idle (JobProfile, stage run≈cpu≈wall).
+  *     CPU on one core with 31 idle (`Probe profile`, stage run≈cpu≈wall).
   *     [[scanSpread]] repartitions the scan by a caller-chosen
   *     high-cardinality key — but ONLY when the source is provably small
   *     (see threshold below), so at production scale it is a no-op and
@@ -26,7 +26,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *     and the sort is computed TWICE (once to sample, once to shuffle).
   *     For map-heavy text pipelines the doubled region is the expensive
   *     part: d11's winnowing burned ~15 CPU-seconds in the sample pass
-  *     and ~15 again in the sort pass (JobProfile). [[materialize]]
+  *     and ~15 again in the sort pass (`Probe profile`). [[materialize]]
   *     inserts a round-robin exchange directly below the sort, making
   *     the doubled region a cheap shuffle re-read. Round-robin, not
   *     hash-by-sort-key: an exchange that re-uses the upstream

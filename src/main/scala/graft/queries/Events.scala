@@ -304,8 +304,8 @@ object Events {
     * generation, so an in-JVM fixture-regeneration loop accumulated an
     * unbounded number of hook threads, each pinning its tmp path, and
     * superseded generations' hooks were never removed (ADVICE r12).
-    * Registration stays lazy (first generation installs the hook) so
-    * JVMs that never run w9 never pay it. */
+    * Registration stays lazy (the first root installs the hook) so
+    * JVMs that never run w9 or r6 never pay it. */
   private val exitCleanupRoots =
     new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
 
@@ -313,7 +313,9 @@ object Events {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       exitCleanupRoots.forEach(deleteTree(_))))
 
-  private def deleteOnExit(root: java.nio.file.Path): Unit = {
+  /** Delete the tree at `root` at JVM exit: for temp trees that a
+    * returned, lazily read frame still needs (w9's copies, r6's replica). */
+  private[queries] def deleteOnExit(root: java.nio.file.Path): Unit = {
     exitCleanupHook
     exitCleanupRoots.add(root)
   }
@@ -459,8 +461,6 @@ object Events {
   /** All [[CmDepth]] (lane, bucket) pairs of `user_id` as a posexplode. */
   private def cmLanes(saltPrefix: String): org.apache.spark.sql.Column =
     posexplode(array((0 until CmDepth).map(cmBucket(saltPrefix, _)): _*))
-
-  private def cmHash(j: Int): org.apache.spark.sql.Column = cmBucket("cm", j)
 
   /** w11: heavy hitters via a count-min sketch — the frequency twin of
     * w7's distinct sketch. The sketch is depth x width = 1024 counters:

@@ -340,6 +340,8 @@ object Replication {
     val cutA = n * 9 / 10
     val cutB = n * 19 / 20
     val base = Files.createTempDirectory("r6_resync")
+    // the returned view reads tableDir lazily: the tree can only go at exit
+    Events.deleteOnExit(base)
     val walDir = Files.createDirectories(base.resolve("wal"))
     val tableDir = base.resolve("table").toString
     val ckpt = base.resolve("ck").toString

@@ -58,14 +58,8 @@ class ChaosSpec extends AnyFunSuite with TempDirs {
     SparkSession.getDefaultSession.foreach(_.stop())
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    SparkSession.builder()
+    GraftSession.builder("4")
       .master("local[4, 2]") // 2 = maxTaskFailures: first failure retries
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
   }
 

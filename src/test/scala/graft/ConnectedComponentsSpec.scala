@@ -119,6 +119,14 @@ class ConnectedComponentsSpec extends SparkSpec {
     }
   }
 
+  test("a fused star round plans exactly three exchanges") {
+    val e = (1L until 500L).map(i => (i, i / 3)).toDF("src", "dst")
+      .where(col("src") =!= col("dst"))
+    val round = ConnectedComponents.starRound(e)
+    assert(ShuffleGolden.count(round.queryExecution.executedPlan) === 3,
+      round.queryExecution.executedPlan.toString)
+  }
+
   test("putCounted folds the round stats into the durable write") {
     val store = TableRounds(spark, "cc_obs")
     // jobs started by `f`, counted by a listener drained after it returns

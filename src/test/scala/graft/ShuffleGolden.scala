@@ -26,16 +26,8 @@ object ShuffleGolden {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      // match SparkSpec/Bench/Verify: persisted-index re-reads ride the
-      // bucket layout, so goldens must be generated under the same confs
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // SparkSpec's session: the goldens are the counts PlanAuditSpec sees
+    val spark = GraftSession.builder("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

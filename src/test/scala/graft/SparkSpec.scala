@@ -37,18 +37,10 @@ trait TempDirs extends BeforeAndAfterAll { this: Suite =>
   }
 }
 
-/** Shared local session for specs (one per suite, lazy). */
+/** Shared local session for specs (one per suite, lazy): Bench's and
+  * Verify's session at 4 cores, so specs test the engine they run. */
 trait SparkSpec extends AnyFunSuite with TempDirs {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // match Bench/Verify: persisted-index re-reads ride the bucket layout
-    .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder("4").getOrCreate()
 
   /** Run `f` and return, with its result, one entry per Spark job started
     * meanwhile: the job's (`spark.jobGroup.id`, `streaming.sql.batchId`)
